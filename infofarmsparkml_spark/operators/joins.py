@@ -67,8 +67,8 @@ def join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     each fact row paid a single hash probe, kept on at-scale
     arithmetic despite a neutral-to-negative local reading. The
     clean interleaved A/B this round (9 rounds, idle host, results
-    identical per arm, scripts/ab_join_broadcast.py,
-    plans/r17/AB_join_broadcast.json) measured the CHAINED form
+    identical per arm; plans/r17/AB_join_broadcast.json,
+    OPTIMIZATION_r17.md) measured the CHAINED form
     faster at BOTH sf0.1 (min 0.92 vs 1.05 s) and the 10× sf1
     fixture (min 0.87 vs 0.93 s, median 0.99 vs 1.07 s): this query
     is fixed-overhead-dominated even at 6M fact rows, and the dim

@@ -64,16 +64,14 @@ def _minhash_sig_long(tok_sets: DataFrame) -> DataFrame:
     candidate volume with the operator's OWN construction instead
     of a drift-prone copy (scripts/pair_mass_diag.py).
 
-    Unpivots the band keys to long form and lets callers self-join
-    ONCE on (band, bk) instead of one self-join per band over the
-    wide frame. The per-band branch form let Catalyst column-prune
-    the signature aggregate into b separate 8-min aggregates — 2b
-    full explode+shuffle passes over the token stream (observed in
-    the executedPlan, r4). The explode below consumes every band
-    key, so all b×r mins materialize in ONE aggregate, and two join
-    sides built from this frame canonicalize to the same subplan
-    (exchange reuse). Candidates still arise inside buckets only; a
-    pair matching in several bands dedupes in the caller's distinct."""
+    Unpivots the band keys to long form so candidates come from ONE
+    pairing over (band, bk) (`_bucket_pairs`) instead of one
+    self-join per band over the wide frame. The per-band branch
+    form let Catalyst column-prune the signature aggregate into b
+    separate 8-min aggregates — 2b full explode+shuffle passes over
+    the token stream (observed in the executedPlan, r4). The explode below consumes every band
+    key, so all b×r mins materialize in ONE aggregate. A pair
+    matching in several bands dedupes in the caller's distinct."""
     k = _MINHASH_BANDS * _MINHASH_ROWS
     sig = (
         tok_sets.select("doc_id", F.explode("toks").alias("token"))
@@ -117,6 +115,54 @@ def _minhash_sig_long(tok_sets: DataFrame) -> DataFrame:
             )
         ).alias("e"),
     ).select("doc_id", F.col("e.band").alias("band"), F.col("e.bk").alias("bk"))
+
+
+def _bucket_pairs(
+    keyed: DataFrame, id_col: str, key_cols: list[str], a: str, b: str
+) -> DataFrame:
+    """Candidate pairs (a, b) with a < b for every two rows of
+    ``keyed`` that share a bucket ``key_cols`` — the one LSH pairing
+    primitive of the banded near-dup detectors (MinHash and SRP).
+
+    Groups the rows by bucket, sorts each bucket's ids and emits the
+    i<j pairs with two streaming Generates (posexplode + slice): no
+    self-join, so the keyed frame (the signature pass — the dominant
+    compute) is planned ONCE, and candidates never leave their
+    bucket. Assumes each id sits at most once per bucket (one key
+    per band). A pair that shares several bands is emitted once per
+    shared band: callers run their own ``distinct``, after any
+    per-pair prune that is cheaper than the dedup exchange.
+
+    Bucket bound, measured (buckets = distinct keys; pairs = the
+    sum of m(m-1)/2 this emits before the caller's distinct):
+
+    ==========  =====  =======  ===========  =========
+    detector    SF     buckets  max docs/bk  pairs
+    ==========  =====  =======  ===========  =========
+    MinHash     0.01       609          152     32,451
+    MinHash     0.1      3,900        1,420  3,155,073
+    SRP         0.01       820           11      2,966
+    SRP         0.1      1,022           33     44,642
+    ==========  =====  =======  ===========  =========
+
+    A bucket costs one sorted m-long id array and one task emitting
+    its m(m-1)/2 pairs. The 1,420-doc MinHash bucket is not a
+    banding failure: it is a duplicate class under the Jaccard
+    metric (649 distinct token sets among its 1,420 docs — the
+    fixture vocabulary is small, so long documents cover nearly all
+    of it), and any banding must put such a class in one bucket.
+    The class fills one bucket in each of the 3 bands (1,420 /
+    1,408 / 1,352 docs): ~2.9M of the 3.16M pairs, each bucket's
+    share emitted by one task. A corpus whose largest duplicate
+    class is far bigger would need the class split across tasks."""
+    buckets = (
+        keyed.groupBy(*key_cols)
+        .agg(F.sort_array(F.collect_list(id_col)).alias("_ids"))
+        .filter(F.size("_ids") > 1)
+    )
+    return buckets.select("_ids", F.posexplode("_ids").alias("_i", a)).select(
+        a, F.explode(F.slice("_ids", F.col("_i") + 2, F.size("_ids"))).alias(b)
+    )
 
 
 @query(
@@ -163,12 +209,13 @@ def llm_minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
        hashes — JVM-side, no Python);
     2. band keys (md5 of each band's r signature rows joined in
        seed order) unpivot to long form (doc_id, band, bk) and
-       pairs are emitted per (band, bk) BUCKET (group → sorted id
-       array → streaming i<j pair explode) — candidates are
-       generated inside buckets only, never all-pairs, and the
-       single consumer keeps the signature aggregate to ONE pass
-       (plan-pinned in tests/test_plans.py; the former self-join
-       planned the aggregate twice, once per side);
+       pairs are emitted per (band, bk) BUCKET (`_bucket_pairs`:
+       group → sorted id array → streaming i<j pair explode) —
+       candidates are generated inside buckets only, never
+       all-pairs, and the single consumer keeps the signature
+       aggregate to ONE pass (plan-pinned in tests/test_plans.py;
+       the former self-join planned the aggregate twice, once per
+       side);
     3. the banded union is deduped and every candidate is verified
        with EXACT Jaccard over token sets (array_intersect /
        array_union, whole-stage codegen), so emitted distances are
@@ -203,33 +250,7 @@ def llm_minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.array_distinct(F.split("text", " ")).alias("toks")
     ).localCheckpoint()
     sig_long = _minhash_sig_long(tok_sets)
-    # r17 (guide §2.4): candidates were a self-join of sig_long on
-    # (band, bk) — and because the small side sat under a
-    # BroadcastExchange, exchange reuse could not fire, so the
-    # signature aggregate (explode every corpus token, 24 md5+min
-    # aggregations per token — the dominant compute) ran TWICE.
-    # Bucket-explode generates the identical pair set from ONE
-    # signature pass: group the 3·n_docs signature rows by bucket,
-    # sort each bucket's doc ids, and emit the i<j pairs with two
-    # streaming Generates (posexplode + slice) — no self-join, no
-    # second aggregate, and the per-bucket pair count m(m-1)/2 is
-    # exactly what the join's m² probe emitted after doc_a < doc_b.
-    # A hot bucket costs one O(m)-long array per row (LSH banding at
-    # r=8 keeps buckets small by design; a mega-bucket means banding
-    # has already failed), while the pair stream itself is pipelined.
-    buckets = (
-        sig_long.groupBy("band", "bk")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    pairs = buckets.select(
-        "ids", F.posexplode("ids").alias("i", "doc_a")
-    ).select(
-        "doc_a",
-        F.explode(
-            F.slice("ids", F.col("i") + F.lit(2), F.size("ids"))
-        ).alias("doc_b"),
-    )
+    pairs = _bucket_pairs(sig_long, "doc_id", ["band", "bk"], "doc_a", "doc_b")
     # Size-ratio prune BEFORE the token arrays join: J >= 0.9499
     # (the emit threshold incl. rounding slack) forces
     # min(|A|,|B|)/max(|A|,|B|) >= 0.9499, and sizes are two
@@ -1125,8 +1146,8 @@ def _srp_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared SRP-LSH near-dup pair machinery (`llm_embedding_neardup`
     detection, `llm_semantic_dedup` decision): plants the
     deterministic perturbed copies, computes 32 quantized sign bits,
-    bucket-joins on the 4 band keys, and verifies exact cosine
-    ≥ 0.95 on candidates only. Returns (vec_a, vec_b, cos) with
+    pairs bucket-mates of the 4 band keys (`_bucket_pairs`), and
+    verifies exact cosine ≥ 0.95 on candidates only. Returns (vec_a, vec_b, cos) with
     vec_a < vec_b and cos the un-rounded exact double."""
     emb = _double_vecs(spark, sf_dir, "vec_id", "e")
     vid = F.col("vec_id")
@@ -1150,20 +1171,9 @@ def _srp_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_bands=4,
         band_bits=8,
     )
-    a, b = keys.alias("a"), keys.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-        )
-        .distinct()
-    )
+    cand = _bucket_pairs(
+        keys, "vec_id", ["band", "bkey"], "vec_a", "vec_b"
+    ).distinct()
     va = aug.select(vid.alias("vec_a"), F.col("e").alias("ea"))
     vb = aug.select(vid.alias("vec_b"), F.col("e").alias("eb"))
     cos = _dot_fold(F.col("ea"), F.col("eb")) / (
@@ -1213,7 +1223,7 @@ def _srp_band_keys(
     overflow), so every committed oracle hash — including the r5
     near-dup records addressing the 32-plane prefix — is unchanged;
     only the physical plan gains an ArrowEvalPython node upstream of
-    the (band, bkey) bucket join the plan tests pin."""
+    the (band, bkey) bucket pairing the plan tests pin."""
     import numpy as _np
     from pyspark.sql.types import ArrayType, LongType
 

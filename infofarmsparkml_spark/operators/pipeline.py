@@ -160,70 +160,21 @@ def sort_range_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed total sort + global rank WITHOUT a global window.
 
     A bare `rank() OVER (ORDER BY ...)` collapses to one partition —
-    the single-reducer anti-pattern. Instead: (1) repartitionByRange
-    samples the key for balanced boundaries, (2) each partition
-    sorts locally and stamps monotonically_increasing_id — in sorted
-    order, consecutive within a partition — so the in-partition rank
-    is pure arithmetic, (3) tiny per-partition stats (count + min id)
-    cumsum into offsets that broadcast back. Result is the exact
-    global rank (the compound key is unique so rank == row_number).
-    The rank column makes global order checkable by the
-    order-insensitive hash.
+    the single-reducer anti-pattern. The rank comes from
+    `sorts.global_row_number` instead (range-partitioned sort,
+    monotonic-id in-partition ranks, broadcast per-partition
+    offsets; size-gated materialization — see its docstring): the
+    compound key is unique, so rank == row_number. The rank column
+    makes global order checkable by the order-insensitive hash."""
+    from infofarmsparkml_spark.operators.sorts import global_row_number
 
-    r16 (guide §2.4, same defect as global_row_number): the previous
-    per-partition rank WINDOW partitioned by spark_partition_id made
-    ENSURE_REQUIREMENTS insert a FULL-ROW hashpartitioning(pid)
-    exchange above the range exchange — the heavy data shuffled
-    twice on the rank path. The monotonic-id rank needs no window,
-    so the heavy data range-shuffles once. Results bit-identical.
-
-    r17: same size-gated materialization as global_row_number (see
-    sorts.py — above the conf'd byte threshold the stamped frame is
-    checkpointed so offsets and stream read ONE physical execution;
-    below it the lazy double-derivation is the measured-faster arm)."""
-    from infofarmsparkml_spark.operators.sorts import (
-        _estimated_bytes,
-        _materialize_threshold_bytes,
-    )
-
-    key = [F.col("o_totalprice").desc(), F.col("o_orderkey")]
     orders = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_totalprice") > 100000)
         .select("o_orderkey", "o_totalprice")
     )
-    local = (
-        orders.repartitionByRange(8, *key)
-        .sortWithinPartitions(*key)
-        .withColumn("pid", F.spark_partition_id())
-        .withColumn("mid", F.monotonically_increasing_id())
-    )
-    if _estimated_bytes(orders) > _materialize_threshold_bytes(orders):
-        local = local.localCheckpoint()
-    offsets = (
-        local.groupBy("pid")
-        .agg(F.count(F.lit(1)).alias("n"), F.min("mid").alias("mid0"))
-        .withColumn(
-            "offset",
-            F.coalesce(
-                F.sum("n").over(
-                    W.orderBy("pid").rowsBetween(W.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("pid", "mid0", "offset")
-    )
-    return (
-        local.join(F.broadcast(offsets), "pid")
-        .select(
-            "o_orderkey",
-            "o_totalprice",
-            (F.col("offset") + (F.col("mid") - F.col("mid0")) + 1).alias(
-                "price_rank"
-            ),
-        )
-    )
+    key = [F.col("o_totalprice").desc(), F.col("o_orderkey")]
+    return global_row_number(orders, key, "price_rank", n_parts=8)
 
 
 @query(

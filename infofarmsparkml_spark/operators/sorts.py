@@ -10,39 +10,21 @@ unpartitioned window.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from infofarmsparkml_spark.operators._util import load_table
 from infofarmsparkml_spark.registry import query
 
 
-def _estimated_bytes(df: DataFrame) -> int:
-    """Optimizer size estimate for ``df`` (bytes); 0 when
-    unavailable (e.g. Spark Connect exposes no _jdf) so the caller
-    defaults to the lazy branch — the measured-faster arm at the
-    scales this repo can actually run."""
+def _estimated_bytes(df: DataFrame) -> int | None:
+    """Optimizer size estimate for ``df`` (bytes), or None when the
+    plan exposes none (e.g. Spark Connect has no _jdf)."""
     try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return 0
-
-
-def _materialize_threshold_bytes(df: DataFrame) -> int:
-    """Size gate for global_row_number's checkpoint (see its
-    docstring). Conf-parameterised so a cluster deployment can
-    lower/raise it; the 1 GiB default keeps every shipped bench SF
-    (<=~20 MB input) on the lazy arm."""
-    try:
-        return int(
-            df.sparkSession.conf.get(
-                "spark.infofarmsparkml.rownum.materializeBytes",
-                str(1 << 30),
-            )
-        )
-    except Exception:
-        return 1 << 30
+        stats = df._jdf.queryExecution().optimizedPlan().stats()
+    except (AttributeError, Py4JError):
+        return None
+    return int(stats.sizeInBytes())
 
 
 def global_row_number(
@@ -61,7 +43,8 @@ def global_row_number(
     (3) ONE tiny per-partition aggregate (n_parts rows) yields both
     that min and the counts whose cumsum is the partition offset,
     broadcast-joined back. Equal to the global row_number as long
-    as ``order_cols`` is a total order (include a tiebreak key).
+    as ``order_cols`` is a total order (include a tiebreak key);
+    ``out_col`` is a long, so callers that publish an int cast it.
 
     r16 (guide §2.4): the previous shape ranked with a
     ``partitionBy(_pid)`` window, but Catalyst cannot know that
@@ -86,7 +69,8 @@ def global_row_number(
     and at 100 TB the re-derived branch is a second full pass over
     the table rather than a page-cache hit. The shape is therefore
     SIZE-GATED: above ``spark.infofarmsparkml.rownum.materializeBytes``
-    (default 1 GiB; estimate from the optimizer stats) the stamped
+    (default 1 GiB; estimate from the optimizer stats — when no
+    estimate is available the gate counts it as above) the stamped
     frame is localCheckpoint-ed — ONE physical execution feeds both
     branches, making boundary/id consistency structural instead of
     empirical. Below the gate the lazy double-derivation stands: it
@@ -107,7 +91,13 @@ def global_row_number(
         .withColumn("_pid", F.spark_partition_id())
         .withColumn("_mid", F.monotonically_increasing_id())
     )
-    if _estimated_bytes(df) > _materialize_threshold_bytes(df):
+    est = _estimated_bytes(df)
+    gate = int(
+        df.sparkSession.conf.get(
+            "spark.infofarmsparkml.rownum.materializeBytes", str(1 << 30)
+        )
+    )
+    if est is None or est > gate:
         local = local.localCheckpoint()
     offsets = (
         local.groupBy("_pid")
@@ -126,10 +116,7 @@ def global_row_number(
     return (
         local.join(F.broadcast(offsets), "_pid")
         .withColumn(
-            out_col,
-            (
-                F.col("_offset") + (F.col("_mid") - F.col("_mid0")) + 1
-            ).cast("int"),
+            out_col, F.col("_offset") + (F.col("_mid") - F.col("_mid0")) + 1
         )
         .drop("_pid", "_mid", "_mid0", "_offset")
     )
@@ -167,7 +154,10 @@ def sort_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey"),
     ]
     return global_row_number(t, key, "sort_pos").select(
-        "o_orderkey", "status_or_null", "o_totalprice", "sort_pos"
+        "o_orderkey",
+        "status_or_null",
+        "o_totalprice",
+        F.col("sort_pos").cast("int").alias("sort_pos"),
     )
 
 

@@ -690,28 +690,29 @@ def test_ngram_jaccard_is_rare_shingle_blocked(spark, sf_dir):
 
 def test_embedding_neardup_is_band_bucketed(spark, sf_dir):
     """r5 rewrite: llm_embedding_neardup dropped its vec_id<200
-    all-pairs bound for banded SRP-LSH. Candidate pairing must be an
-    equi-join on the (band, bkey) bucket key; the only permissible
-    nested-loop is the broadcast of the 1-row MAX(vec_id) offset."""
-    import re
-
+    all-pairs bound for banded SRP-LSH. Candidate pairs must be
+    formed inside (band, bkey) buckets (`_bucket_pairs`: one
+    collect_list aggregate keyed and shuffled on the bucket key),
+    and the signature pandas UDF must be planned for ONE side only —
+    a self-join on the bucket key plans it on both sides (4
+    ArrowEvalPython nodes instead of 2)."""
     plan = explain_str(q("llm_embedding_neardup")(spark, sf_dir), "simple")
     assert "CartesianProduct" not in plan, plan[:3000]
-    # the 1-row keymax crossJoin is a BroadcastNestedLoopJoin by
-    # construction; anything beyond that one is an all-pairs bug
+    # the 1-row keymax crossJoin may plan as a BroadcastNestedLoopJoin;
+    # anything beyond that one is an all-pairs bug
     assert plan.count("BroadcastNestedLoopJoin") <= 1, plan[:3000]
-    # the bucket pairing must be an EQUI join keyed on (band, bkey)
-    # — broadcast at test scale, shuffle-hash/SMJ at cluster scale;
-    # either way the join keys name the bucket, not the vector ids
-    join_keys = re.findall(
-        r"(?:BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin) "
-        r"\[([^\]]*)\], \[([^\]]*)\]",
+    bucket = r"band#\d+, bkey#\d+L?"
+    assert re.search(
+        rf"\w*Aggregate\(keys=\[{bucket}\], "
+        r"functions=\[collect_list\(vec_id",
         plan,
+    ), plan[:3000]
+    assert re.search(rf"Exchange hashpartitioning\({bucket}, \d+\)", plan), (
+        plan[:3000]
     )
-    bucket_joins = [
-        (l, r) for l, r in join_keys if "band" in l and "bkey" in l
-    ]
-    assert bucket_joins, join_keys or plan[:3000]
+    # the UDF appears twice for ONE signature pass: Catalyst copies it
+    # into the non-empty filter it infers under the band posexplode
+    assert plan.count("ArrowEvalPython") == 2, plan[:3000]
 
 
 def test_knn_join_is_band_bucketed(spark, sf_dir):

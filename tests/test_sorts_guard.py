@@ -102,3 +102,17 @@ def test_sort_range_partitioned_both_arms_match_truth(spark, sf_dir):
             spark.conf.unset(GATE)
         else:
             spark.conf.set(GATE, prev)
+
+
+def test_global_row_number_unknown_estimate_takes_checkpoint_arm(
+    spark, sf_dir, monkeypatch
+):
+    """An unavailable size estimate must select the checkpointed arm
+    (the one with the one-execution guarantee), never the lazy one."""
+    from infofarmsparkml_spark.operators import sorts
+
+    monkeypatch.setattr(sorts, "_estimated_bytes", lambda df: None)
+    df = q("sort_multi")(spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in plan, plan[:2000]
+    assert _rows(df) == _rows(_truth_sort_multi(spark, sf_dir))
