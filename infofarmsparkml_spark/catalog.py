@@ -24,11 +24,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at ANY scale factor
-# (region/nation are fixed-size; supplier grows but stays tiny
-# relative to the fact table in this schema).
-BROADCAST_DIMS = ("region", "nation", "supplier")
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
@@ -79,13 +74,3 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # timestamp_ntz / timestamp: the read already truncated to µs;
     # a plain cast aligns the type with the oracle's CAST.
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register each table as a temp view for the spark.sql twins."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -5,7 +5,8 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import Column, functions as F
+from py4j.protocol import Py4JError
+from pyspark.sql import Column, DataFrame, functions as F
 
 from infofarmsparkml_spark.catalog import load_table  # noqa: F401  (re-export)
 
@@ -60,6 +61,16 @@ def sum_money(expr: Column, alias: str) -> Column:
 def ts_lit(s: str) -> Column:
     """Timestamp literal; fixtures store dates as timestamps."""
     return F.lit(s).cast("timestamp")
+
+
+def _estimated_bytes(df: DataFrame) -> int | None:
+    """Optimizer size estimate for ``df`` (bytes), or None when the
+    plan exposes none (e.g. Spark Connect has no _jdf)."""
+    try:
+        stats = df._jdf.queryExecution().optimizedPlan().stats()
+    except (AttributeError, Py4JError):
+        return None
+    return int(stats.sizeInBytes())
 
 
 def scratch_dir(tag: str, sf_dir: str = "") -> str:

@@ -11,9 +11,10 @@ the growing lineage (SURVEY.md §7 hard parts).
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from infofarmsparkml_spark.operators._util import load_table
+from infofarmsparkml_spark.operators._util import _estimated_bytes, load_table
 from infofarmsparkml_spark.registry import query
 
 
@@ -63,21 +64,6 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def _parse_size_bytes(v: str) -> int:
-    """Parse a Spark byte-size conf value ('10485760b', '10MB',
-    '-1') to bytes; negative means auto-broadcast disabled."""
-    s = str(v).strip().lower()
-    mult = 1
-    for suf, m in (
-        ("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-        ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1),
-    ):
-        if s.endswith(suf):
-            s, mult = s[: -len(suf)], m
-            break
-    return int(s) * mult
-
-
 def _fact_in_broadcast_range(spark: SparkSession, df: DataFrame) -> bool:
     """True when the planner could statically pick ``df`` — a FACT
     table (e.g. the co-purchase edge list) — as a broadcast build
@@ -89,39 +75,24 @@ def _fact_in_broadcast_range(spark: SparkSession, df: DataFrame) -> bool:
     parallelism), and the wrong outcome deserializes millions of
     rows into a bounded driver. Consumers joining such a table in a
     loop must state the build side explicitly while this returns
-    True. Reads the session threshold so raised thresholds keep the
-    guard honest; threshold <= 0 disables auto-broadcast entirely
-    (guard moot); an unavailable estimate (Spark Connect exposes no
-    _jdf) returns True — the safe default is an explicit vertex-
-    side build."""
+    True. Reads the session's typed threshold (bytes, whatever form
+    the conf was set in) so raised thresholds keep the guard honest;
+    threshold <= 0 disables auto-broadcast entirely (guard moot); an
+    unavailable session or estimate (Spark Connect exposes neither
+    _jsparkSession nor _jdf) returns True — the safe default is an
+    explicit vertex-side build."""
     try:
-        thr = _parse_size_bytes(
-            spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        thr = (
+            spark._jsparkSession.sessionState()
+            .conf()
+            .autoBroadcastJoinThreshold()
         )
-    except Exception:
-        # Unreadable/unparseable threshold: guessing a default here
-        # would re-create the very coin-flip this guard exists to
-        # prevent (ADVICE r13) — the guess can disagree with the
-        # session's real threshold. Warn and return the same safe
-        # answer as the missing-estimate case below: pin the
-        # vertex-side build explicitly.
-        import warnings
-
-        warnings.warn(
-            "autoBroadcastJoinThreshold unreadable; pinning explicit "
-            "vertex-side build (safe default)",
-            stacklevel=2,
-        )
+    except (AttributeError, Py4JError):
         return True
     if thr <= 0:
         return False
-    try:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return True
-    return est < 3 * thr
+    est = _estimated_bytes(df)
+    return est is None or est < 3 * thr
 
 
 def _guarded_vertex_pick(spark: SparkSession, edges_raw: DataFrame):

@@ -14,13 +14,10 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from infofarmsparkml_spark.operators._util import (
     load_table,
-    money,
     net_cents,
-    net_price_exact,
     r,
     cents,
     sum_cents,
-    sum_money,
 )
 from infofarmsparkml_spark.registry import query
 

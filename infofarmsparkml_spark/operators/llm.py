@@ -59,10 +59,9 @@ _MINHASH_ROWS = 8
 
 def _minhash_sig_long(tok_sets: DataFrame) -> DataFrame:
     """(doc_id, band, bk) banded-MinHash bucket keys from token
-    sets — the signature half of `llm_minhash_lsh_dedup`, extracted
-    (r14, pure code motion) so diagnostics can count bucket/
-    candidate volume with the operator's OWN construction instead
-    of a drift-prone copy (scripts/pair_mass_diag.py).
+    sets — the signature half of `llm_minhash_lsh_dedup`. Bucket
+    and candidate volume measured with this construction at sf0.1
+    through sf100 are in PAIRMASS_r14.json / PAIRMASS_r15.json.
 
     Unpivots the band keys to long form so candidates come from ONE
     pairing over (band, bk) (`_bucket_pairs`) instead of one
@@ -1311,22 +1310,15 @@ FROM ranked WHERE rn <= 5
 def _knn_join_topk(
     quant: DataFrame,
     n: int,
-    query_pred: Column | None = None,
     materialize: bool = True,
 ) -> DataFrame:
-    """The kNN join's core, shared by the registered query and the
-    at-scale recall harness (scripts/knn_recall_at_scale.py): banded
-    SRP-LSH candidates -> exact quantized verify -> per-query top-5.
-
-    ``query_pred`` (a Column over vec_id) restricts the QUERY side:
-    a query's top-5 depends only on its own bucket-mates, which a
-    one-sided filter on the signature table preserves exactly, so
-    the restricted result equals the full self-join's rows for the
-    selected qids (pinned by test at sf0.1) at a fraction of the
-    verify cost — the honest way to witness recall on corpora where
-    the full N^2/buckets self-join is hours of compute. With no
-    predicate, the canonical-pairs + mirror form computes each
-    symmetric distance once (half the verify work).
+    """The kNN join's core: banded SRP-LSH candidates -> exact
+    quantized verify -> per-query top-5. The canonical-pairs +
+    mirror form computes each symmetric distance once (half the
+    verify work). Recall of this core against exact brute force is
+    recall@5 = 1.0 in the 17-bit (KNN_RECALL_r13.json) and 18-20-bit
+    (KNN_RECALL_r15.json) adaptive band regimes, on ~200 sampled
+    queries over clustered corpora of 4.5M-33.6M vectors.
 
     Verify shape (r14): the quantized vectors ride WITH their band
     keys (carry_qv) and the exact distance is evaluated INSIDE the
@@ -1359,65 +1351,54 @@ def _knn_join_topk(
         F.col("b.vec_id").alias("nid"),
         _qdist("a.qv", "b.qv").alias("qdist"),
     ]
-    if query_pred is None:
-        # canonical pairs only (qid < nid): the bucket relation is
-        # symmetric, so each distance is computed ONCE and mirrored
-        # before ranking — half the verify work in both engines
-        half = (
-            a.join(b, on_bucket & (F.col("a.vec_id") < F.col("b.vec_id")))
-            .select(*pair_cols)
-            .distinct()
-            # eager localCheckpoint: the mirror union references
-            # `half` twice, and exchange reuse does NOT fire across
-            # the two branches — the analyzer deduplicates the second
-            # subtree's exprIds through the SRP pandas UDF and the
-            # canonicalized exchanges stop matching, so without this
-            # the ENTIRE signature + bucket join + distance +
-            # distinct pipeline executes twice (observed in the r14
-            # sf10 plan: 8 ArrowEvalPython nodes, two identical
-            # un-reused BroadcastExchanges, a clean ~2x on the smoke
-            # leg). r15 swaps r14's `.persist()` for the checkpoint
-            # (VERDICT r14 #4/#7 + ADVICE): (a) lifecycle — a
-            # persisted plan stays registered in the CacheManager for
-            # the session's lifetime, while a localCheckpoint RDD is
-            # freed by the ContextCleaner once the DataFrame is
-            # unreferenced, so long-lived driver sessions don't
-            # accumulate pair sets; (b) the small-N constant — the
-            # cache-build path cost 4-10 s vs 2.4-2.9 s end-to-end
-            # for the checkpoint at sf0.01 (same-session A/B, r15;
-            # the cached plan also loses AQE on downstream reads).
-            # The checkpointed `half` is the verified-pair set —
-            # output-sized (24 B/row), the smallest thing in the
-            # operator (~2.7 GB at the 114M-pair sf10 smoke: fine
-            # for MEMORY_AND_DISK local storage).
-            # `materialize=False` skips the checkpoint so plan tests
-            # can pin the bucket-join shape that otherwise fires at
-            # construction time (the checkpointed final plan is just
-            # an ExistingRDD scan) — it trades the double execution
-            # back in, so only plan inspection should use it.
+    # canonical pairs only (qid < nid): the bucket relation is
+    # symmetric, so each distance is computed ONCE and mirrored
+    # before ranking — half the verify work in both engines
+    half = (
+        a.join(b, on_bucket & (F.col("a.vec_id") < F.col("b.vec_id")))
+        .select(*pair_cols)
+        .distinct()
+        # eager localCheckpoint: the mirror union references
+        # `half` twice, and exchange reuse does NOT fire across
+        # the two branches — the analyzer deduplicates the second
+        # subtree's exprIds through the SRP pandas UDF and the
+        # canonicalized exchanges stop matching, so without this
+        # the ENTIRE signature + bucket join + distance +
+        # distinct pipeline executes twice (observed in the r14
+        # sf10 plan: 8 ArrowEvalPython nodes, two identical
+        # un-reused BroadcastExchanges, a clean ~2x on the smoke
+        # leg). r15 swaps r14's `.persist()` for the checkpoint
+        # (VERDICT r14 #4/#7 + ADVICE): (a) lifecycle — a
+        # persisted plan stays registered in the CacheManager for
+        # the session's lifetime, while a localCheckpoint RDD is
+        # freed by the ContextCleaner once the DataFrame is
+        # unreferenced, so long-lived driver sessions don't
+        # accumulate pair sets; (b) the small-N constant — the
+        # cache-build path cost 4-10 s vs 2.4-2.9 s end-to-end
+        # for the checkpoint at sf0.01 (same-session A/B, r15;
+        # the cached plan also loses AQE on downstream reads).
+        # The checkpointed `half` is the verified-pair set —
+        # output-sized (24 B/row), the smallest thing in the
+        # operator (~2.7 GB at the 114M-pair sf10 smoke: fine
+        # for MEMORY_AND_DISK local storage).
+        # `materialize=False` skips the checkpoint so plan tests
+        # can pin the bucket-join shape that otherwise fires at
+        # construction time (the checkpointed final plan is just
+        # an ExistingRDD scan) — it trades the double execution
+        # back in, so only plan inspection should use it.
+    )
+    if materialize:
+        half = half.localCheckpoint(eager=True)
+    # mirror by union over the checkpointed pair set: each pair's
+    # distance is computed once and contributes to both
+    # endpoints' rankings
+    verified = half.unionByName(
+        half.select(
+            F.col("nid").alias("qid"),
+            F.col("qid").alias("nid"),
+            "qdist",
         )
-        if materialize:
-            half = half.localCheckpoint(eager=True)
-        # mirror by union over the checkpointed pair set: each pair's
-        # distance is computed once and contributes to both
-        # endpoints' rankings
-        verified = half.unionByName(
-            half.select(
-                F.col("nid").alias("qid"),
-                F.col("qid").alias("nid"),
-                "qdist",
-            )
-        )
-    else:
-        # the restricted query side is a few hundred key rows —
-        # broadcast it so the corpus-sized key table is probed
-        # map-side, never sorted
-        verified = (
-            F.broadcast(a.filter(query_pred))
-            .join(b, on_bucket & (F.col("a.vec_id") != F.col("b.vec_id")))
-            .select(*pair_cols)
-            .distinct()
-        )
+    )
     w = W.partitionBy("qid").orderBy("qdist", "nid")
     return (
         verified.withColumn("rank", F.row_number().over(w))

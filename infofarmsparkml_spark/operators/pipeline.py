@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from infofarmsparkml_spark.operators._util import load_table, r
+from infofarmsparkml_spark.operators._util import load_table
 from infofarmsparkml_spark.registry import query
 
 

@@ -10,21 +10,10 @@ unpartitioned window.
 
 from __future__ import annotations
 
-from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from infofarmsparkml_spark.operators._util import load_table
+from infofarmsparkml_spark.operators._util import _estimated_bytes, load_table
 from infofarmsparkml_spark.registry import query
-
-
-def _estimated_bytes(df: DataFrame) -> int | None:
-    """Optimizer size estimate for ``df`` (bytes), or None when the
-    plan exposes none (e.g. Spark Connect has no _jdf)."""
-    try:
-        stats = df._jdf.queryExecution().optimizedPlan().stats()
-    except (AttributeError, Py4JError):
-        return None
-    return int(stats.sizeInBytes())
 
 
 def global_row_number(

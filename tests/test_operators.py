@@ -1339,43 +1339,6 @@ def test_knn_join_recall_in_adaptive_band_regime(spark):
     assert len(aset & eset) / len(eset) >= 0.7
 
 
-def test_knn_restricted_query_side_equals_full(spark):
-    """`_knn_join_topk(query_pred=...)` is the recall harness's way
-    to witness the 17-bit band regime without paying the full
-    self-join (scripts/knn_recall_at_scale.py): a query's top-5
-    depends only on its own bucket-mates, so filtering the QUERY
-    side of the signature table must reproduce the full operator's
-    rows for the selected qids exactly — same neighbors, same
-    distances, same ranks. Pinned at sf0.1 (the adaptive 5-bit
-    regime, 2000 vectors)."""
-    from pyspark.sql import functions as F
-
-    from infofarmsparkml_spark.operators.llm import (
-        _double_vecs,
-        _knn_join_topk,
-        _quantize_vec,
-    )
-
-    sf01 = "/root/testdata/sf0.1"
-    n = spark.read.parquet(f"{sf01}/embeddings.parquet").count()
-    quant = (
-        _double_vecs(spark, sf01, "vec_id", "e")
-        .select("vec_id", _quantize_vec("e").alias("qv"))
-        .localCheckpoint()
-    )
-    pred = F.col("vec_id") % 100 == 0
-    restricted = {
-        (r.qid, r.nid, r.euclidean, r.rank)
-        for r in _knn_join_topk(quant, n, query_pred=pred).collect()
-    }
-    full = {
-        (r.qid, r.nid, r.euclidean, r.rank)
-        for r in _knn_join_topk(quant, n).collect()
-        if r.qid % 100 == 0
-    }
-    assert restricted == full and restricted
-
-
 def test_cc_star_equals_minlabel_twin(spark, sf_dir):
     """`graph_cc_star` and `llm_dedup_components` implement the same
     contract (components over the signature-edge graph, min-id

@@ -1125,12 +1125,10 @@ def test_dot_kernel_is_per_call_site(spark, sf_dir):
         assert "aggregate(zip_with" in plan, (op, plan[:2000])
         assert "[63]" not in plan, (op, "unrolled dot leaked back in")
 
-    # the kNN verify keeps the unroll: pin it on the lazy
-    # query-restricted path (the full-join path eagerly checkpoints
-    # the pair set, so its FINAL plan is just an ExistingRDD scan
-    # and the kernel fires at construction time)
-    import pyspark.sql.functions as F
-
+    # the kNN verify keeps the unroll: pin it on the lazy core
+    # (materialize=False; the registered op eagerly checkpoints the
+    # pair set, so its FINAL plan is just an ExistingRDD scan and
+    # the kernel fires at construction time)
     from infofarmsparkml_spark.operators.llm import (
         _double_vecs,
         _knn_join_topk,
@@ -1139,7 +1137,7 @@ def test_dot_kernel_is_per_call_site(spark, sf_dir):
 
     emb = _double_vecs(spark, sf_dir, "vec_id", "e")
     quant = emb.select("vec_id", _quantize_vec("e").alias("qv"))
-    lazy = _knn_join_topk(quant, 500, query_pred=F.col("vec_id") < 5)
+    lazy = _knn_join_topk(quant, 500, materialize=False)
     plan = explain_str(lazy)
     assert "[63]" in plan, plan[:2000]
     assert "aggregate(zip_with" not in plan

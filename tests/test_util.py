@@ -329,29 +329,16 @@ def test_rotate_slate_policy(tmp_path, monkeypatch):
     assert hist["d"] == (7, False)  # real error = fail
 
 
-def test_parse_size_bytes_spark_conf_forms():
-    """_parse_size_bytes must accept every form Spark hands back for
-    spark.sql.autoBroadcastJoinThreshold: raw-byte strings with the
-    trailing 'b' ('10485760b', the default's repr), unit suffixes a
-    user may set ('10MB', '100m', '1g'), and '-1' (auto-broadcast
-    disabled, negative passthrough)."""
-    from infofarmsparkml_spark.operators.graph import _parse_size_bytes
-
-    assert _parse_size_bytes("10485760b") == 10 * 1024 * 1024
-    assert _parse_size_bytes("10MB") == 10 * 1024 * 1024
-    assert _parse_size_bytes("100m") == 100 * 1024 * 1024
-    assert _parse_size_bytes("1g") == 1 << 30
-    assert _parse_size_bytes("512k") == 512 * 1024
-    assert _parse_size_bytes("-1") == -1
-    assert _parse_size_bytes("0") == 0
-
-
 def test_fact_in_broadcast_range_tracks_session_threshold(spark, sf_dir):
     """The build-side guard must read the SESSION threshold, not a
     hardcoded default (review r13): with auto-broadcast disabled
-    (-1) the coin-flip cannot exist and the guard must stand down;
-    with a threshold far above the fixture edge estimate it must
-    engage. Restores the conf afterwards."""
+    (-1 or 0) the coin-flip cannot exist and the guard must stand
+    down; with a threshold far above the fixture edge estimate it
+    must engage, in every byte form Spark accepts for the conf
+    (raw bytes with a trailing 'b', the default's repr, and unit
+    suffixes): each form must compare as its byte value against the
+    edge estimate. Restores the conf afterwards."""
+    from infofarmsparkml_spark.operators._util import _estimated_bytes
     from infofarmsparkml_spark.operators.graph import (
         _copurchase_edges,
         _fact_in_broadcast_range,
@@ -360,10 +347,83 @@ def test_fact_in_broadcast_range_tracks_session_threshold(spark, sf_dir):
     edges = _copurchase_edges(spark, sf_dir)
     key = "spark.sql.autoBroadcastJoinThreshold"
     orig = spark.conf.get(key)
+    est = _estimated_bytes(edges)
+    assert 3 <= est < 3 << 30, est  # "1b" and "1g" land on both sides
+    forms = {
+        "10485760b": 10 << 20,
+        "10MB": 10 << 20,
+        "100m": 100 << 20,
+        "1g": 1 << 30,
+        "512k": 512 << 10,
+        "1b": 1,
+    }
     try:
-        spark.conf.set(key, "-1")
-        assert _fact_in_broadcast_range(spark, edges) is False
-        spark.conf.set(key, "1g")
-        assert _fact_in_broadcast_range(spark, edges) is True
+        for off in ("-1", "0"):
+            spark.conf.set(key, off)
+            assert _fact_in_broadcast_range(spark, edges) is False, off
+        for form, nbytes in forms.items():
+            spark.conf.set(key, form)
+            assert _fact_in_broadcast_range(spark, edges) is (
+                est < 3 * nbytes
+            ), (form, est)
     finally:
         spark.conf.set(key, orig)
+
+
+def test_scripts_resolve_engine_names():
+    """Every engine name a kept script uses must still exist, so an
+    engine refactor that orphans a script fails here rather than the
+    next time someone runs it. No JVM: the scripts are AST-walked
+    (imports inside functions included), never run. Checks each
+    ``from infofarmsparkml_spark... import name`` and each
+    ``mod.attr`` on a name bound to an engine module."""
+    import ast
+    import glob
+    import importlib
+    import types
+
+    pkg = "infofarmsparkml_spark"
+    scripts = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scripts",
+    )
+    paths = sorted(glob.glob(os.path.join(scripts, "*.py")))
+    assert paths, scripts
+    missing = []
+    for path in paths:
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        engine_mods: dict[str, types.ModuleType] = {}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (
+                node.module or ""
+            ).split(".")[0] == pkg:
+                mod = importlib.import_module(node.module)
+                for alias in node.names:
+                    bound = alias.asname or alias.name
+                    try:
+                        obj = importlib.import_module(
+                            f"{node.module}.{alias.name}"
+                        )
+                    except ModuleNotFoundError:
+                        if not hasattr(mod, alias.name):
+                            missing.append(f"{path}: {node.module}.{alias.name}")
+                            continue
+                        obj = getattr(mod, alias.name)
+                    if isinstance(obj, types.ModuleType):
+                        engine_mods[bound] = obj
+            elif isinstance(node, ast.Import):
+                for alias in node.names:
+                    if alias.name.split(".")[0] == pkg and alias.asname:
+                        engine_mods[alias.asname] = importlib.import_module(
+                            alias.name
+                        )
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Name)
+                and node.value.id in engine_mods
+                and not hasattr(engine_mods[node.value.id], node.attr)
+            ):
+                missing.append(f"{path}: {node.value.id}.{node.attr}")
+    assert not missing, missing
