@@ -55,8 +55,11 @@ def fn_array(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_contains(toks, "join").alias("has_join"),
         F.concat_ws("|", F.array_sort(F.array_distinct(toks))).alias("vocab"),
         F.size(F.array_distinct(toks)).alias("vocab_size"),
-        F.concat_ws(
-            "|", F.filter(toks, lambda t: F.length(t) > 4)
+        # DuckDB's ARRAY_TO_STRING of an empty list is NULL, not ''.
+        # A non-empty list of >4-letter tokens never joins to ''.
+        F.nullif(
+            F.concat_ws("|", F.filter(toks, lambda t: F.length(t) > 4)),
+            F.lit(""),
         ).alias("long_tokens"),
         F.concat_ws(
             "|", F.array_sort(F.transform(toks, lambda t: F.upper(t)))

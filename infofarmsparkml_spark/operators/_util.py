@@ -24,40 +24,6 @@ def net_price() -> Column:
     return F.col("l_extendedprice") * (1 - F.col("l_discount"))
 
 
-def money(col: Column | str) -> Column:
-    """Exact DECIMAL(12,4) view of a money-like double column.
-
-    Money SUMS must be computed in decimal, not double: the fixture
-    values have ≤4 decimal digits, so group sums land EXACTLY on
-    .xx5 rounding boundaries, where Spark's and DuckDB's
-    independently-accumulated float errors round in opposite
-    directions (observed on tpch_q3/q10 per-order sums). Decimal
-    aggregation is exact and order-independent; the final
-    cast-to-double is deterministic and identical in both engines.
-    Oracle twin: CAST(x AS DECIMAL(12,4)).
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast("decimal(12,4)")
-
-
-def net_price_exact() -> Column:
-    """Decimal-exact revenue expr; value has ≤4 decimals, so the
-    rescale back to DECIMAL(12,4) is exact (no rounding-mode
-    dependence)."""
-    return (money("l_extendedprice") * (1 - money("l_discount"))).cast(
-        "decimal(12,4)"
-    )
-
-
-def sum_money(expr: Column, alias: str) -> Column:
-    """SUM in decimal, surfaced as double VIA STRING: decimal→double
-    casts are off-by-one-ulp between engines (DuckDB divides int128
-    by 10^scale in double math; Java rounds correctly), but both
-    parse a decimal STRING to the correctly-rounded nearest double.
-    Oracle twin: CAST(CAST(SUM(...) AS VARCHAR) AS DOUBLE)."""
-    return F.sum(expr).cast("string").cast("double").alias(alias)
-
-
 def ts_lit(s: str) -> Column:
     """Timestamp literal; fixtures store dates as timestamps."""
     return F.lit(s).cast("timestamp")
@@ -284,13 +250,24 @@ def net_cents() -> Column:
 def sum_cents(expr: Column, alias: str, frac_digits: int = 4) -> Column:
     """SUM of exact long units, surfaced as double.
 
-    Bit-identical to `sum_money`'s decimal-string path as long as
-    the per-group sum stays below 2^53 (exact in double): IEEE
-    division of the exact sum by the exact power of ten is the
-    correctly-rounded quotient, which is also what parsing the
-    decimal string yields. Envelope: ~9e15 units per group — holds
-    through sf≈1 for 1e-4-unit revenue sums (≈3e15/group at sf0.1
-    for Q1's 6 groups); beyond that, fall back to `sum_money`.
-    Oracle twins stay on the decimal form — same doubles.
+    Money sums must be exact: fixture values carry ≤2 decimal
+    digits, so group sums land exactly on .xx5 rounding boundaries,
+    where two engines' float accumulations round in opposite
+    directions. The long sum is exact and order-independent. It is
+    divided by 10^frac_digits in decimal (Spark types the quotient
+    decimal(38,6), exact for frac_digits ≤ 6) and surfaced as double
+    via its decimal string, which Spark and DuckDB both parse to the
+    correctly-rounded nearest double. Oracle twin:
+    CAST(CAST(SUM(<decimal expr>) AS VARCHAR) AS DOUBLE).
+
+    Exact for any long sum; the decimal step runs once per group.
+    The ceiling is long overflow at 2^63 ≈ 9.2e18 units per group,
+    which raises ARITHMETIC_OVERFLOW under ANSI mode (Spark 4's
+    default) instead of wrapping. Q1's sum_charge (1e-6 units) is
+    0.58 × 2^53 per group at sf0.1, so it meets the ceiling near
+    sf175. Dividing the sum in double instead is exact only below
+    2^53 units; five copies of sf0.1 lineitem (2.9 × 2^53 per Q1
+    group) already put that form 1 ulp off the oracle.
     """
-    return (F.sum(expr).cast("double") / F.lit(float(10**frac_digits))).alias(alias)
+    total = F.sum(expr).cast("decimal(38,0)") / F.lit(10**frac_digits)
+    return total.cast("string").cast("double").alias(alias)

@@ -11,9 +11,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from infofarmsparkml_spark.operators._util import (
+    cents,
     load_table,
     materialize_once,
     scratch_dir,
+    sum_cents,
     ts_lit,
 )
 from infofarmsparkml_spark.registry import query
@@ -467,17 +469,15 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-read, aggregate; the oracle checks the round trip preserved
     every row and value. ORC gets the same vectorized reader,
     predicate pushdown, and column pruning treatment as parquet in
-    Spark, so the 100 TB posture is unchanged; sums run in
-    DECIMAL(14,4) for exactness, surfaced as double via string
-    round-trip like the other money aggregates."""
+    Spark, so the 100 TB posture is unchanged; the price sum is an
+    exact cents sum like the other money aggregates."""
     orders = load_table(spark, sf_dir, "orders")
     out = scratch_dir("orders_orc", sf_dir)
     orders.write.mode("overwrite").orc(out)
     reread = spark.read.orc(out)
-    money = F.col("o_totalprice").cast("decimal(14,4)")
     return reread.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        F.sum(money).cast("string").cast("double").alias("sum_price"),
+        sum_cents(cents("o_totalprice"), "sum_price", 2),
     )
 
 

@@ -137,7 +137,7 @@ def sql_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CTE referenced twice (rows + its own average): customers
     whose total order revenue exceeds the mean customer revenue.
     Revenue sums in DECIMAL (exact, order-independent) and
-    surfaces as double via string (see _util.sum_money)."""
+    surfaces as double via string, the SQL form of _util.sum_cents."""
     _views(spark, sf_dir, "orders")
     return spark.sql(
         """

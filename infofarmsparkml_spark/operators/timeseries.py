@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from infofarmsparkml_spark.operators._util import load_table
+from infofarmsparkml_spark.operators._util import cents, load_table
 from infofarmsparkml_spark.registry import query
 
 
@@ -261,8 +261,6 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE exchange of N rows instead of two full-stream barriers.
     Results bit-identical (oracle-verified ×3 SFs)."""
     ev = load_table(spark, sf_dir, "events")
-    from infofarmsparkml_spark.operators._util import cents
-
     hourly = (
         ev.select("user_id", "ts", "value")
         .repartition("user_id")
@@ -339,14 +337,12 @@ def ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer, order-free), the denominator 2^10−2^(10−n) is closed
     form, and the only float op is one identical division chain."""
     ev = load_table(spark, sf_dir, "events")
-    from infofarmsparkml_spark.operators._util import cents
-
     w = (
         W.partitionBy("user_id")
         .orderBy("ts", "event_id")
         .rowsBetween(-9, 0)
     )
-    vs = F.collect_list(cents("value").cast("long")).over(w)
+    vs = F.collect_list(cents("value")).over(w)
     df = ev.select("user_id", "event_id", "ts", vs.alias("vs"))
     n = F.size("vs")
     # pow(2.0, e) for e in [0, 10] is exact in IEEE double, so the
@@ -420,14 +416,12 @@ def ts_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     so both engines produce the same bits — no one-pass/Welford
     formula drift, no frame-order float accumulation."""
     ev = load_table(spark, sf_dir, "events")
-    from infofarmsparkml_spark.operators._util import cents
-
     ordw = W.partitionBy("user_id").orderBy("ts", "event_id")
     lagged = ev.select(
         "user_id",
         "event_id",
         "ts",
-        cents("value").cast("long").alias("x"),
+        cents("value").alias("x"),
     ).withColumn("y", F.lag("x").over(ordw))
     w = ordw.rowsBetween(-5, 0)
     xy = F.when(F.col("y").isNotNull(), F.col("x"))
@@ -493,13 +487,11 @@ def ts_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers: bit-identical on both engines. Degenerate series (all
     points in one hour) are filtered, keeping ANSI division happy."""
     ev = load_table(spark, sf_dir, "events")
-    from infofarmsparkml_spark.operators._util import cents
-
     h = (F.floor(F.unix_micros(F.col("ts")) / F.lit(3600000000)) - 473352).cast(
         "long"
     )
     c = ev.select(
-        "user_id", h.alias("h"), cents("value").cast("long").alias("y")
+        "user_id", h.alias("h"), cents("value").alias("y")
     )
     mo = c.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n"),
@@ -550,14 +542,12 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     outputs round half-up with the identical floor(x·10⁴+0.5)
     expression, so hashes match bit-for-bit."""
     ev = load_table(spark, sf_dir, "events")
-    from infofarmsparkml_spark.operators._util import cents
-
     c = ev.select(
         "user_id",
         "event_id",
         "ts",
         F.hour("ts").cast("int").alias("hod"),
-        cents("value").cast("long").alias("vc"),
+        cents("value").alias("vc"),
     )
     w = W.partitionBy("user_id", "hod")
     mean_c = F.sum("vc").over(w).cast("double") / F.count(F.lit(1)).over(w)
@@ -637,7 +627,7 @@ def ts_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.select(
             "user_id",
             "event_id",
-            F.round(F.col("value") * 100).cast("long").alias("vc"),
+            cents("value").alias("vc"),
         )
         .withColumn("med", F.percentile(F.col("vc"), F.lit(0.5)).over(w))
         .withColumn("adev", F.abs(F.col("vc") - F.col("med")))

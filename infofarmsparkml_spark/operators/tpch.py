@@ -16,12 +16,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from infofarmsparkml_spark.operators._util import (
     cents,
     load_table,
-    money,
     net_cents,
-    net_price_exact,
     r,
     sum_cents,
-    sum_money,
     ts_lit,
 )
 from infofarmsparkml_spark.operators import aggregates as _aggregates
@@ -290,9 +287,10 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01'
 )
 def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q14 shape (promotion effect): date-filtered lineitem joins a
-    broadcast part dim; conditional decimal aggregate. The usual
+    broadcast part dim; conditional exact-money aggregate. The usual
     promo/total ratio is surfaced as two exact sums instead of one
-    division so the oracle hash-match stays float-robust."""
+    division so the oracle hash-match stays float-robust. 100 × a sum
+    in 1e-4 units is the same sum read in 1e-2 units."""
     lf = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= ts_lit("1996-01-01"))
         & (F.col("l_shipdate") < ts_lit("1996-02-01"))
@@ -300,11 +298,9 @@ def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = F.broadcast(
         load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     )
-    promo = F.when(
-        F.col("p_type").like("PROMO%"), net_price_exact()
-    ).otherwise(F.lit(0).cast("decimal(12,4)"))
+    promo = F.when(F.col("p_type").like("PROMO%"), net_cents()).otherwise(0)
     return lf.join(part, F.col("l_partkey") == F.col("p_partkey")).agg(
-        sum_money((F.lit(100.0).cast("decimal(12,4)") * promo).cast("decimal(20,4)"), "promo_revenue"),
+        sum_cents(promo, "promo_revenue", 2),
         sum_cents(net_cents(), "total_revenue"),
     )
 
@@ -481,15 +477,14 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("s_suppkey", "supp_nation")
     )
-    zero = F.lit(0).cast("decimal(12,4)")
     return (
         lf.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
         .join(cust_region, F.col("c_custkey") == F.col("o_custkey"), "left_semi")
         .join(supp_nation, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy(F.year("o_orderdate").cast("long").alias("o_year"))
         .agg(
-            sum_money(
-                F.when(F.col("supp_nation") == "NATION_3", net_price_exact()).otherwise(zero),
+            sum_cents(
+                F.when(F.col("supp_nation") == "NATION_3", net_cents()).otherwise(0),
                 "nation_volume",
             ),
             sum_cents(net_cents(), "total_volume"),
@@ -518,7 +513,9 @@ GROUP BY n_name, o_year
 def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q9 shape (product-type profit): the fixture has no
     partsupp.ps_supplycost, so unit cost is modeled as 1% of
-    p_retailprice — same five-way join + decimal expression shape.
+    p_retailprice — same five-way join + expression shape. Profit is
+    summed in exact 1e-6 units: net revenue (1e-4 units) × 100 minus
+    cents(price) × cents(quantity), which is that 1% cost in 1e-6.
     part/supplier+nation broadcast; only lineitem⋈orders shuffles.
 
     r16 (guide §3.1): supplier→nation pre-flattened into one
@@ -545,16 +542,13 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("s_suppkey", "nation")
     )
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    cost = (
-        money("p_retailprice") * money("l_quantity") * F.lit("0.01").cast("decimal(12,4)")
-    ).cast("decimal(18,6)")
-    profit = (net_price_exact().cast("decimal(18,6)") - cost).cast("decimal(18,6)")
+    profit = net_cents() * 100 - cents("p_retailprice") * cents("l_quantity")
     return (
         lf.join(part, F.col("p_partkey") == F.col("l_partkey"))
         .join(supp_nation, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
         .groupBy("nation", F.year("o_orderdate").cast("long").alias("o_year"))
-        .agg(sum_money(profit, "profit"))
+        .agg(sum_cents(profit, "profit", 6))
     )
 
 
@@ -645,7 +639,7 @@ WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)
 )
 def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q15 (top supplier): revenue per supplier in a quarter, then
-    keep the max. The max is computed on the EXACT decimal sums (not
+    keep the max. The max is computed on the EXACT long sums (not
     the double surface), so ties/equality are engine-independent.
     The 1-row max broadcasts back against the revenue aggregate."""
     rev = (
@@ -655,18 +649,17 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_shipdate") < ts_lit("1996-04-01"))
         )
         .groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(F.sum(net_price_exact()).alias("rev_dec"))
+        .agg(
+            F.sum(net_cents()).alias("rev_c"),
+            sum_cents(net_cents(), "total_revenue"),
+        )
     )
-    top = F.broadcast(rev.agg(F.max("rev_dec").alias("max_rev")))
+    top = F.broadcast(rev.agg(F.max("rev_c").alias("max_rev")))
     supp = F.broadcast(load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name"))
     return (
-        rev.join(top, F.col("rev_dec") == F.col("max_rev"))
+        rev.join(top, F.col("rev_c") == F.col("max_rev"))
         .join(supp, F.col("s_suppkey") == F.col("supplier_no"))
-        .select(
-            "s_suppkey",
-            "s_name",
-            F.col("rev_dec").cast("string").cast("double").alias("total_revenue"),
-        )
+        .select("s_suppkey", "s_name", "total_revenue")
     )
 
 

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from infofarmsparkml_spark.operators._util import load_table, r
+from infofarmsparkml_spark.operators._util import cents, load_table, r
 from infofarmsparkml_spark.registry import query
 
 
@@ -299,7 +299,7 @@ def win_median_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "ts",
         "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("vc"),
+        cents("value").alias("vc"),
     ).select(
         "user_id",
         "ts",

@@ -2086,3 +2086,31 @@ def test_pq_codebook_requires_256_vectors(spark, tmp_path):
     for name in ("llm_pq_topk", "llm_ivf_pq_topk"):
         with pytest.raises(ValueError, match="codebook needs >= 256"):
             q(name)(spark, str(tmp_path))
+
+
+def test_fn_array_long_tokens_null_without_long_word(spark, tmp_path):
+    """A document with no word longer than four letters has an empty
+    long-token list: DuckDB's ARRAY_TO_STRING gives NULL for it, so
+    fn_array must too (concat_ws alone gives '')."""
+    import duckdb
+    import pandas as pd
+
+    from infofarmsparkml_spark.verify import compare_frames
+
+    docs = tmp_path / "documents.parquet"
+    pd.DataFrame(
+        {
+            "doc_id": [1, 2],
+            "text": ["a bb ccc dddd", "spark joins large tables"],
+            "lang": ["en", "en"],
+            "source": ["web", "web"],
+            "n_chars": [13, 24],
+        }
+    ).to_parquet(docs, index=False)
+    fn, oracle = registry.get("fn_array")
+    got = fn(spark, str(tmp_path)).toPandas()
+    with duckdb.connect() as con:
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{docs}')")
+        ok, msg = compare_frames(got, con.execute(oracle).fetchdf())
+    assert ok, msg
+    assert got.set_index("doc_id")["long_tokens"].isna().tolist() == [True, False]

@@ -1,20 +1,23 @@
-"""Filesystem-level tests for operators/_util.py caching helpers.
+"""Tests for operators/_util.py helpers.
 
-Covers the ``materialize_once`` hazards flagged in ADVICE r7/r8:
-a crash-orphaned partial dir (exists, no _SUCCESS) must be replaced
-— not served — and the writer's temp dir must never leak, including
-when ``write_fn`` itself raises. Pure-filesystem tests: write_fn
-stands in for a Spark sink by creating a dir with part files and a
-_SUCCESS marker.
+Most are filesystem-level tests of the caching helpers, covering the
+``materialize_once`` hazards flagged in ADVICE r7/r8: a crash-orphaned
+partial dir (exists, no _SUCCESS) must be replaced — not served — and
+the writer's temp dir must never leak, including when ``write_fn``
+itself raises. Pure-filesystem tests: write_fn stands in for a Spark
+sink by creating a dir with part files and a _SUCCESS marker.
 """
 
 from __future__ import annotations
 
 import os
+from decimal import Decimal
 
 import pytest
+from pyspark.errors import ArithmeticException
+from pyspark.sql import functions as F
 
-from infofarmsparkml_spark.operators._util import materialize_once
+from infofarmsparkml_spark.operators._util import materialize_once, sum_cents
 
 
 def _fake_sink(content: str):
@@ -427,3 +430,28 @@ def test_scripts_resolve_engine_names():
             ):
                 missing.append(f"{path}: {node.value.id}.{node.attr}")
     assert not missing, missing
+
+
+@pytest.mark.parametrize(
+    "values, frac_digits",
+    [
+        ([2**53 + 1], 6),
+        ([-(2**53) - 1, -(2**40), 2], 6),
+        ([2**53, 1], 2),
+    ],
+    ids=["2^53+1-k6", "negative-k6", "two-rows-k2"],
+)
+def test_sum_cents_exact_beyond_2_53(spark, values, frac_digits):
+    """Every sum here is above 2^53 in magnitude, where a long→double
+    cast before the division rounds; the result must be the
+    correctly-rounded double of the exact decimal quotient."""
+    df = spark.createDataFrame([(v,) for v in values], "u long")
+    got = df.agg(sum_cents(F.col("u"), "s", frac_digits)).first()["s"]
+    assert got == float(str(Decimal(sum(values)) / 10**frac_digits))
+
+
+def test_sum_cents_long_overflow_raises(spark):
+    """The ceiling is long overflow, and it raises instead of wrapping."""
+    df = spark.createDataFrame([(2**62,), (2**62,)], "u long")
+    with pytest.raises(ArithmeticException, match="ARITHMETIC_OVERFLOW"):
+        df.agg(sum_cents(F.col("u"), "s", 2)).collect()
