@@ -1,8 +1,11 @@
 """Fixture catalog: load the driver-generated parquet tables.
 
 Tables (FIXTURES.md): region nation customer supplier part orders
-lineitem events documents embeddings. Parquet carries its own schema
-— no inference. ``load_table`` is the single scan entry point so
+lineitem events documents embeddings. ``SCHEMAS`` declares the nine
+non-``events`` tables, so a read skips parquet footer inference and
+the Spark job it starts; a production job gets the same contract from
+its metastore. ``events`` is still read from its footer (see
+``_load_events``). ``load_table`` is the single scan entry point so
 every operator inherits predicate pushdown + column pruning from the
 parquet source (verified by plan tests).
 """
@@ -11,26 +14,51 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+# Measured from the footers at sf0.001, sf0.01 and sf0.1 (guarded by
+# tests/test_util.py); the date columns surface as timestamp_ntz.
+SCHEMAS = {
+    "region": "r_regionkey int, r_name string",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "customer": (
+        "c_custkey bigint, c_name string, c_nationkey int, c_acctbal double, "
+        "c_mktsegment string"
+    ),
+    "supplier": "s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double",
+    "part": (
+        "p_partkey bigint, p_name string, p_brand string, p_type string, "
+        "p_size int, p_retailprice double"
+    ),
+    "orders": (
+        "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
+        "o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string"
+    ),
+    "lineitem": (
+        "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, l_linenumber int, "
+        "l_quantity double, l_extendedprice double, l_discount double, "
+        "l_tax double, l_returnflag string, l_linestatus string, "
+        "l_shipdate timestamp_ntz"
+    ),
+    "documents": (
+        "doc_id bigint, text string, lang string, source string, n_chars bigint"
+    ),
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+}
+
+TABLES = (*SCHEMAS, "events")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name not in TABLES:
-        raise KeyError(f"unknown fixture table {name!r}; expected one of {TABLES}")
+    """Read one fixture table. The nine declared tables start no Spark
+    job here. A declared schema changes what a file that disagrees
+    with it does (Spark 4.1.2): a column missing from the file reads
+    as NULL without error; a column of another type raises when the
+    query executes, except that an ``int`` file column widens to a
+    declared ``bigint``."""
     if name == "events":
         return _load_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    if name not in SCHEMAS:
+        raise KeyError(f"unknown fixture table {name!r}; expected one of {TABLES}")
+    return spark.read.schema(SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _set_nanos_as_long(spark: SparkSession) -> None:

@@ -1490,7 +1490,7 @@ def llm_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     and truncating lineage. The reuse mechanism (materialize the
     24 B/row pair set once, mirror from storage) is unchanged, so
     the sf10 posture is preserved."""
-    n = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
+    n = load_table(spark, sf_dir, "embeddings").count()
     emb = _double_vecs(spark, sf_dir, "vec_id", "e")
     # quantized vectors feed the signature pass and both verify
     # sides — checkpoint so consumers share one derivation

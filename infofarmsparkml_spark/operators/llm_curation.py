@@ -1013,7 +1013,7 @@ def llm_diversity_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     count scales as ~n/64 so per-cluster sort stays bounded. The
     rank filter is quota-dependent, so no WindowGroupLimit —
     per-cluster work is the bounded-occupancy sort itself."""
-    n = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
+    n = load_table(spark, sf_dir, "embeddings").count()
     emb = _double_vecs(spark, sf_dir, "vec_id", "e")
     quant = emb.select("vec_id", _quantize_vec("e").alias("qv"))
     keys = _srp_band_keys(

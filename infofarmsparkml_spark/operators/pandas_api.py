@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from infofarmsparkml_spark.operators._util import load_table
 from infofarmsparkml_spark.registry import query
 
 
@@ -30,7 +31,7 @@ GROUP BY l_returnflag, l_linestatus
 """,
 )
 def ps_pandas_api(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pandas-on-Spark revenue rollup: read_parquet → assign →
+    """Pandas-on-Spark revenue rollup: catalog table → assign →
     groupby([...]).agg(named) → reset_index → to_spark(). Every step
     stays lazy in Catalyst (to_spark hands back the logical plan, no
     materialization), so the pandas dialect costs nothing over the
@@ -44,7 +45,7 @@ def ps_pandas_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev = ps.get_option("compute.default_index_type")
     ps.set_option("compute.default_index_type", "distributed")
     try:
-        psdf = ps.read_parquet(f"{sf_dir}/lineitem.parquet")
+        psdf = load_table(spark, sf_dir, "lineitem").pandas_api()
         psdf = psdf.assign(
             revenue_cents=(psdf["l_extendedprice"] * 100)
             .round(0)

@@ -455,3 +455,83 @@ def test_sum_cents_long_overflow_raises(spark):
     df = spark.createDataFrame([(2**62,), (2**62,)], "u long")
     with pytest.raises(ArithmeticException, match="ARITHMETIC_OVERFLOW"):
         df.agg(sum_cents(F.col("u"), "s", 2)).collect()
+
+
+@pytest.mark.parametrize("scale", ["sf0.001", "sf0.01", "sf0.1"])
+def test_declared_schemas_match_parquet_footers(spark, sf_dir, scale):
+    """``catalog.SCHEMAS`` is the contract the reads rely on instead of
+    footer inference, so it must equal what the footers say, at every
+    fixture scale (the date columns surface as timestamp_ntz)."""
+    from infofarmsparkml_spark.catalog import SCHEMAS, load_table
+
+    sf = os.path.join(os.path.dirname(os.path.normpath(sf_dir)), scale)
+    if not os.path.isdir(sf):
+        pytest.skip(f"sibling fixture {scale} not generated under {sf}")
+    for name in SCHEMAS:
+        footer = spark.read.parquet(f"{sf}/{name}.parquet").schema
+        assert load_table(spark, sf, name).schema == footer, (scale, name)
+
+
+def test_declared_tables_load_without_spark_jobs(spark, sf_dir):
+    """Loading the nine declared tables starts no Spark job; a footer
+    read starts one per table."""
+    import uuid
+
+    from infofarmsparkml_spark.catalog import SCHEMAS, load_table
+
+    sc = spark.sparkContext
+    group = f"catalog-{uuid.uuid4().hex}"  # fresh, so it holds no job yet
+    sc.setJobGroup(group, "load declared tables")
+    try:
+        for name in SCHEMAS:
+            load_table(spark, sf_dir, name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert not jobs, f"{len(jobs)} Spark jobs"
+
+
+def test_declared_schema_wrong_column_type_raises(spark, tmp_path):
+    """A file column whose type disagrees with the declared schema is
+    not caught when the DataFrame is built: the query raises when it
+    executes."""
+    import pandas as pd
+
+    from infofarmsparkml_spark import registry
+
+    pd.DataFrame(
+        {
+            "doc_id": ["1", "2"],  # declared bigint
+            "text": ["a bb ccc dddd", "spark joins large tables"],
+            "lang": ["en", "en"],
+            "source": ["web", "web"],
+            "n_chars": [13, 24],
+        }
+    ).to_parquet(tmp_path / "documents.parquet", index=False)
+    df = registry.get("fn_array")[0](spark, str(tmp_path))
+    with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        df.collect()
+
+
+def test_declared_schema_missing_column_reads_null(spark, tmp_path):
+    """A column the file lacks reads as NULL without error, and an
+    int file column widens to a declared bigint."""
+    import numpy as np
+    import pandas as pd
+
+    from infofarmsparkml_spark.catalog import load_table
+
+    pd.DataFrame(
+        {
+            "s_suppkey": np.array([1, 2], dtype="int32"),  # declared bigint
+            "s_name": ["x", "y"],
+            "s_acctbal": [1.5, 2.5],
+        }
+    ).to_parquet(tmp_path / "supplier.parquet", index=False)
+    rows = load_table(spark, str(tmp_path), "supplier").orderBy("s_suppkey")
+    assert [tuple(r) for r in rows.collect()] == [
+        (1, "x", None, 1.5),
+        (2, "y", None, 2.5),
+    ]
