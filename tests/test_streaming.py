@@ -6,11 +6,13 @@ the custom stateful operator.
 from __future__ import annotations
 
 import os
+import time
 
 import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F, types as T
+from pyspark.sql.streaming import StreamingQueryListener
 
 from infofarmsparkml_spark import registry
 from infofarmsparkml_spark.catalog import load_table
@@ -117,6 +119,88 @@ def test_session_windows_respect_gap(spark, sf_dir):
         sessions.sort()
         for (s1, e1), (s2, e2) in zip(sessions, sessions[1:]):
             assert s2 >= e1, f"user {user}: overlapping sessions"
+
+
+class _StatePartitions(StreamingQueryListener):
+    """Records every stateful operator's state-store partition count
+    (`numShufflePartitions`) per micro-batch, and counts terminated
+    queries so a test can wait for the last progress event."""
+
+    def __init__(self):
+        self.parts: list[int] = []
+        self.terminated = 0
+
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        ops = event.progress.stateOperators
+        self.parts.extend(s.numShufflePartitions for s in ops)
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        self.terminated += 1
+
+
+def _run_with_state_partitions(spark, opname, sf_dir):
+    """Run a registered stream; return its sorted rows and the
+    state partition counts its micro-batches reported."""
+    listener = _StatePartitions()
+    spark.streams.addListener(listener)
+    try:
+        rows = sorted(tuple(r) for r in q(opname)(spark, sf_dir).collect())
+    finally:
+        # the terminated event follows the query's last progress
+        # event on the listener bus, which delivers asynchronously
+        deadline = time.time() + 30
+        while not listener.terminated and time.time() < deadline:
+            time.sleep(0.2)
+        spark.streams.removeListener(listener)
+    assert listener.parts, f"{opname}: no stateful operator reported progress"
+    return rows, listener.parts
+
+
+def test_state_partitions_follow_task_slots(spark, sf_dir):
+    """Stateful streams size their state store to the session's task
+    slots (one partition per slot, so each micro-batch's state work
+    runs in one wave), whatever the caller's shuffle-partition conf
+    is, and hand that conf back unchanged."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    try:
+        _, parts = _run_with_state_partitions(spark, "stream_tumbling", sf_dir)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    slots = spark.sparkContext.defaultParallelism
+    assert set(parts) == {slots}, (parts, slots)
+
+
+@pytest.mark.parametrize(
+    "opname", ["stream_tumbling", "stream_dedup", "stream_stateful_tws"]
+)
+def test_results_invariant_to_state_partitions(spark, sf_dir, opname, monkeypatch):
+    """Results must not depend on parallelism: the same stateful
+    stream at sf0.01 gives the same rows with one state partition as
+    with one per task slot. The one-partition arm patches the slot
+    count `_state_sized` reads."""
+    d = os.path.join(os.path.dirname(os.path.normpath(sf_dir)), "sf0.01")
+    if not os.path.isdir(d):
+        pytest.skip(f"sibling fixture sf0.01 not generated under {d}")
+    slots = spark.sparkContext.defaultParallelism
+    wide, wide_parts = _run_with_state_partitions(spark, opname, d)
+    monkeypatch.setattr(
+        type(spark.sparkContext), "defaultParallelism", property(lambda sc: 1)
+    )
+    narrow, narrow_parts = _run_with_state_partitions(spark, opname, d)
+    assert set(wide_parts) == {slots} and set(narrow_parts) == {1}
+    assert wide, f"{opname}: empty result"
+    assert narrow == wide, (
+        f"{opname}: {len(narrow)} rows at 1 state partition vs "
+        f"{len(wide)} at {slots}"
+    )
 
 
 def test_events_ts_sane_in_both_read_paths(spark, sf_dir):
