@@ -1,12 +1,15 @@
-"""Graph analytics on DataFrames (no GraphX/GraphFrames dependency):
-a co-purchase graph built from lineitem by self-join, with degree
-(SQL-oracled) and PageRank (iterative power method, the same
-DataFrame-iteration pattern as `llm_dedup_components`).
+"""Graph analytics on DataFrames (no GraphX/GraphFrames dependency)
+over one co-purchase graph, built from lineitem by self-join and
+materialized once per fixture: degree, PageRank, triangles, BFS,
+SSSP, label propagation, connected components and k-core.
 
-Scale posture: edges come from one self-join shuffled on the basket
-key; every PageRank iteration is one join + one aggregation on the
-edge partitioning, and `localCheckpoint` every few rounds truncates
-the growing lineage (SURVEY.md §7 hard parts).
+One place per shared decision: `_edge_layout` (the iterative ops'
+checkpointed edge partitioning), `_guarded_vertex_pick` (their
+vertex-join build side), `_forward_triangles` (both triangle ops'
+orientation) and `_EDGES_CTE` (the round-unrolled oracles' edge
+CTE). Each iterative op keeps its own loop — state shape, stop test
+and checkpoint cadence differ per algorithm — with `localCheckpoint`
+truncating its lineage (SURVEY.md §7 hard parts).
 """
 
 from __future__ import annotations
@@ -38,7 +41,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Co-purchase edge list, materialized ONCE per fixture into a
     fingerprinted scratch parquet and shared by every graph query —
     the GraphX/GraphFrames pattern: build the graph once, run many
-    algorithms over it. Eight registered queries consume this edge
+    algorithms over it. Nine registered queries consume this edge
     set; without the materialization each re-runs the lineitem
     self-join + distinct, and at fact scale that re-derivation (a
     full shuffle of the fact table per algorithm) would dominate
@@ -100,15 +103,23 @@ def _guarded_vertex_pick(spark: SparkSession, edges_raw: DataFrame):
     loop (pagerank/bfs/sssp/lpa, r14 ADVICE closed in 3fb8b43, shared
     helper r15): while the EDGE table's estimate is inside broadcast
     range, return `F.broadcast` so the vertex-sized side is stated
-    explicitly as the build side (a scratch edge table whose
-    file-size estimate flirts with the threshold must never become
-    the build side on a coin-flip — it OOMs a default-memory
-    driver); past broadcast range — or with auto-broadcast disabled
-    — return identity so NO hint is emitted: an unconditional
-    broadcast hint would override a disabled-auto-broadcast session
-    and hit Spark's 8 GB broadcast hard cap past ~1e8 vertices,
-    where the un-hinted plan lets AQE fall back to a shuffle join.
-    Plan-pinned both ways in tests/test_plans.py."""
+    explicitly as the build side. The edge table must never become
+    the build side on a coin-flip: the scratch file-size estimate
+    can land just under the auto-broadcast threshold (the sf0.1 edge
+    scratch sits ~2% under 10 MB; part-file layout varies with writer
+    parallelism), and since localCheckpoint preserves source stats
+    while per-round vertex frames carry inflated join-output
+    estimates, rounds >= 2 then statically built the 2.39M-row edge
+    side and OOM'd a default-memory driver (r13). The stated vertex
+    build is the plan AQE picks at runtime anyway; a blanket
+    SHUFFLE_MERGE hint instead measured 3x slower in pagerank (hints
+    also block AQE's vertex-side broadcast conversion). Past
+    broadcast range — or with auto-broadcast disabled — return
+    identity so NO hint is emitted: an unconditional broadcast hint
+    would override a disabled-auto-broadcast session and hit Spark's
+    8 GB broadcast hard cap past ~1e8 vertices, where the un-hinted
+    plan lets AQE fall back to a shuffle join. Plan-pinned both ways
+    in tests/test_plans.py."""
     return (
         F.broadcast
         if _fact_in_broadcast_range(spark, edges_raw)
@@ -116,13 +127,31 @@ def _guarded_vertex_pick(spark: SparkSession, edges_raw: DataFrame):
     )
 
 
+def _edge_layout(edges: DataFrame) -> DataFrame:
+    """The iterative ops' edge list: hash-partitioned on src BEFORE
+    its checkpoint. The checkpointed RDD keeps that partitioning, so
+    every round's join with the vertex-sized vector reuses it and
+    only the vector moves (pagerank measured 8.6 s -> 5.1 s at sf0.1,
+    identical output) — on a cluster, the edge set shuffles once
+    instead of once per round."""
+    return edges.repartition(F.col("src")).localCheckpoint()
+
+
+# The co-purchase pair query every edge oracle derives from, and the
+# edges CTE the round-unrolled oracles open with.
+_COPURCHASE_PAIRS = """SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
+  FROM lineitem a JOIN lineitem b
+    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey"""
+_EDGES_CTE = f"""
+edges AS MATERIALIZED (
+  {_COPURCHASE_PAIRS}),"""
+
+
 @query(
     "graph_degree",
-    oracle="""
+    oracle=f"""
 WITH pairs AS (
-  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
+  {_COPURCHASE_PAIRS}
 )
 SELECT src AS part, COUNT(*) AS degree
 FROM pairs GROUP BY src
@@ -145,11 +174,8 @@ def _pagerank_oracle(n_iter: int = 10, d: float = 0.85) -> str:
     aggregate CTE per round. Rounding happens only at the end, like
     the Spark side."""
     parts = [
-        """
-edges AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
+        _EDGES_CTE
+        + """
 deg AS (SELECT src, COUNT(*) AS out_deg FROM edges GROUP BY src),
 pr0 AS (SELECT src, 1.0 AS rank FROM deg)"""
     ]
@@ -168,49 +194,19 @@ pr{i} AS (
     )
 
 
-@query("graph_pagerank", oracle=_pagerank_oracle())
-def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank (10 power iterations, damping 0.85) over the
-    co-purchase graph, as pure DataFrame ops: contribution = join
-    ranks→edges, new rank = (1-d) + d·sum(contribs). The graph is
-    symmetric so there are no dangling nodes. Lineage is truncated
-    with localCheckpoint every 4 iterations — without it the plan
-    doubles per round and the driver, not the data, becomes the
-    bottleneck. The edge list is hash-partitioned on src BEFORE its
-    checkpoint: the checkpointed RDD keeps that partitioning, so all
-    10 per-iteration joins reuse it and only the 20k-row rank vector
-    moves per round (measured 8.6 s -> 5.1 s at sf0.1, identical
-    output) — on a cluster this is the difference between shuffling
-    the 100 TB edge set once vs ten times. Because all 10 rounds
-    compile into ONE DAG, the edge side's exchange(+sort, past the
-    broadcast threshold) is planned once and REUSED by every round's
-    join (ReusedExchange) — probed empirically in the r12 two-decade
-    smoke: forcing SHUFFLE_HASH on the rank side, which looked
-    sort-free on paper, broke that reuse and measured 2.5x SLOWER at
-    sf1/sf10; the un-hinted plan holds both decade ratios <= ~6."""
-    edges_raw = _copurchase_edges(spark, sf_dir)
-    edges = edges_raw.repartition(F.col("src")).localCheckpoint()
+def _pagerank_iterate(
+    edges: DataFrame, pick, n_iter: int = 10, d: float = 0.85
+) -> DataFrame:
+    """Fixed-round PageRank core of `graph_pagerank`, shared with the
+    known-answer test so the test exercises THE operator's
+    arithmetic: contribution = join ranks→edges, new rank =
+    (1-d) + d·sum(contribs). ``pick`` states the vertex-side build
+    (`_guarded_vertex_pick`). The rank vector is localCheckpointed
+    every 4 rounds — without it the plan doubles per round and the
+    driver, not the data, becomes the bottleneck. Returns (src, rank)."""
     out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
     ranks = out_deg.select("src", F.lit(1.0).alias("rank"))
-    d = 0.85
-    # The edge table must never be a broadcast BUILD side (r13):
-    # its scratch file-size estimate can land just under the
-    # auto-broadcast threshold (part-file layout varies with writer
-    # parallelism), and since localCheckpoint preserves stats while
-    # per-round rank frames carry inflated join-output estimates,
-    # rounds >= 2 then statically build the 2.39M-row edge side and
-    # OOM a default-memory driver. When the edge estimate is inside
-    # broadcast range (_fact_in_broadcast_range reads the SESSION
-    # threshold, not a hardcoded default) we say the build side
-    # explicitly — the vertex-sized vectors, the same plan AQE
-    # picks at runtime anyway (a blanket SHUFFLE_MERGE hint instead
-    # measured 3x slower here: hints also block AQE's vertex-side
-    # broadcast conversion). Past broadcast range no side is
-    # statically buildable and the un-hinted single-DAG
-    # ReusedExchange shape — the one the r12 smoke measured 2.5x
-    # better than SHUFFLE_HASH at sf1/sf10 — stands untouched.
-    pick = _guarded_vertex_pick(spark, edges_raw)
-    for i in range(10):
+    for i in range(n_iter):
         contribs = (
             edges.join(pick(ranks), "src")
             .join(pick(out_deg), "src")
@@ -222,6 +218,28 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if i % 4 == 3:
             ranks = ranks.localCheckpoint()
+    return ranks
+
+
+@query("graph_pagerank", oracle=_pagerank_oracle())
+def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PageRank (10 power iterations, damping 0.85) over the
+    co-purchase graph, as pure DataFrame ops (`_pagerank_iterate`).
+    The graph is symmetric so there are no dangling nodes. The edges
+    take `_edge_layout`, so all 10 per-iteration joins reuse one edge
+    partitioning and only the 20k-row rank vector moves per round.
+    Because all 10 rounds compile into ONE DAG, the edge side's
+    exchange(+sort, past the broadcast threshold) is planned once and
+    REUSED by every round's join (ReusedExchange) — probed
+    empirically in the r12 two-decade smoke: forcing SHUFFLE_HASH on
+    the rank side, which looked sort-free on paper, broke that reuse
+    and measured 2.5x SLOWER at sf1/sf10; the un-hinted plan holds
+    both decade ratios <= ~6."""
+    edges_raw = _copurchase_edges(spark, sf_dir)
+    # build side: _guarded_vertex_pick, on the raw scratch estimate
+    ranks = _pagerank_iterate(
+        _edge_layout(edges_raw), _guarded_vertex_pick(spark, edges_raw)
+    )
     return ranks.select(
         F.col("src").alias("part"), F.round("rank", 6).alias("pagerank")
     )
@@ -240,11 +258,8 @@ def _pagerank_delta_oracle(
     sides, so the early exit never needs a depth pin: parity holds
     whether the loop stops at round 3 or runs to the cap."""
     parts = [
-        """
-edges AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
+        _EDGES_CTE
+        + """
 deg AS MATERIALIZED (SELECT src, COUNT(*) AS out_deg FROM edges GROUP BY src),
 pr0 AS (SELECT src, CAST(1000000 AS BIGINT) AS rank FROM deg)"""
     ]
@@ -299,9 +314,9 @@ def _pagerank_delta_iterate(
     semantics stay engine-identical. Returns (ranks, rounds_run);
     ranks has (src, rank) columns.
 
-    ``edges`` must be a symmetric distinct edge list, ideally
-    src-partitioned + checkpointed by the caller so the per-round
-    join reuses one layout. The rank vector is localCheckpoint-ed
+    ``edges`` must be a symmetric distinct edge list, ideally in
+    `_edge_layout` so the per-round join reuses one layout. The rank
+    vector is localCheckpoint-ed
     lazily every round: it is one row per vertex (tiny relative to
     edges at any scale), and the NEXT action to touch it — the delta
     aggregate, or a later round's — materializes and pins it, so a
@@ -382,63 +397,44 @@ def graph_pagerank_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     the src-partitioned checkpointed edges with the vertex-sized
     contribution vector (partial-agg shuffles vertex-count rows,
     never the edge set), plus a vertex-sized delta aggregate."""
-    edges = (
-        _copurchase_edges(spark, sf_dir)
-        .repartition(F.col("src"))
-        .localCheckpoint()
+    ranks, _ = _pagerank_delta_iterate(
+        _edge_layout(_copurchase_edges(spark, sf_dir))
     )
-    ranks, _ = _pagerank_delta_iterate(edges)
     return ranks.select(
         F.col("src").alias("part"), F.col("rank").alias("pagerank_micro")
     )
 
 
-@query(
-    "graph_triangles",
-    oracle="""
-WITH pairs AS (
-  SELECT DISTINCT LEAST(a.l_partkey, b.l_partkey) AS u,
-                  GREATEST(a.l_partkey, b.l_partkey) AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
-tri AS (
-  SELECT e1.u AS a, e1.v AS b, e2.v AS c
-  FROM pairs e1 JOIN pairs e2 ON e2.u = e1.v
-       JOIN pairs e3 ON e3.u = e1.u AND e3.v = e2.v),
-corners AS (
-  SELECT a AS node FROM tri UNION ALL SELECT b FROM tri
-  UNION ALL SELECT c FROM tri)
-SELECT node AS part, CAST(COUNT(*) AS BIGINT) AS n_triangles
-FROM corners GROUP BY node
-""",
-)
-def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node triangle count on the co-purchase graph
-    (compact-forward / Schank–Wagner): direct every undirected edge
-    from the lower-(degree, id) endpoint to the higher, enumerate
-    length-2 paths along that orientation, and close them against
-    the directed edge set. Each triangle is found exactly once under
-    ANY total order, so the id-ordered DuckDB oracle counts the same
-    triangles; degree-ordering is what scales — a hub of degree d
-    contributes O(d) forward edges instead of O(d²) path pairs,
-    keeping the path-join near-linear on power-law graphs. Two
-    shuffles (path join + closure join) plus the corner aggregate."""
-    # localCheckpoint: und fans out into the degree aggregate and
-    # both sides of the orientation join, and fwd into all three
-    # edge roles — without materialization Catalyst column-prunes
-    # each consumer into a DIFFERENT subtree (no exchange reuse:
-    # observed 90 parquet scans at sf0.1, the co-purchase self-join
-    # re-derived up to 9x). Checkpointed: 2 scans, identical output.
-    # At sf0.1 wall time is join-bound either way (~49M length-2
-    # paths is the algorithmic floor of the orientation); at fact
-    # scale the 9x edge re-derivation would dominate, so the
-    # materialization is the posture that survives 100x.
-    und = (
+def _undirected(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each co-purchase edge once, as (u, v) with u < v."""
+    return (
         _copurchase_edges(spark, sf_dir)
         .filter(F.col("src") < F.col("dst"))
         .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .localCheckpoint()
     )
+
+
+def _forward_triangles(und: DataFrame) -> DataFrame:
+    """Compact-forward (Schank–Wagner) triangle enumeration over a
+    CHECKPOINTED undirected edge frame (u, v), u < v: direct every
+    edge from the lower-(degree, id) endpoint to the higher,
+    enumerate length-2 paths along that orientation, and close them
+    against the directed edge set. Returns one row (a, b, c) per
+    triangle. Each triangle is found exactly once under ANY total
+    order, so the id-ordered DuckDB oracles count the same
+    triangles; degree-ordering is what scales — a hub of degree d
+    contributes O(d) forward edges instead of O(d²) path pairs,
+    keeping the path-join near-linear on power-law graphs.
+
+    Materialization: `und` fans out into the degree aggregate and
+    both sides of the orientation join, and `fwd` into all three
+    edge roles — without checkpoints Catalyst column-prunes each
+    consumer into a DIFFERENT subtree (no exchange reuse: observed
+    90 parquet scans at sf0.1, the co-purchase self-join re-derived
+    up to 9x). At sf0.1 wall time is join-bound either way (~49M
+    length-2 paths is the algorithmic floor of the orientation); at
+    fact scale the 9x edge re-derivation would dominate, so the
+    materialization is the posture that survives 100x."""
     deg = (
         und.select(F.col("u").alias("node"))
         .unionAll(und.select(F.col("v").alias("node")))
@@ -475,16 +471,39 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     e3 = fwd.select(F.col("s").alias("a"), F.col("d").alias("c")).hint(
         "shuffle_hash"
     )
-    tri = e1.join(e2, "b").join(e3, ["a", "c"])
-    # r17 (guide §2.4): corners was a 3-way unionAll of projections
-    # of `tri` — Catalyst planned THREE full copies of the
-    # e1⋈e2⋈e3 path join (no exchange reuse across the branches;
-    # before plan shows 3 identical ShuffledHashJoin trees), so the
-    # ~49M-row length-2 path enumeration ran 3×. explode(array())
-    # emits the same 3 corner rows per triangle in ONE pass over
-    # one copy of the join. Identical multiset of corners, identical
-    # counts.
-    corners = tri.select(
+    return e1.join(e2, "b").join(e3, ["a", "c"])
+
+
+@query(
+    "graph_triangles",
+    oracle="""
+WITH pairs AS (
+  SELECT DISTINCT LEAST(a.l_partkey, b.l_partkey) AS u,
+                  GREATEST(a.l_partkey, b.l_partkey) AS v
+  FROM lineitem a JOIN lineitem b
+    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
+tri AS (
+  SELECT e1.u AS a, e1.v AS b, e2.v AS c
+  FROM pairs e1 JOIN pairs e2 ON e2.u = e1.v
+       JOIN pairs e3 ON e3.u = e1.u AND e3.v = e2.v),
+corners AS (
+  SELECT a AS node FROM tri UNION ALL SELECT b FROM tri
+  UNION ALL SELECT c FROM tri)
+SELECT node AS part, CAST(COUNT(*) AS BIGINT) AS n_triangles
+FROM corners GROUP BY node
+""",
+)
+def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-node triangle count on the co-purchase graph: every
+    triangle `_forward_triangles` finds counts once at each of its
+    three corners. Two shuffles (path join + closure join) plus the
+    corner aggregate."""
+    und = _undirected(spark, sf_dir).localCheckpoint()  # see _forward_triangles
+    # explode(array()) emits the 3 corner rows per triangle in ONE
+    # pass over one copy of the path join; a 3-way unionAll of
+    # projections planned the whole join three times (r17: no
+    # exchange reuse across union branches, the ~49M paths ran 3x).
+    corners = _forward_triangles(und).select(
         F.explode(F.array("a", "b", "c")).alias("node")
     )
     return corners.groupBy(F.col("node").alias("part")).agg(
@@ -535,44 +554,14 @@ def graph_triangles_doulion(spark: SparkSession, sf_dir: str) -> DataFrame:
     one row of exact integers (sampled-edge count, sampled-triangle
     count, scaled estimate)."""
     und = (
-        _copurchase_edges(spark, sf_dir)
-        .filter(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
+        _undirected(spark, sf_dir)
         .filter(
             F.substring(F.md5(F.concat_ws("|", "u", "v")), 1, 8)
             < F.lit(_DOULION_P_HEX)
         )
-        .localCheckpoint()  # fans into deg + orientation (see exact op)
+        .localCheckpoint()  # see _forward_triangles
     )
-    deg = (
-        und.select(F.col("u").alias("node"))
-        .unionAll(und.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    ranked = (
-        und.join(deg.withColumnRenamed("node", "u"), "u")
-        .withColumnRenamed("deg", "du")
-        .join(
-            deg.withColumnRenamed("node", "v").withColumnRenamed("deg", "dv"),
-            "v",
-        )
-    )
-    u_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    fwd = ranked.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("s"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("d"),
-    ).localCheckpoint()
-    e1 = fwd.select(F.col("s").alias("a"), F.col("d").alias("b"))
-    e2 = fwd.select(F.col("s").alias("b"), F.col("d").alias("c")).hint(
-        "shuffle_hash"
-    )
-    e3 = fwd.select(F.col("s").alias("a"), F.col("d").alias("c")).hint(
-        "shuffle_hash"
-    )
-    n_tri = e1.join(e2, "b").join(e3, ["a", "c"]).agg(
+    n_tri = _forward_triangles(und).agg(
         F.count(F.lit(1)).alias("n_tri_sampled")
     )
     n_edges = und.agg(F.count(F.lit(1)).alias("n_edges_sampled"))
@@ -589,11 +578,8 @@ def _bfs_oracle(depth: int = 4) -> str:
     level-synchronized shape as the Spark side, so path explosion
     never happens on either engine."""
     parts = [
-        """
-edges AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
+        _EDGES_CTE
+        + """
 seed AS (SELECT MIN(l_partkey) AS node FROM lineitem),
 f0 AS (SELECT node FROM seed)"""
     ]
@@ -626,18 +612,11 @@ def graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     level with no path enumeration (a recursive per-path walk
     explodes degree^depth). Frontiers are localCheckpointed so the
     plan does not grow with depth — same iteration discipline as
-    `graph_pagerank`, including the src-partitioned edge checkpoint
-    (every level's frontier join reuses it; only frontiers move)."""
+    `graph_pagerank`, including `_edge_layout` (every level's
+    frontier join reuses it; only frontiers move)."""
     edges_raw = _copurchase_edges(spark, sf_dir)
-    edges = edges_raw.repartition(F.col("src")).localCheckpoint()
-    # same guarded build-side pin as graph_pagerank (ADVICE r13):
-    # inside broadcast range the frontier build is stated explicitly
-    # (the edge side must never become the build side on a
-    # near-threshold file-size estimate); PAST broadcast range the
-    # hint is withheld — an unconditional hint would override a
-    # session that disabled auto-broadcast and, past ~1e8 vertices,
-    # hit Spark's 8 GB broadcast hard cap where the un-hinted plan
-    # lets AQE fall back to a shuffle join.
+    edges = _edge_layout(edges_raw)
+    # build side: _guarded_vertex_pick, on the raw scratch estimate
     pick = _guarded_vertex_pick(spark, edges_raw)
     lf = load_table(spark, sf_dir, "lineitem")
     seed = lf.agg(F.min("l_partkey").alias("node"))
@@ -711,7 +690,7 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_partkey"
     )
     a, b = lf.alias("a"), lf.alias("b")
-    edges = (
+    edges = _edge_layout(
         a.join(b, "l_orderkey")
         .filter(F.col("a.l_partkey") != F.col("b.l_partkey"))
         .groupBy(
@@ -724,15 +703,8 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dst",
             (F.lit(1) + F.expr("100 div n_co")).cast("long").alias("cost"),
         )
-        # src-partitioned before the checkpoint: all 4 relaxation
-        # joins reuse the edge partitioning (see graph_pagerank)
-        .repartition(F.col("src"))
-        .localCheckpoint()
     )
-    # guarded build-side pin for the distance-vector joins — the
-    # graph_pagerank/graph_bfs discipline (ADVICE r13): explicit
-    # vertex-side broadcast only while the edge estimate is inside
-    # broadcast range; past it, leave AQE unhinted.
+    # build side: _guarded_vertex_pick, on the laid-out edge estimate
     pick = _guarded_vertex_pick(spark, edges)
     dist = (
         lf.agg(F.min("l_partkey").alias("node"))
@@ -763,11 +735,8 @@ def _lpa_oracle(n_rounds: int = 3) -> str:
     label set, so an LSH-free iterative graph op gets a full hash
     check."""
     parts = [
-        """
-edges AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
+        _EDGES_CTE
+        + """
 l0 AS (SELECT DISTINCT src AS node, src AS label FROM edges)"""
     ]
     for i in range(1, n_rounds + 1):
@@ -799,32 +768,19 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`llm_dedup_components` is the fixpoint variant of this same
     pattern).
 
-    Scale: the edge list is hash-partitioned on src BEFORE its one
-    checkpoint (the `graph_pagerank` discipline) so all rounds
-    reuse one edge exchange; per round only the node-label vector
-    moves — one join + one aggregate shuffled on the node key, and
-    per-round localCheckpoint keeps the plan from growing with
-    iteration count."""
+    Scale: the edges take `_edge_layout`, so all rounds reuse one
+    edge exchange; per round only the node-label vector moves — one
+    join + one aggregate shuffled on the node key, and per-round
+    localCheckpoint keeps the plan from growing with iteration
+    count."""
     edges_raw = _copurchase_edges(spark, sf_dir)
-    edges = edges_raw.repartition(F.col("src")).localCheckpoint()
+    edges = _edge_layout(edges_raw)
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("label"))
     )
-    # BROADCAST the vertex-sized label vector while the edge
-    # estimate is in broadcast range (kcore/pagerank-delta
-    # treatment, made mandatory in r13): the per-round checkpoints
-    # preserve source stats, and the sf0.1 edge scratch's file-size
-    # estimate sits ~2% UNDER the 10 MB auto-broadcast threshold —
-    # so in rounds >= 2, where the label side carries an inflated
-    # join-output estimate, the planner flipped the build side to
-    # the 2.39M-row EDGE table and OOM'd a default-memory driver
-    # (the build side of a fact-table join must never ride on a
-    # file-size coin-flip). Past broadcast range the hint is
-    # withheld (ADVICE r13): no side is statically buildable, and
-    # an unconditional hint would override a disabled-auto-broadcast
-    # session and hit the 8 GB broadcast cap past ~1e8 vertices.
+    # build side: _guarded_vertex_pick, on the raw scratch estimate
     pick = _guarded_vertex_pick(spark, edges_raw)
     for _ in range(3):
         nbr_min = (
@@ -965,11 +921,8 @@ def _kcore_oracle(n_rounds: int = 5) -> str:
     CTEs are MATERIALIZED because each feeds three consumers in the
     next round (the two endpoint joins and the split)."""
     parts = [
-        """
-edges AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
+        _EDGES_CTE
+        + """
 kth AS (SELECT (3 * count(*)) // (4 * count(DISTINCT src)) AS k
         FROM edges),
 a0 AS MATERIALIZED (SELECT DISTINCT src AS node FROM edges)"""
@@ -1021,18 +974,13 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     callers needing exact coreness use `graph_kcore_exact`, the
     fixpoint twin (same peel core, convergence-guarded).
 
-    Scale: edges are hash-partitioned on src before their ONE
-    checkpoint (the `graph_pagerank` discipline); per round the
-    only moving state is the alive-node vector — two semi-shaped
-    equi-joins to restrict edges, one degree aggregate on src, and
-    one checkpointed (node, degree) frame per round that both the
-    doomed and survivor splits read, so late-round plans don't
-    re-derive earlier rounds' degree joins at action time."""
-    edges = (
-        _copurchase_edges(spark, sf_dir)
-        .repartition(F.col("src"))
-        .localCheckpoint()
-    )
+    Scale: the edges take `_edge_layout`; per round the only moving
+    state is the alive-node vector — two semi-shaped equi-joins to
+    restrict edges, one degree aggregate on src, and one
+    checkpointed (node, degree) frame per round that both the doomed
+    and survivor splits read, so late-round plans don't re-derive
+    earlier rounds' degree joins at action time."""
+    edges = _edge_layout(_copurchase_edges(spark, sf_dir))
     return _kcore_peel(edges, _kcore_threshold(edges), n_rounds=5)
 
 
@@ -1074,20 +1022,13 @@ def _kcore_peel(
     r = 0
     while True:
         r += 1
-        # BROADCAST the vertex-sized alive set (r13, the same
-        # lesson as pagerank_delta's contribution vector): the
+        # BROADCAST the vertex-sized alive set (r13), for the
+        # reason `_pagerank_delta_iterate` broadcasts its vector: the
         # per-round isEmpty action splits this loop into separate
-        # jobs, so once `alive` outgrows the 10 MB auto-broadcast
-        # threshold each round re-paid TWO full edge-set
-        # exchange+sorts (sf10 smoke: 273 s isolated, superlinear
-        # d2 18.6x). Broadcasting keeps every round a map-side hash
-        # probe of the checkpointed edges; only the vertex-sized
-        # partial-agg output ever shuffles. Same memory bound as
-        # the pagerank-delta vector: valid while the alive set fits
-        # driver/executor memory (~1e8 nodes; Spark hard-caps
-        # broadcasts at 8 GB) — past that, persist edges bucketed
-        # by src/dst so a shuffled-hash join needs no per-round
-        # edge exchange instead of hinting broadcast.
+        # jobs, so once `alive` outgrew the 10 MB threshold each
+        # round re-paid TWO full edge-set exchange+sorts (sf10 smoke:
+        # 273 s isolated, superlinear d2 18.6x). Same ~1e8-node
+        # memory bound and past-it remedy (edges bucketed by src/dst).
         deg = (
             edges.join(
                 F.broadcast(alive.withColumnRenamed("node", "src")), "src"
@@ -1154,11 +1095,7 @@ def graph_kcore_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost is identical to `graph_kcore`: two alive-restriction
     joins + one degree aggregate on the node key, checkpointed
     once per round."""
-    edges = (
-        _copurchase_edges(spark, sf_dir)
-        .repartition(F.col("src"))
-        .localCheckpoint()
-    )
+    edges = _edge_layout(_copurchase_edges(spark, sf_dir))
     return _kcore_peel(
         edges, _kcore_threshold(edges), n_rounds=None, oracle_unroll=16
     )

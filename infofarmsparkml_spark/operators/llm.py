@@ -367,17 +367,19 @@ FROM reach GROUP BY src
 def llm_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L3: duplicate-cluster resolution — connected components over
     the near-dup candidate graph by iterative min-label propagation
-    (pure DataFrame ops, no GraphX). Converges in graph-diameter
-    rounds; each round is one join + agg, with localCheckpoint
-    truncating lineage so 100-TB-scale iteration doesn't replay the
-    whole DAG. Oracle: transitive closure via recursive CTE."""
+    (pure DataFrame ops, no GraphX). Runs until no label changes:
+    labels only decrease over a finite id set, so it always stops,
+    after graph-diameter rounds. Each round is one join + agg, with
+    localCheckpoint truncating lineage so 100-TB-scale iteration
+    doesn't replay the whole DAG. Oracle: transitive closure via
+    recursive CTE."""
     docs = load_table(spark, sf_dir, "documents")
     edges = _signature_edges(spark, sf_dir)
     edges = edges.localCheckpoint(eager=True)
     labels = docs.select(
         F.col("doc_id").alias("node"), F.col("doc_id").alias("component")
     )
-    for _ in range(20):
+    while True:
         nbr = (
             edges.join(labels, edges.v == labels.node)
             .groupBy("u")

@@ -450,27 +450,17 @@ def test_simhash_similar_docs_have_close_fingerprints(spark, sf_dir):
 
 
 def test_pagerank_known_answer_path_graph(spark):
-    """3-node path a-b-c (symmetric): numpy power iteration with the
-    same update must match the DataFrame loop to float tolerance."""
-    import numpy as np
+    """3-node path a-b-c (symmetric): a plain-Python power iteration
+    with the same update must match `graph_pagerank`'s own loop
+    (`_pagerank_iterate`, identity build-side pick) to float
+    tolerance."""
+    from infofarmsparkml_spark.operators.graph import _pagerank_iterate
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 1), (2, 3), (3, 2)], "src int, dst int"
     )
-    from pyspark.sql import functions as F
-
-    out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    ranks = out_deg.select("src", F.lit(1.0).alias("rank"))
+    ranks = _pagerank_iterate(edges, lambda df: df)
     d = 0.85
-    for _ in range(10):
-        contribs = (
-            edges.join(ranks, "src")
-            .join(out_deg, "src")
-            .select("dst", (F.col("rank") / F.col("out_deg")).alias("c"))
-        )
-        ranks = contribs.groupBy(F.col("dst").alias("src")).agg(
-            (F.lit(1.0 - d) + F.lit(d) * F.sum("c")).alias("rank")
-        )
     got = {r["src"]: r["rank"] for r in ranks.collect()}
 
     deg = {1: 1, 2: 2, 3: 1}
@@ -1355,6 +1345,39 @@ def test_cc_star_equals_minlabel_twin(spark, sf_dir):
     assert a == b and a
 
 
+def test_components_run_to_fixpoint_on_25_doc_chain(spark, tmp_path):
+    """A 25-doc chain whose neighbours alternately share a prefix and
+    a suffix signature has diameter 24: min-label propagation must
+    run until no label changes (a round cap would leave the far end
+    mislabeled), and both component algorithms must equal the
+    recursive-CTE oracle on every doc."""
+    import duckdb
+
+    from infofarmsparkml_spark.operators.llm import _CC_ORACLE
+
+    path = tmp_path / "documents.parquet"
+    con = duckdb.connect()
+    con.execute("CREATE TABLE d (doc_id BIGINT, text VARCHAR)")
+    con.executemany(
+        "INSERT INTO d VALUES (?, ?)",
+        [
+            (i, f"p{2 * (i // 2)} x x s{2 * ((i + 1) // 2)} y y")
+            for i in range(25)
+        ],
+    )
+    con.execute(f"COPY d TO '{path}' (FORMAT PARQUET)")
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+    want = {tuple(r) for r in con.execute(_CC_ORACLE).fetchall()}
+    con.close()
+    assert want == {(i, 0) for i in range(25)}
+    for op in ("llm_dedup_components", "graph_cc_star"):
+        got = {
+            (r.doc_id, r.component)
+            for r in q(op)(spark, str(tmp_path)).collect()
+        }
+        assert got == want, (op, sorted(got - want))
+
+
 def test_star_contract_chain_graph_logarithmic(spark):
     """The O(log n) claim, exercised on the structure it exists for:
     a 64-node chain (diameter 63 — min-label's worst case at ~63
@@ -1525,16 +1548,13 @@ def test_pagerank_delta_converges_early_on_fixture(spark, sf_dir):
     fails loudly; parity itself is cap-safe by construction."""
     from infofarmsparkml_spark.operators.graph import (
         _copurchase_edges,
+        _edge_layout,
         _pagerank_delta_iterate,
     )
-    from pyspark.sql import functions as F
 
-    edges = (
-        _copurchase_edges(spark, sf_dir)
-        .repartition(F.col("src"))
-        .localCheckpoint()
+    _, rounds_run = _pagerank_delta_iterate(
+        _edge_layout(_copurchase_edges(spark, sf_dir))
     )
-    _, rounds_run = _pagerank_delta_iterate(edges)
     assert 3 <= rounds_run <= 6, rounds_run
 
 

@@ -658,7 +658,7 @@ def test_checkpointed_ops_do_not_rescan(spark, sf_dir):
         "llm_minhash_lsh_dedup": 1,   # tok_sets checkpointed
         "llm_ngram_containment": 1,   # grams + rare checkpointed
         "etl_cdc_apply": 1,           # fixture changelog checkpointed
-        "graph_triangles": 2,         # und + fwd checkpointed
+        "graph_triangles": 0,         # und + fwd checkpointed
         "graph_triangles_doulion": 0,  # sampled und + fwd checkpointed
         "dq_referential_integrity": 5,  # 5 tables, each scanned once
         # edges + every per-round survivor frame checkpointed: the
@@ -669,6 +669,13 @@ def test_checkpointed_ops_do_not_rescan(spark, sf_dir):
         # checkpointed rank vector: 0 parquet scans, no edge-join
         # re-derivation at action time (r12)
         "graph_pagerank_delta": 0,
+        # _edge_layout checkpoints the edges and every loop
+        # checkpoints its vertex state: no parquet scan at action time
+        "graph_pagerank": 0,
+        "graph_bfs": 0,
+        "graph_sssp_weighted": 0,
+        "graph_label_propagation": 0,
+        "graph_kcore_exact": 0,
     }
     for name, max_scans in bounds.items():
         plan = explain_str(q(name)(spark, sf_dir), "simple")
