@@ -194,9 +194,7 @@ pr{i} AS (
     )
 
 
-def _pagerank_iterate(
-    edges: DataFrame, pick, n_iter: int = 10, d: float = 0.85
-) -> DataFrame:
+def _pagerank_iterate(edges: DataFrame, pick) -> DataFrame:
     """Fixed-round PageRank core of `graph_pagerank`, shared with the
     known-answer test so the test exercises THE operator's
     arithmetic: contribution = join ranks→edges, new rank =
@@ -206,7 +204,8 @@ def _pagerank_iterate(
     driver, not the data, becomes the bottleneck. Returns (src, rank)."""
     out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
     ranks = out_deg.select("src", F.lit(1.0).alias("rank"))
-    for i in range(n_iter):
+    d = 0.85
+    for i in range(10):
         contribs = (
             edges.join(pick(ranks), "src")
             .join(pick(out_deg), "src")
