@@ -862,7 +862,7 @@ def _star_contract(sym: DataFrame) -> tuple[DataFrame, int]:
         .localCheckpoint(eager=True)
     )
     rounds = 0
-    for _ in range(16):
+    while True:  # alternation always converges (Kiveris et al., SoCC 2014)
         rounds += 1
         # LARGE-STAR: m = min(Γ(u) ∪ {u}); (v, m) for v ∈ Γ(u), v > u.
         # m <= u < v, so no self-loops.

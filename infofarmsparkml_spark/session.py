@@ -44,10 +44,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        # events.ts is parquet TIMESTAMP(NANOS). Some Spark versions
-        # honor this conf (→ BIGINT ns), others ignore it (4.1.2 →
-        # µs TIMESTAMP_NTZ); catalog._load_events dispatches on the
-        # OBSERVED dtype so either works. Kept for older environments.
+        # events.ts may be written as parquet TIMESTAMP(NANOS) (the
+        # current files store µs). Some Spark versions honor this conf
+        # (→ BIGINT ns), others ignore it (4.1.2 → µs TIMESTAMP_NTZ);
+        # catalog._us_ts dispatches on the OBSERVED dtype so either
+        # works. Kept for older environments.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     for k, v in (extra_conf or {}).items():

@@ -33,19 +33,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from infofarmsparkml_spark.registry import query
 
-def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-
-
 _SOURCE_OPTIONS: dict[str, str] = {}
 
 
@@ -73,43 +60,28 @@ class source_options:
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events fixture, normalized to a µs
-    TimestampType identically to the batch catalog.
+    """readStream over the events fixture, its ts normalized to µs
+    TimestampType by the batch catalog's ``_us_ts``.
 
-    events.ts is parquet TIMESTAMP(NANOS); whether Spark surfaces it
-    as BIGINT-of-ns (``nanosAsLong`` honored) or as a µs-truncated
-    TIMESTAMP_NTZ (current Spark 4.1.2, where that conf is a no-op)
-    varies by environment. Probe the BATCH read once — a readStream
-    schema must match what the source actually yields, and declaring
-    LongType when the reader produces µs silently compresses every
-    timestamp 1000× — then declare the streaming schema to match and
-    branch on the observed dtype.
-
-    ``nanosAsLong`` is set (best-effort) before the probe: on Spark
-    builds that honor the conf, reading TIMESTAMP(NANOS) without it
-    throws [PARQUET_TYPE_ILLEGAL] before dispatch can run."""
-    from ..catalog import _set_nanos_as_long
+    A readStream schema must match what the source actually yields —
+    declaring LongType when the reader produces µs silently
+    compresses every timestamp 1000× — so the stream declares the
+    batch read's footer schema, probed after the same
+    ``_set_nanos_as_long`` as the batch catalog.
+    "events*.parquet": the sf fixtures match only events.parquet;
+    the multi-batch witnesses feed a tmp dir of events{0..n}.parquet
+    splits of the same rows (r16)."""
+    from ..catalog import _set_nanos_as_long, _us_ts
 
     _set_nanos_as_long(spark)
-    probed = dict(spark.read.parquet(f"{sf_dir}/events*.parquet").dtypes)["ts"]
-    # "events*.parquet": the sf fixtures match only events.parquet;
-    # the multi-batch witnesses feed a tmp dir of events{0..n}.parquet
-    # splits of the same rows (r16)
-    if probed == "bigint":
-        raw = (
-            spark.readStream.schema(_events_raw_schema(T.LongType()))
-            .option("pathGlobFilter", "events*.parquet")
-            .options(**_SOURCE_OPTIONS)
-            .parquet(sf_dir)
-        )
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    schema = spark.read.parquet(f"{sf_dir}/events*.parquet").schema
     raw = (
-        spark.readStream.schema(_events_raw_schema(T.TimestampNTZType()))
+        spark.readStream.schema(schema)
         .option("pathGlobFilter", "events*.parquet")
         .options(**_SOURCE_OPTIONS)
         .parquet(sf_dir)
     )
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return _us_ts(raw)
 
 
 class _state_sized:
@@ -384,88 +356,6 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(deduped, "ifsml_stream_dedup", "append")
 
 
-@query(
-    "stream_stateful_custom",
-    oracle="""
-SELECT user_id,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       ROUND(SUM(value), 4) AS total_value,
-       MAX(CAST(ts AS TIMESTAMP)) AS last_seen
-FROM events
-GROUP BY user_id
-""",
-)
-def stream_stateful_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T6: arbitrary per-key state via applyInPandasWithState — a
-    running per-user accumulator (count, value sum, last-seen).
-    With one availableNow batch the emitted state equals the batch
-    aggregate, which gives the oracle; multi-batch state evolution
-    is exercised in tests/test_streaming.py."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    ev = read_events_stream(spark, sf_dir)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("total_value", T.DoubleType()),
-            T.StructField("last_seen", T.TimestampType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("total", T.DoubleType()),
-            T.StructField("last_us", T.LongType()),
-        ]
-    )
-
-    def track_user(key, pdfs, state: GroupState):
-        n, total, last_us = (
-            state.get if state.exists else (0, 0.0, 0)
-        )
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-            last_us = max(last_us, int(pdf["ts"].max().value // 1000))
-        state.update((n, total, last_us))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [round(total, 4)],
-                "last_seen": [pd.Timestamp(last_us, unit="us")],
-            }
-        )
-
-    tracked = (
-        ev.groupBy("user_id")
-        .applyInPandasWithState(
-            track_user,
-            out_schema,
-            state_schema,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
-    return run_to_memory(tracked, "ifsml_stream_stateful", "update")
-
-
-def _fold_user_frames(n, total, last_us, pdfs):
-    """The per-user accumulator fold shared by BOTH stateful-API
-    twins (T6 applyInPandasWithState, T6b transformWithState):
-    count, value sum, last-seen µs over a sequence of pandas
-    batches."""
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-        last_us = max(last_us, int(pdf["ts"].max().value // 1000))
-    return n, total, last_us
-
-
 _TWS_OUT_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -483,13 +373,78 @@ _TWS_STATE_SCHEMA = T.StructType(
 )
 
 
+def _track_user(key, acc, pdfs):
+    """The per-user tracker shared by BOTH stateful-API twins (T6
+    applyInPandasWithState, T6b transformWithState): fold count,
+    value sum and last-seen µs over a sequence of pandas batches
+    onto ``acc`` (``_TWS_STATE_SCHEMA``; None for a new key) and
+    return the new accumulator with its ``_TWS_OUT_SCHEMA`` row."""
+    import pandas as pd
+
+    n, total, last_us = acc if acc is not None else (0, 0.0, 0)
+    for pdf in pdfs:
+        n += len(pdf)
+        total += float(pdf["value"].sum())
+        last_us = max(last_us, int(pdf["ts"].max().value // 1000))
+    row = pd.DataFrame(
+        {
+            "user_id": [key[0]],
+            "n_events": [n],
+            "total_value": [round(total, 4)],
+            "last_seen": [pd.Timestamp(last_us, unit="us")],
+        }
+    )
+    return (n, total, last_us), row
+
+
+def _track_users(ev: DataFrame) -> DataFrame:
+    """``_track_user`` per user through applyInPandasWithState
+    (update mode, no timeout)."""
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    # the plan's FlatMapGroupsInPandasWithState node prints this name,
+    # so a rename changes the plan
+    def track_user(key, pdfs, state: GroupState):
+        acc, row = _track_user(key, state.get if state.exists else None, pdfs)
+        state.update(acc)
+        yield row
+
+    return ev.groupBy("user_id").applyInPandasWithState(
+        track_user,
+        _TWS_OUT_SCHEMA,
+        _TWS_STATE_SCHEMA,
+        "update",
+        GroupStateTimeout.NoTimeout,
+    )
+
+
+@query(
+    "stream_stateful_custom",
+    oracle="""
+SELECT user_id,
+       CAST(COUNT(*) AS BIGINT) AS n_events,
+       ROUND(SUM(value), 4) AS total_value,
+       MAX(CAST(ts AS TIMESTAMP)) AS last_seen
+FROM events
+GROUP BY user_id
+""",
+)
+def stream_stateful_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """T6: arbitrary per-key state via applyInPandasWithState — a
+    running per-user accumulator (count, value sum, last-seen).
+    With one availableNow batch the emitted state equals the batch
+    aggregate, which gives the oracle; multi-batch state evolution
+    is exercised in tests/test_streaming.py."""
+    tracked = _track_users(read_events_stream(spark, sf_dir))
+    return run_to_memory(tracked, "ifsml_stream_stateful", "update")
+
+
 def make_user_tracker_processor():
     """Build the StatefulProcessor for `stream_stateful_tws` —
     deferred import so environments without the TWS runtime deps can
     still import this module. The class is unit-tested directly
     (tests/test_streaming.py drives init/handleInputRows against a
     stub handle), independent of whether the runtime can execute it."""
-    import pandas as pd
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,
@@ -500,19 +455,10 @@ def make_user_tracker_processor():
             self.state = handle.getValueState("acc", _TWS_STATE_SCHEMA)
 
         def handleInputRows(self, key, rows, timerValues):
-            n, total, last_us = (
-                self.state.get() if self.state.exists() else (0, 0.0, 0)
-            )
-            n, total, last_us = _fold_user_frames(n, total, last_us, rows)
-            self.state.update((n, total, last_us))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 4)],
-                    "last_seen": [pd.Timestamp(last_us, unit="us")],
-                }
-            )
+            acc = self.state.get() if self.state.exists() else None
+            acc, row = _track_user(key, acc, rows)
+            self.state.update(acc)
+            yield row
 
         def close(self) -> None:
             pass
@@ -551,19 +497,17 @@ def stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same per-user accumulator expressed as a StatefulProcessor
     (init → getValueState, handleInputRows folds each batch, update
     mode, TimeMode None) so BOTH arbitrary-state APIs are exercised.
-    The fold itself is shared code (`_fold_user_frames`), so the two
-    APIs provably compute the same thing, and the oracle is the same
-    batch aggregate as T6.
+    The tracker itself is shared code (`_track_user`: the fold and
+    the output row), so the two APIs provably compute the same thing,
+    and the oracle is the same batch aggregate as T6.
 
     Environment gate: TWS needs RocksDB state stores (bundled) AND
     the protobuf Python package for its state-server protocol —
     absent in this container (`tws_runtime_available`), so execution
-    falls back to the applyInPandasWithState engine with the
-    IDENTICAL fold; on a protobuf-equipped cluster the TWS path runs
+    falls back to T6's applyInPandasWithState engine
+    (`_track_users`); on a protobuf-equipped cluster the TWS path runs
     as written. The processor class is unit-tested directly either
     way, and the gate decision is itself asserted in tests."""
-    import pandas as pd
-
     ev = read_events_stream(spark, sf_dir)
     if tws_runtime_available():
         # TWS requires the RocksDB provider; restore the session's
@@ -590,29 +534,7 @@ def stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             else:
                 spark.conf.set(conf_key, prev)
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def track_user(key, pdfs, state: GroupState):
-        n, total, last_us = state.get if state.exists else (0, 0.0, 0)
-        n, total, last_us = _fold_user_frames(n, total, last_us, pdfs)
-        state.update((n, total, last_us))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [round(total, 4)],
-                "last_seen": [pd.Timestamp(last_us, unit="us")],
-            }
-        )
-
-    tracked = ev.groupBy("user_id").applyInPandasWithState(
-        track_user,
-        _TWS_OUT_SCHEMA,
-        _TWS_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
-    return run_to_memory(tracked, "ifsml_stream_tws", "update")
+    return run_to_memory(_track_users(ev), "ifsml_stream_tws", "update")
 
 
 @query(
@@ -641,6 +563,45 @@ def stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(joined, "ifsml_stream_join", "append")
 
 
+def _view_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """The T8 family's view→purchase attribution (why it is bounded:
+    `stream_stream_join`): views and purchases each read as their own
+    1-hour-watermarked stream, joined per user when the purchase lands
+    within 30 minutes after the view. ``how`` is "inner" (T8),
+    "left_outer" (T8b) or "full_outer" (T8c)."""
+    views = (
+        read_events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "view")
+        .withWatermark("ts", "1 hour")
+        .select(
+            F.col("event_id").alias("view_id"),
+            F.col("user_id"),
+            F.col("ts").alias("view_ts"),
+        )
+    )
+    purchases = (
+        read_events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "purchase")
+        .withWatermark("ts", "1 hour")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user_id"),
+            F.col("ts").alias("purchase_ts"),
+        )
+    )
+    return views.join(
+        purchases,
+        F.expr(
+            """
+            user_id = p_user_id
+            AND purchase_ts >= view_ts
+            AND purchase_ts <= view_ts + INTERVAL 30 MINUTES
+            """
+        ),
+        how,
+    )
+
+
 @query(
     "stream_stream_join",
     oracle="""
@@ -663,37 +624,9 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the watermark horizon — the property that makes stream-stream
     joins feasible on unbounded input. Single-batch availableNow
     execution equals the batch self-join, which is the oracle."""
-    views = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id"),
-            F.col("ts").alias("view_ts"),
-        )
+    joined = _view_purchase_join(spark, sf_dir, "inner").select(
+        "view_id", "purchase_id", "user_id", "view_ts", "purchase_ts"
     )
-    purchases = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-    )
-    joined = views.join(
-        purchases,
-        F.expr(
-            """
-            user_id = p_user_id
-            AND purchase_ts >= view_ts
-            AND purchase_ts <= view_ts + INTERVAL 30 MINUTES
-            """
-        ),
-        "inner",
-    ).select("view_id", "purchase_id", "user_id", "view_ts", "purchase_ts")
     return run_to_memory(joined, "ifsml_stream_stream_join", "append")
 
 
@@ -915,37 +848,9 @@ def stream_stream_leftouter(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the final watermark. Verified row-identical at
     sf0.001/0.01/0.1 before wiring in — the same derivation
     discipline as `stream_watermark_late`."""
-    views = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id"),
-            F.col("ts").alias("view_ts"),
-        )
+    joined = _view_purchase_join(spark, sf_dir, "left_outer").select(
+        "view_id", "purchase_id", "user_id", "view_ts", "purchase_ts"
     )
-    purchases = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-    )
-    joined = views.join(
-        purchases,
-        F.expr(
-            """
-            user_id = p_user_id
-            AND purchase_ts >= view_ts
-            AND purchase_ts <= view_ts + INTERVAL 30 MINUTES
-            """
-        ),
-        "left_outer",
-    ).select("view_id", "purchase_id", "user_id", "view_ts", "purchase_ts")
     return run_to_memory(joined, "ifsml_stream_stream_lo", "append")
 
 
@@ -1006,37 +911,7 @@ def stream_stream_fullouter(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair with it). The oracle encodes exactly those two cutoffs
     against the final global watermark; verified row-identical at
     sf0.001/0.01/0.1 before wiring in."""
-    views = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id"),
-            F.col("ts").alias("view_ts"),
-        )
-    )
-    purchases = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-    )
-    joined = views.join(
-        purchases,
-        F.expr(
-            """
-            user_id = p_user_id
-            AND purchase_ts >= view_ts
-            AND purchase_ts <= view_ts + INTERVAL 30 MINUTES
-            """
-        ),
-        "full_outer",
-    ).select(
+    joined = _view_purchase_join(spark, sf_dir, "full_outer").select(
         "view_id", "purchase_id", "user_id", "p_user_id",
         "view_ts", "purchase_ts",
     )

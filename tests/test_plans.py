@@ -20,14 +20,33 @@ def n_exchanges(plan: str) -> int:
     """Count REAL shuffle nodes (ADVICE r16: bare
     plan.count("Exchange") also matches ReusedExchange and any
     AQE-era node rename). Matches the node-specific partitioning
-    forms and excludes Reused/Broadcast exchanges."""
-    return len(
-        re.findall(
-            r"(?<!Reused)Exchange (hashpartitioning|rangepartitioning|"
-            r"SinglePartition|RoundRobinPartitioning)",
-            plan,
-        )
+    forms line by line and skips ReusedExchange lines, which embed
+    the exchange they reuse ('ReusedExchange [...], Exchange
+    hashpartitioning(...)'); Broadcast exchanges never match."""
+    shuffle = re.compile(
+        r"Exchange (hashpartitioning|rangepartitioning|"
+        r"SinglePartition|RoundRobinPartitioning)"
     )
+    return sum(
+        len(shuffle.findall(line))
+        for line in plan.splitlines()
+        if "ReusedExchange" not in line
+    )
+
+
+def test_n_exchanges_skips_reused_exchange():
+    """A reused shuffle is not a second shuffle, even though its plan
+    line quotes the original exchange's partitioning."""
+    plan = "\n".join(
+        [
+            "SortMergeJoin [k#1], [k#7], Inner",
+            ":- Exchange hashpartitioning(k#1, 8), ENSURE_REQUIREMENTS, [plan_id=10]",
+            "+- ReusedExchange [k#7, v#8], Exchange hashpartitioning(k#1, 8), "
+            "ENSURE_REQUIREMENTS, [plan_id=10]",
+            "   +- BroadcastExchange HashedRelationBroadcastMode(List(k#1),false)",
+        ]
+    )
+    assert n_exchanges(plan) == 1
 
 
 def n_windows(plan: str) -> int:

@@ -233,13 +233,15 @@ def test_events_ts_sane_in_both_read_paths(spark, sf_dir):
 
 def test_events_loader_bigint_branch(spark, sf_dir):
     """Cover the BIGINT-ns branch of the dtype dispatch explicitly:
-    environments where nanosAsLong IS honored hand _load_events a
-    bigint column, and its `div 1000` path must agree with what the
+    environments where nanosAsLong IS honored hand _load_events and
+    read_events_stream a bigint column, and the `div 1000` path of
+    both the batch and the stream read must agree with what the
     native read of the same data produces."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from infofarmsparkml_spark.catalog import _load_events
+    from infofarmsparkml_spark.streaming.ops import read_events_stream, run_to_memory
 
     native = load_table(spark, sf_dir, "events")
     expected = sorted(
@@ -273,6 +275,11 @@ def test_events_loader_bigint_branch(spark, sf_dir):
         (r["event_id"], r["ts"]) for r in loaded.select("event_id", "ts").collect()
     )
     assert got == expected
+
+    stream = read_events_stream(spark, d).select("event_id", "ts")
+    assert stream.schema["ts"].dataType.typeName() == "timestamp"
+    streamed = run_to_memory(stream, "events_bigint_stream", "append")
+    assert sorted((r["event_id"], r["ts"]) for r in streamed.collect()) == expected
 
 
 def test_stream_ewma_matches_python_fold(spark, sf_dir):
