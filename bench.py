@@ -92,6 +92,10 @@ def main() -> None:
         # was competing and the numbers overstate query cost
         "loadavg_1m_start": load_start,
         "loadavg_1m_end": round(os.getloadavg()[0], 2),
+        # the session's task slots and master, so a reader can check
+        # that SPARK_GRAFT_CPUS reached the session
+        "cpus": spark.sparkContext.defaultParallelism,
+        "master": spark.sparkContext.master,
     }
     if errors:
         out["errors"] = errors

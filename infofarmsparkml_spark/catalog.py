@@ -67,13 +67,15 @@ def _set_nanos_as_long(spark: SparkSession) -> None:
     before any read of events.parquet (batch or stream).
 
     events.ts may be written as parquet TIMESTAMP(NANOS) (the current
-    fixtures store µs). On Spark 4.1.2 the conf is a no-op (NANOS
-    arrive as µs TIMESTAMP_NTZ); on builds that honor it, it is the
-    difference between a BIGINT-of-ns read and a
-    [PARQUET_TYPE_ILLEGAL] failure, and external harnesses run these
-    queries on their own vanilla sessions — the dtype dispatch in
-    ``_us_ts`` can only run if the read succeeds. Wrapped because
-    some builds mark retired confs non-settable."""
+    fixtures store µs). Spark 4.1.2 honors the conf: unset, a
+    ``TIMESTAMP(NANOS,false)`` column fails the read with
+    [PARQUET_TYPE_ILLEGAL]; set, it reads as a BIGINT of ns, which
+    ``_us_ts`` turns into µs. External harnesses run these queries on
+    their own vanilla sessions, so the conf is set here rather than
+    relied on from ``get_spark``; the dtype dispatch in ``_us_ts`` can
+    only run if the read succeeds (tested in
+    ``tests/test_streaming.py::test_events_loader_nanos_timestamp``).
+    Wrapped because some builds mark retired confs non-settable."""
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
@@ -82,10 +84,10 @@ def _set_nanos_as_long(spark: SparkSession) -> None:
 
 def _us_ts(df: DataFrame) -> DataFrame:
     """Normalize events.ts to µs TimestampType by its OBSERVED dtype:
-    a BIGINT of ns-since-epoch where ``nanosAsLong`` is honored, a
-    µs-truncated TIMESTAMP_NTZ otherwise. Both land bit-identical to
-    DuckDB's ``CAST(ts AS TIMESTAMP)`` for post-epoch data, so oracle
-    SQL wraps ts the same way (verified in tests)."""
+    a BIGINT of ns-since-epoch for a TIMESTAMP(NANOS) file (read under
+    ``nanosAsLong``), a TIMESTAMP_NTZ for a µs file. Both land
+    bit-identical to DuckDB's ``CAST(ts AS TIMESTAMP)`` for post-epoch
+    data, so oracle SQL wraps ts the same way (verified in tests)."""
     from pyspark.sql import functions as F
 
     if dict(df.dtypes)["ts"] == "bigint":

@@ -3,7 +3,9 @@
 Parquet is the primary source: Catalyst pushes predicates into the
 scan (row-group skipping) and prunes columns (ReadSchema), which is
 what makes S5's plan the one we'd want at 100 TB. CSV/JSON sources
-use explicit schemas — no inference at scale.
+use explicit schemas — no inference at scale. Every sink's re-read
+declares the schema of the frame it just wrote, so no re-read starts
+a footer-inference job.
 """
 
 from __future__ import annotations
@@ -82,32 +84,32 @@ FROM lineitem GROUP BY l_returnflag
 def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4: partitioned parquet sink + re-read. Partitioning by a
     low-cardinality column is the at-scale layout choice: readers
-    of one flag touch 1/3 of the files (partition pruning)."""
+    of one flag touch 1/3 of the files (partition pruning). The
+    re-read declares lineitem's schema, so the build starts only the
+    write job."""
     out = scratch_dir("lineitem_by_flag", sf_dir)
-    (
-        load_table(spark, sf_dir, "lineitem")
-        .write.mode("overwrite")
-        .partitionBy("l_returnflag")
-        .parquet(out)
-    )
-    reread = spark.read.parquet(out)
+    li = load_table(spark, sf_dir, "lineitem")
+    li.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
+    reread = spark.read.schema(li.schema).parquet(out)
     return reread.groupBy("l_returnflag").agg(F.count(F.lit(1)).alias("n_rows"))
 
 
-def _lineitem_by_returnflag(spark: SparkSession, sf_dir: str) -> str:
-    """Path of lineitem hive-partitioned by l_returnflag, shared by
+def _lineitem_by_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """lineitem hive-partitioned by l_returnflag, shared by
     `scan_partition_pruned` and `join_dpp`. The copy is a pure
     function of the immutable fixture, so it is written once per
     scratch lifetime, not per run (the rewrite was 5.6 s of
     join_dpp's 5.7 s at sf0.1); materialize_once makes the write
-    race-safe across processes."""
-    return materialize_once(
+    race-safe across processes. It is read back under lineitem's
+    declared schema, so the read starts no footer-inference job."""
+    li = load_table(spark, sf_dir, "lineitem")
+    path = materialize_once(
         scratch_dir("li_by_returnflag", sf_dir),
-        lambda tmp: load_table(spark, sf_dir, "lineitem")
-        .write.mode("overwrite")
+        lambda tmp: li.write.mode("overwrite")
         .partitionBy("l_returnflag")
         .parquet(tmp),
     )
+    return spark.read.schema(li.schema).parquet(path)
 
 
 @query(
@@ -126,7 +128,7 @@ def scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py), so at 100 TB the other flags' files are
     never opened, listed row groups only."""
     return (
-        spark.read.parquet(_lineitem_by_returnflag(spark, sf_dir))
+        _lineitem_by_returnflag(spark, sf_dir)
         .filter(F.col("l_returnflag") == "R")
         .groupBy("l_linestatus")
         .agg(
@@ -225,7 +227,7 @@ def join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is THE mechanism that makes star-schema joins affordable
     at 100 TB: the broadcasted dim filter prunes the fact scan
     before it starts."""
-    fact = spark.read.parquet(_lineitem_by_returnflag(spark, sf_dir))
+    fact = _lineitem_by_returnflag(spark, sf_dir)
     flags = spark.createDataFrame(
         [("R", 1), ("A", 0), ("N", 0)], "flag string, keep int"
     )
@@ -276,24 +278,36 @@ GROUP BY o_orderpriority
 )
 def etl_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-files compaction — the lakehouse maintenance job: a
-    fragmented table (simulated with a 64-way repartition write) is
-    rewritten range-partitioned on the sort key into few large
-    files, then audited against the source. Range partitioning
-    keeps each output file a contiguous key span (min/max file
-    stats then prune reads); at 100 TB the repartition count comes
-    from target_file_size, not a constant."""
-    frag = scratch_dir("orders_fragmented", sf_dir)
-    compact = scratch_dir("orders_compacted", sf_dir)
+    fragmented table is rewritten range-partitioned on the sort key
+    into few large files, then audited against the source. Range
+    partitioning keeps each output file a contiguous key span
+    (min/max file stats then prune reads); at 100 TB the
+    repartition count comes from target_file_size, not a constant.
+
+    The fragmented input is simulated with a 64-way repartition
+    write of orders. It is a pure function of the immutable fixture,
+    so it is written once per fixture through materialize_once, as
+    `_lineitem_by_returnflag` is (perfbench `write_stream`, sf0.02 on
+    `local[4]`: query median 2.85 → 0.99 s over 12 pairs). Only this
+    input is cached: every call runs the whole compaction
+    (range-partitioned write, re-read, audit aggregate). Both reads
+    declare orders' schema, so neither starts a footer-inference
+    job."""
     od = load_table(spark, sf_dir, "orders")
-    od.repartition(64).write.mode("overwrite").parquet(frag)
+    frag = materialize_once(
+        scratch_dir("orders_fragmented", sf_dir),
+        lambda tmp: od.repartition(64).write.mode("overwrite").parquet(tmp),
+    )
+    compact = scratch_dir("orders_compacted", sf_dir)
     (
-        spark.read.parquet(frag)
+        spark.read.schema(od.schema)
+        .parquet(frag)
         .repartitionByRange(4, "o_orderkey")
         .sortWithinPartitions("o_orderkey")
         .write.mode("overwrite")
         .parquet(compact)
     )
-    reread = spark.read.parquet(compact)
+    reread = spark.read.schema(od.schema).parquet(compact)
     return reread.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.round(F.sum("o_totalprice"), 2).alias("sum_price"),
@@ -353,8 +367,8 @@ def sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     handles several with one sort). The write is one
     repartitionByRange shuffle on the z-value (sampled range
     boundaries — no single reducer) + an in-partition sort.
-    Returned frame is the re-read content; the oracle proves the
-    round trip lossless. File-bound tightness is asserted in
+    Returned frame is the re-read content, under the schema just
+    written; the oracle proves the round trip lossless. File-bound tightness is asserted in
     tests/test_plans.py from the parquet footers."""
     lf = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity"
@@ -368,7 +382,7 @@ def sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(out)
     )
-    return spark.read.parquet(out)
+    return spark.read.schema(lf.schema).parquet(out)
 
 
 @query(
@@ -427,7 +441,8 @@ def etl_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the difference between a 1-partition backfill and a full
     rewrite. The rewritten partition negates l_quantity so the
     oracle can prove both that 'R' changed and that 'A'/'N' kept
-    their original bytes."""
+    their original bytes. The re-read declares the written schema, so
+    the build starts only its two write jobs."""
     lf = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_returnflag"
     )
@@ -445,7 +460,7 @@ def etl_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
-    reread = spark.read.parquet(out)
+    reread = spark.read.schema(lf.schema).parquet(out)
     return reread.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.when(F.col("l_quantity") < 0, 1).otherwise(0))
@@ -466,7 +481,8 @@ FROM orders GROUP BY o_orderpriority
 def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC source/sink round trip — the second columnar format a
     Spark shop actually meets (Hive estates). Write orders as ORC,
-    re-read, aggregate; the oracle checks the round trip preserved
+    re-read under orders' schema (no footer-inference job),
+    aggregate; the oracle checks the round trip preserved
     every row and value. ORC gets the same vectorized reader,
     predicate pushdown, and column pruning treatment as parquet in
     Spark, so the 100 TB posture is unchanged; the price sum is an
@@ -474,7 +490,7 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     out = scratch_dir("orders_orc", sf_dir)
     orders.write.mode("overwrite").orc(out)
-    reread = spark.read.orc(out)
+    reread = spark.read.schema(orders.schema).orc(out)
     return reread.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
         sum_cents(cents("o_totalprice"), "sum_price", 2),

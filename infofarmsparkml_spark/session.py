@@ -45,10 +45,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # events.ts may be written as parquet TIMESTAMP(NANOS) (the
-        # current files store µs). Some Spark versions honor this conf
-        # (→ BIGINT ns), others ignore it (4.1.2 → µs TIMESTAMP_NTZ);
-        # catalog._us_ts dispatches on the OBSERVED dtype so either
-        # works. Kept for older environments.
+        # current files store µs). Spark 4.1.2 honors this conf: set,
+        # such a column reads as BIGINT ns, which catalog._us_ts turns
+        # into µs; unset, the read fails with PARQUET_TYPE_ILLEGAL.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     for k, v in (extra_conf or {}).items():

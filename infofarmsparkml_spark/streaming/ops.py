@@ -565,13 +565,15 @@ def stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _view_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
     """The T8 family's view→purchase attribution (why it is bounded:
-    `stream_stream_join`): views and purchases each read as their own
-    1-hour-watermarked stream, joined per user when the purchase lands
-    within 30 minutes after the view. ``how`` is "inner" (T8),
-    "left_outer" (T8b) or "full_outer" (T8c)."""
+    `stream_stream_join`): views and purchases are filtered from one
+    events stream, each side 1-hour-watermarked, and joined per user
+    when the purchase lands within 30 minutes after the view. ``how``
+    is "inner" (T8), "left_outer" (T8b) or "full_outer" (T8c). One
+    stream frame feeds both sides, so the events footer is probed
+    once per build, not once per side."""
+    ev = read_events_stream(spark, sf_dir)
     views = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
+        ev.filter(F.col("event_type") == "view")
         .withWatermark("ts", "1 hour")
         .select(
             F.col("event_id").alias("view_id"),
@@ -580,8 +582,7 @@ def _view_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame
         )
     )
     purchases = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
+        ev.filter(F.col("event_type") == "purchase")
         .withWatermark("ts", "1 hour")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -696,7 +697,10 @@ def stream_file_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame
     the row/hash gate. This is the property that matters on a real
     cluster: task retries and job restarts must not double-write —
     Spark's file sink gets it from the checkpointed offset log plus
-    the sink's transactional _spark_metadata commit protocol."""
+    the sink's transactional _spark_metadata commit protocol.
+    Both runs start from one stream frame, so the events footer is
+    probed once, and the sink is read back under that frame's
+    schema."""
     import shutil
 
     from infofarmsparkml_spark.operators._util import scratch_dir
@@ -705,19 +709,21 @@ def stream_file_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame
     ckpt = f"{sink}_ckpt"
     shutil.rmtree(sink, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
+    events = read_events_stream(spark, sf_dir).select(
+        "event_id", "event_type", "value"
+    )
     for _ in range(2):  # second run must be a committed no-op
-        q = (
-            read_events_stream(spark, sf_dir)
-            .select("event_id", "event_type", "value")
-            .writeStream.format("parquet")
+        (
+            events.writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
+            .awaitTermination()
         )
-        q.awaitTermination()
     return (
-        spark.read.parquet(sink)
+        spark.read.schema(events.schema)
+        .parquet(sink)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),

@@ -15,7 +15,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python workers import the engine via the PYTHONPATH they inherit
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, [ROOT, os.environ.get("PYTHONPATH")])
+)
 
 
 def main() -> int:
@@ -72,15 +77,10 @@ def main() -> int:
         print(f"{status} {name}: {results[name]['msg']}", flush=True)
         if not results[name]["ok"]:
             fails.append(name)
-        # Harness hygiene: 257 queries on ONE session accumulate
-        # memory-sink tables (streaming results pinned in driver
-        # memory) and localCheckpoint RDDs (released only when their
-        # Python refs die). Without cleanup the tail of the sweep
-        # degrades — stream_stream_fullouter measured 21.6 s at
-        # sweep position ~230 vs 10.4 s isolated (r6); with per-query
-        # cleanup the tail is flat but the gc itself costs ~0.18 s ×
-        # 257 = 46 s of sweep wall, so it runs every 8th query (≤8
-        # sinks ever live — measured flat tail either way).
+        # Hygiene: memory sinks and localCheckpoint RDDs pile up on one
+        # session and slowed the sweep's tail 2x (stream_stream_fullouter
+        # 21.6 s at ~230 vs 10.4 s alone, r6); a gc every 8th query
+        # (~0.18 s each) keeps the tail flat.
         sdf = None
         if len(results) % 8 == 0:
             import gc

@@ -2134,3 +2134,52 @@ def test_fn_array_long_tokens_null_without_long_word(spark, tmp_path):
         ok, msg = compare_frames(got, con.execute(oracle).fetchdf())
     assert ok, msg
     assert got.set_index("doc_id")["long_tokens"].isna().tolist() == [True, False]
+
+
+def test_compaction_writes_fragmented_input_once(spark, sf_dir, duck):
+    """etl_compact_small_files caches only its simulated fragmented
+    input: the 64-file fragment dir keeps its files across calls,
+    while the 4-file compacted output is rewritten on every call, and
+    both calls match the oracle."""
+    import glob
+    import os
+
+    from infofarmsparkml_spark.operators._util import scratch_dir
+    from infofarmsparkml_spark.verify import compare_frames
+
+    fn, oracle = registry.get("etl_compact_small_files")
+
+    def parts(tag):
+        files = glob.glob(os.path.join(scratch_dir(tag, sf_dir), "part-*"))
+        return {os.path.basename(f): os.stat(f).st_mtime_ns for f in files}
+
+    stamps = []
+    for _ in range(2):
+        ok, msg = compare_frames(
+            fn(spark, sf_dir).toPandas(), duck.execute(oracle).fetchdf()
+        )
+        assert ok, msg
+        stamps.append((parts("orders_fragmented"), parts("orders_compacted")))
+    (frag1, comp1), (frag2, comp2) = stamps
+    assert len(frag1) == 64 and frag2 == frag1
+    assert len(comp1) == 4 and len(comp2) == 4
+    assert min(comp2.values()) > max(comp1.values())
+
+
+@pytest.mark.parametrize(
+    "name, n_jobs", [("sink_parquet", 1), ("etl_partition_overwrite", 2)]
+)
+def test_sink_build_starts_only_its_writes(spark, sf_dir, name, n_jobs):
+    """Building a sink query runs its writes and nothing else: the
+    re-read declares the schema just written, so it starts no
+    footer-inference job."""
+    sc = spark.sparkContext
+    group = f"build-jobs-{name}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        q(name)(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == n_jobs

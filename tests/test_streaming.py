@@ -231,12 +231,11 @@ def test_events_ts_sane_in_both_read_paths(spark, sf_dir):
     assert smin == bmin, "batch and stream reads disagree on min(ts)"
 
 
-def test_events_loader_bigint_branch(spark, sf_dir):
-    """Cover the BIGINT-ns branch of the dtype dispatch explicitly:
-    environments where nanosAsLong IS honored hand _load_events and
-    read_events_stream a bigint column, and the `div 1000` path of
-    both the batch and the stream read must agree with what the
-    native read of the same data produces."""
+def _assert_events_reads_match_native(spark, sf_dir, tag, ts_array):
+    """Rewrite the fixture's events with ``ts_array(µs values)`` as the
+    ts column, then assert that `_load_events` and `read_events_stream`
+    over the rewrite both yield a µs timestamp ts whose sorted
+    ``(event_id, ts)`` rows equal the native read's."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -247,7 +246,6 @@ def test_events_loader_bigint_branch(spark, sf_dir):
     expected = sorted(
         (r["event_id"], r["ts"]) for r in native.select("event_id", "ts").collect()
     )
-    # rebuild the same rows with ts as raw int64 nanoseconds
     rows = native.select(
         "event_id",
         F.unix_micros(F.col("ts")).alias("us"),
@@ -259,14 +257,14 @@ def test_events_loader_bigint_branch(spark, sf_dir):
     tbl = pa.table(
         {
             "event_id": pa.array([r["event_id"] for r in rows], pa.int64()),
-            "ts": pa.array([r["us"] * 1000 for r in rows], pa.int64()),
+            "ts": ts_array([r["us"] for r in rows]),
             "user_id": pa.array([r["user_id"] for r in rows], pa.int64()),
             "event_type": pa.array([r["event_type"] for r in rows], pa.string()),
             "value": pa.array([r["value"] for r in rows], pa.float64()),
             "props": pa.array([r["props"] for r in rows], pa.string()),
         }
     )
-    d = scratch_dir("events_bigint_branch", sf_dir)
+    d = scratch_dir(tag, sf_dir)
     os.makedirs(d, exist_ok=True)
     pq.write_table(tbl, os.path.join(d, "events.parquet"))
     loaded = _load_events(spark, d)
@@ -278,8 +276,50 @@ def test_events_loader_bigint_branch(spark, sf_dir):
 
     stream = read_events_stream(spark, d).select("event_id", "ts")
     assert stream.schema["ts"].dataType.typeName() == "timestamp"
-    streamed = run_to_memory(stream, "events_bigint_stream", "append")
+    streamed = run_to_memory(stream, f"{tag}_stream", "append")
     assert sorted((r["event_id"], r["ts"]) for r in streamed.collect()) == expected
+
+
+def test_events_loader_bigint_branch(spark, sf_dir):
+    """Cover the BIGINT-ns branch of the dtype dispatch explicitly:
+    a plain int64 ns column reaches _load_events and
+    read_events_stream as bigint, and the `div 1000` path of both the
+    batch and the stream read must agree with what the native read
+    of the same data produces."""
+    import pyarrow as pa
+
+    _assert_events_reads_match_native(
+        spark,
+        sf_dir,
+        "events_bigint_branch",
+        lambda us: pa.array([u * 1000 for u in us], pa.int64()),
+    )
+
+
+def test_events_loader_nanos_timestamp(spark, sf_dir):
+    """The path `_set_nanos_as_long` exists for: ts written as parquet
+    TIMESTAMP(NANOS). Spark 4.1.2 fails such a column with
+    PARQUET_TYPE_ILLEGAL unless `nanosAsLong` is set, and with it set
+    reads a bigint of ns, so both read paths take the `div 1000`
+    branch and must equal the native rows. The conf starts unset, as
+    on a vanilla session, so the read paths must set it themselves."""
+    import pyarrow as pa
+
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    prior = spark.conf.get(conf, None)
+    spark.conf.unset(conf)
+    try:
+        _assert_events_reads_match_native(
+            spark,
+            sf_dir,
+            "events_nanos_ts",
+            lambda us: pa.array([u * 1000 for u in us], pa.timestamp("ns")),
+        )
+    finally:
+        if prior is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, prior)
 
 
 def test_stream_ewma_matches_python_fold(spark, sf_dir):
@@ -561,3 +601,30 @@ def test_streaming_restart_recovery_exactly_once(spark, sf_dir, tmp_path):
     }
     assert got == expected
     assert spark.read.parquet(sink).count() == ev.count()  # no dupes
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "stream_file_sink_exactly_once",
+        "stream_stream_join",
+        "stream_stream_leftouter",
+        "stream_stream_fullouter",
+    ],
+)
+def test_query_builds_one_event_stream(spark, sf_dir, monkeypatch, name):
+    """T10's two checkpointed runs, and the view and purchase sides of
+    T8/T8b/T8c, start from one stream frame, so one build reads the
+    events stream (and probes its footer) once."""
+    from infofarmsparkml_spark.streaming import ops
+
+    calls = []
+    original = ops.read_events_stream
+
+    def counted(*args, **kwargs):
+        calls.append(args)
+        return original(*args, **kwargs)
+
+    monkeypatch.setattr(ops, "read_events_stream", counted)
+    q(name)(spark, sf_dir).collect()
+    assert len(calls) == 1
