@@ -500,6 +500,14 @@ def llm_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cos"),
         )
     )
+    return _cosine_top10(sims)
+
+
+def _cosine_top10(sims: DataFrame) -> DataFrame:
+    """The exact-cosine rank tail of `llm_cosine_topk` and the IVF
+    ops: per-qid top-10 of (qid, cid, cos) by cosine descending, ties
+    to the smaller cid (the oracles' ORDER BY cos DESC, cid), cosine
+    rounded to 6 places."""
     w = W.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid"))
     return (
         sims.withColumn("rank", F.row_number().over(w))
@@ -1199,6 +1207,14 @@ def _quantize_vec(col: str) -> Column:
     return F.transform(col, lambda x: F.floor(x * 1048576.0))
 
 
+def _quant_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, qv): the corpus quantized by `_quantize_vec`, the
+    input of every op that ranks by the exact integer `_qdist`."""
+    return _double_vecs(spark, sf_dir, "vec_id", "e").select(
+        "vec_id", _quantize_vec("e").alias("qv")
+    )
+
+
 def _srp_band_keys(
     quant: DataFrame, n_bands: int, band_bits: int, carry_qv: bool = False
 ) -> DataFrame:
@@ -1290,23 +1306,47 @@ def _qdist(a: str, b: str) -> Column:
     return acc
 
 
+def _euclid_topk(pairs: DataFrame, nid: str, k: int) -> DataFrame:
+    """The one rank tail of every quantized-distance op: per-qid
+    top-k of (qid, nid, qdist) pairs by exact `_qdist`, ties to the
+    smaller neighbor id, and euclidean = sqrt(qdist) / 2^20 rounded
+    to 6 places (the quantization undone). Oracle twin: `_rank_sql`."""
+    w = W.partitionBy("qid").orderBy("qdist", nid)
+    return (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "qid",
+            nid,
+            F.round(
+                F.sqrt(F.col("qdist").cast("double")) / 1048576.0, 6
+            ).alias("euclidean"),
+            "rank",
+        )
+    )
+
+
+def _rank_sql(src: str, nid: str, k: int) -> str:
+    """Oracle twin of `_euclid_topk` over the (qid, nid, qdist) CTE
+    `src`; the query's final SELECT."""
+    return f"""
+ranked AS (
+  SELECT qid, {nid}, qdist,
+         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY qdist, {nid}) AS rn
+  FROM {src})
+SELECT qid, {nid},
+       ROUND(sqrt(CAST(qdist AS DOUBLE)) / 1048576.0, 6) AS euclidean,
+       CAST(rn AS INTEGER) AS rank
+FROM ranked WHERE rn <= {k}
+"""
+
+
 _KNN_QUANT_CTE = """
 WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
               FROM embeddings),
 q AS (SELECT vec_id,
              list_transform(e, x -> floor(x * 1048576.0)) AS qv
       FROM base),"""
-
-_KNN_RANK_SQL = """
-ranked AS (
-  SELECT qid, nid, qdist,
-         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY qdist, nid) AS rn
-  FROM verified)
-SELECT qid, nid,
-       ROUND(sqrt(CAST(qdist AS DOUBLE)) / 1048576.0, 6) AS euclidean,
-       CAST(rn AS INTEGER) AS rank
-FROM ranked WHERE rn <= 5
-"""
 
 
 def _knn_join_topk(
@@ -1401,19 +1441,7 @@ def _knn_join_topk(
             "qdist",
         )
     )
-    w = W.partitionBy("qid").orderBy("qdist", "nid")
-    return (
-        verified.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select(
-            "qid",
-            "nid",
-            F.round(
-                F.sqrt(F.col("qdist").cast("double")) / 1048576.0, 6
-            ).alias("euclidean"),
-            "rank",
-        )
-    )
+    return _euclid_topk(verified, "nid", 5)
 
 
 @query(
@@ -1437,7 +1465,7 @@ verified AS (
   SELECT qid, nid, qdist FROM half
   UNION ALL
   SELECT nid AS qid, qid AS nid, qdist FROM half),"""
-    + _KNN_RANK_SQL,
+    + _rank_sql("verified", "nid", 5),
 )
 def llm_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L5: approximate kNN self-join — every vector's 5 nearest
@@ -1493,13 +1521,9 @@ def llm_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     24 B/row pair set once, mirror from storage) is unchanged, so
     the sf10 posture is preserved."""
     n = load_table(spark, sf_dir, "embeddings").count()
-    emb = _double_vecs(spark, sf_dir, "vec_id", "e")
     # quantized vectors feed the signature pass and both verify
     # sides — checkpoint so consumers share one derivation
-    quant = emb.select(
-        "vec_id", _quantize_vec("e").alias("qv")
-    ).localCheckpoint()
-    return _knn_join_topk(quant, n)
+    return _knn_join_topk(_quant_vecs(spark, sf_dir).localCheckpoint(), n)
 
 
 @query(
@@ -1514,7 +1538,7 @@ verified AS (
                 j -> (va[j + 1] - vb[j + 1])
                      * (va[j + 1] - vb[j + 1]))) AS BIGINT) AS qdist
   FROM qs, cs WHERE qid <> nid),"""
-    + _KNN_RANK_SQL,
+    + _rank_sql("verified", "nid", 5),
 )
 def llm_knn_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force kNN baseline for a deterministic 5% query
@@ -1522,9 +1546,8 @@ def llm_knn_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth that `llm_knn_join`'s recall is measured against (unit
     tests) and the honest small-query-set pattern at scale: query
     side broadcast, ONE corpus scan, distance and ranking identical
-    to the approximate path (`_qdist` + top-5 window)."""
-    emb = _double_vecs(spark, sf_dir, "vec_id", "e")
-    quant = emb.select("vec_id", _quantize_vec("e").alias("qv"))
+    to the approximate path (`_qdist` + `_euclid_topk`)."""
+    quant = _quant_vecs(spark, sf_dir)
     qs = quant.filter(F.col("vec_id") % 20 == 0).select(
         F.col("vec_id").alias("qid"), F.col("qv").alias("va")
     )
@@ -1532,19 +1555,7 @@ def llm_knn_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified = cs.join(
         F.broadcast(qs), F.col("qid") != F.col("nid")
     ).select("qid", "nid", _qdist("va", "vb").alias("qdist"))
-    w = W.partitionBy("qid").orderBy("qdist", "nid")
-    return (
-        verified.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select(
-            "qid",
-            "nid",
-            F.round(
-                F.sqrt(F.col("qdist").cast("double")) / 1048576.0, 6
-            ).alias("euclidean"),
-            "rank",
-        )
-    )
+    return _euclid_topk(verified, "nid", 5)
 
 
 @query(
@@ -1643,25 +1654,15 @@ def llm_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     notes: d2 and cosine evaluate the same IEEE expression trees as
     the DuckDB oracle (index-order dot-product folds, a - 2b + c
     association), so cell assignment, probe order, and ranking all
-    agree exactly. Center pick is a distributed top-16
-    (TakeOrderedAndProject), and the 16 collected centers enter the
-    scan as literals: assignment and probing are pure map-side
-    projections — no shuffle until the per-qid top-k window over
-    the probed candidates."""
+    agree exactly. Center pick is `_md5_picks`' distributed top-16,
+    and the 16 collected centers enter the scan as literals:
+    assignment and probing are pure map-side projections — no
+    shuffle until the per-qid top-k window over the probed
+    candidates."""
     emb = _double_vecs(spark, sf_dir, "vec_id", "e")
-    picks = (
-        emb.select(
-            F.md5(F.col("vec_id").cast("string")).alias("m"),
-            "vec_id",
-            F.col("e").alias("cv"),
-        )
-        .orderBy("m", "vec_id")
-        .limit(16)
-        .collect()
-    )
     centers = [
-        F.array(*[F.lit(float(x)) for x in r["cv"]])
-        for r in sorted(picks, key=lambda r: (r["m"], r["vec_id"]))
+        F.array(*[F.lit(float(x)) for x in cv])
+        for cv in _md5_picks(emb, 16, "e")
     ]
     return _ivf_cosine_topk(emb, centers)
 
@@ -1675,8 +1676,7 @@ def _ivf_cosine_topk(
     assignment and probing are pure map-side projections — at 100 TB
     the cell is a partition key and a probe is partition pruning.
     Candidates = broadcast(query x probed cells) hash-joined on
-    cell; exact cosine + per-qid top-10 window over candidates
-    only."""
+    cell; exact cosine + `_cosine_top10` over candidates only."""
 
     def d2(vec, cv):
         # same association as the oracle: (dot(v,v) - 2*dot(v,c)) + dot(c,c)
@@ -1718,17 +1718,8 @@ def _ivf_cosine_topk(
         F.col("qid") != F.col("vec_id")
     )
     cos = _dot_fold(F.col("qv"), F.col("e")) / (F.col("qnorm") * F.col("cnorm"))
-    wk = W.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    return (
-        cand.withColumn("cos", cos)
-        .withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= 10)
-        .select(
-            "qid",
-            F.col("vec_id").alias("cid"),
-            F.round("cos", 6).alias("cosine"),
-            "rank",
-        )
+    return _cosine_top10(
+        cand.select("qid", F.col("vec_id").alias("cid"), cos.alias("cos"))
     )
 
 
@@ -1776,21 +1767,22 @@ def llm_ivf_topk_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivf_cosine_topk(emb, centers)
 
 
-def _pq_picks(quant: DataFrame, n: int = 256) -> list:
-    """The n corpus vectors with the smallest md5(vec_id), in
-    (md5, vec_id) order — the md5-coin determinism every
-    hash-checkable quantizer in this module shares (coarse IVF
-    centers = the 16-row prefix, PQ codebook = all 256).
+def _md5_picks(frame: DataFrame, n: int, col: str) -> list:
+    """Column `col` of the n corpus vectors with the smallest
+    md5(vec_id), in (md5, vec_id) order — the md5-coin determinism
+    every hash-checkable quantizer in this module shares (IVF coarse
+    centers = 16 raw vectors, PQ codebook = 256 quantized ones, the
+    IVF-PQ coarse centers = its 16-row prefix).
     `orderBy(...).limit(n)` executes as TakeOrderedAndProject, so
     the collected rows already arrive in oracle order — no re-sort
     (ADVICE r15). A corpus smaller than n cannot fill the codebook:
     numpy's reshape ValueError was the old failure mode while the
     oracle's `rn <= n` silently degraded, so the contract is made
-    explicit here (ADVICE r15) — PQ operators require >= n vectors
-    (every committed fixture has >= 500)."""
+    explicit here (ADVICE r15) — these operators require >= n
+    vectors (every committed fixture has >= 500)."""
     rows = (
-        quant.select(
-            F.md5(F.col("vec_id").cast("string")).alias("m"), "vec_id", "qv"
+        frame.select(
+            F.md5(F.col("vec_id").cast("string")).alias("m"), "vec_id", col
         )
         .orderBy("m", "vec_id")
         .limit(n)
@@ -1798,11 +1790,11 @@ def _pq_picks(quant: DataFrame, n: int = 256) -> list:
     )
     if len(rows) < n:
         raise ValueError(
-            f"PQ codebook needs >= {n} corpus vectors, got {len(rows)}; "
-            "the PQ/IVF-PQ operators are defined for corpora of at "
-            "least codebook size"
+            f"md5-pick codebook needs >= {n} corpus vectors, got "
+            f"{len(rows)}; the IVF/PQ operators are defined for corpora "
+            "of at least codebook size"
         )
-    return [r["qv"] for r in rows]
+    return [r[col] for r in rows]
 
 
 def _pq_sub_d2(C):
@@ -1838,9 +1830,9 @@ def _pq_sub_d2(C):
     return _sub_d2
 
 
-@query(
-    "llm_pq_topk",
-    oracle="""
+# the quantized corpus and its md5-ordered picks: the oracle prefix of
+# both PQ ops (`ranked_ctr` feeds the codebook and the coarse centers)
+_PQ_CTES = """
 WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
               FROM embeddings),
 q AS (SELECT vec_id, list_transform(e, x -> floor(x * 1048576.0)) AS qv
@@ -1849,7 +1841,77 @@ ranked_ctr AS (
   SELECT vec_id, qv,
          ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)
            AS rn
-  FROM q),
+  FROM q),"""
+
+
+def _rerank_sql(depth: int) -> str:
+    """Oracle twin of `_adc_rerank`: the depth-`depth` shortlist of
+    the (qid, cid, adc) CTE `adc`, its exact rerank, and the top-10."""
+    return f"""
+short AS (
+  SELECT qid, cid FROM (
+    SELECT qid, cid,
+           ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc, cid) AS srn
+    FROM adc) WHERE srn <= {depth}),
+rer AS (
+  SELECT sl.qid, sl.cid,
+         CAST(list_sum(list_transform(range(64),
+                j -> (qa.qv[j + 1] - qb.qv[j + 1])
+                     * (qa.qv[j + 1] - qb.qv[j + 1]))) AS BIGINT) AS qdist
+  FROM short sl JOIN q qa ON qa.vec_id = sl.qid
+       JOIN q qb ON qb.vec_id = sl.cid),""" + _rank_sql("rer", "cid", 10)
+
+
+def _adc_rerank(quant: DataFrame, cand: DataFrame, depth: int) -> DataFrame:
+    """Stages 2-3 of both PQ ops, the production ANN architecture:
+    ADC shortlist, exact rerank, top-10. `cand` holds the candidate
+    (qid, vec_id) pairs with the query's 2048-entry ADC table `tab`
+    (layout s*256 + k) and the candidate's 8 codes `code`.
+
+    The ADC sum is 8 `element_at` lookups evaluated JVM-side in the
+    candidate projection (the index cast is a no-op that
+    SimplifyCasts drops for int codes). Each query keeps a SHORTLIST
+    of its `depth` smallest ADC sums, ties to the smaller cid; the
+    shortlist alone is RERANKED with the exact quantized distance
+    (`_qdist` in the projection of a broadcast join of queries x
+    shortlist against one corpus probe, so the unrolled sum compiles
+    into that join's codegen stage) and ranked by `_euclid_topk`.
+    Measured on the hardest case — the near-random synthetic corpus,
+    where pure ADC top-10 recalls only 0.14-0.34 — the depth-200
+    shortlist contains 0.94-1.0 of the exact top-10 (sf0.1/sf0.01),
+    so the reranked result is near-exact at a fraction of brute-force
+    cost: at 100 TB the full-vector reads are |queries| x depth point
+    lookups instead of a corpus scan. Oracle twin: `_rerank_sql`."""
+    adc_col = None
+    for s in range(8):
+        term = F.element_at(
+            F.col("tab"),
+            (F.lit(s * 256 + 1) + F.col("code").getItem(s)).cast("int"),
+        )
+        adc_col = term if adc_col is None else adc_col + term
+    ws = W.partitionBy("qid").orderBy("adc", "cid")
+    short = (
+        cand.select("qid", F.col("vec_id").alias("cid"), adc_col.alias("adc"))
+        .withColumn("srn", F.row_number().over(ws))
+        .filter(F.col("srn") <= depth)
+        .select("qid", "cid")
+    )
+    qvs = quant.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("qid"), F.col("qv").alias("qqv")
+    )
+    rer = (
+        quant.select(F.col("vec_id").alias("cid"), F.col("qv").alias("cqv"))
+        .join(F.broadcast(short), "cid")
+        .join(F.broadcast(qvs), "qid")
+        .select("qid", "cid", _qdist("qqv", "cqv").alias("qdist"))
+    )
+    return _euclid_topk(rer, "cid", 10)
+
+
+@query(
+    "llm_pq_topk",
+    oracle=_PQ_CTES
+    + """
 ctr AS (SELECT CAST(rn - 1 AS INTEGER) AS k, qv AS cv
         FROM ranked_ctr WHERE rn <= 256),
 sub AS (SELECT CAST(s AS INTEGER) AS s FROM range(8) t(s)),
@@ -1870,28 +1932,8 @@ adc AS (
   SELECT qd.qid, c.vec_id AS cid, SUM(qd.d2) AS adc
   FROM codes c JOIN qd ON qd.s = c.s AND qd.k = c.code
   WHERE qd.qid <> c.vec_id
-  GROUP BY qd.qid, c.vec_id),
-short AS (
-  SELECT qid, cid FROM (
-    SELECT qid, cid,
-           ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc, cid) AS srn
-    FROM adc) WHERE srn <= 200),
-rer AS (
-  SELECT sl.qid, sl.cid,
-         CAST(list_sum(list_transform(range(64),
-                j -> (qa.qv[j + 1] - qb.qv[j + 1])
-                     * (qa.qv[j + 1] - qb.qv[j + 1]))) AS BIGINT) AS qdist
-  FROM short sl JOIN q qa ON qa.vec_id = sl.qid
-       JOIN q qb ON qb.vec_id = sl.cid),
-ranked AS (
-  SELECT qid, cid, qdist,
-         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY qdist, cid) AS rn
-  FROM rer)
-SELECT qid, cid,
-       ROUND(sqrt(CAST(qdist AS DOUBLE)) / 1048576.0, 6) AS euclidean,
-       CAST(rn AS INTEGER) AS rank
-FROM ranked WHERE rn <= 10
-""",
+  GROUP BY qd.qid, c.vec_id),"""
+    + _rerank_sql(200),
 )
 def llm_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (r15): the memory-bound scale path a
@@ -1912,18 +1954,7 @@ def llm_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tiny query side broadcasts, and the ADC sum is 8
     `element_at` lookups evaluated JVM-side in the join projection.
     No shuffle touches the corpus until the per-query window.
-
-    Two stages, the production ANN architecture: the ADC scan keeps
-    a per-query SHORTLIST (top-200 by approximate distance — ties
-    to the smaller cid), then the shortlist alone is RERANKED with
-    the exact quantized distance (`_qdist`, a broadcast join of
-    queries x shortlist against one corpus probe). Measured on the
-    hardest case — this near-random synthetic corpus, where pure
-    ADC top-10 recalls only 0.14-0.34 — the shortlist contains
-    0.94-1.0 of the exact top-10 (depth 200, sf0.1/sf0.01), so the
-    reranked result is near-exact at a fraction of brute-force cost:
-    at 100 TB the full-vector reads are |queries| x 200 point
-    lookups instead of a corpus scan.
+    Shortlist (depth 200) and exact rerank: `_adc_rerank`.
 
     Bit-parity: quantized values, codebook distances, codes
     (argmin, ties to the smaller center index), ADC sums and rerank
@@ -1936,11 +1967,12 @@ def llm_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as _np
     from pyspark.sql.types import ArrayType, IntegerType, LongType
 
-    emb = _double_vecs(spark, sf_dir, "vec_id", "e")
-    quant = emb.select("vec_id", _quantize_vec("e").alias("qv"))
+    quant = _quant_vecs(spark, sf_dir)
     # codebook = the 256 md5-smallest corpus vectors, sliced into
     # (center, subspace, dim); shared kernel factory (ADVICE r15)
-    C = _np.asarray(_pq_picks(quant), dtype="int64").reshape(256, 8, 8)
+    C = _np.asarray(_md5_picks(quant, 256, "qv"), dtype="int64").reshape(
+        256, 8, 8
+    )
     _sub_d2 = _pq_sub_d2(C)
 
     @F.pandas_udf(ArrayType(IntegerType()))
@@ -1966,46 +1998,8 @@ def llm_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         quant.filter(F.col("vec_id") < 5)
         .select(F.col("vec_id").alias("qid"), _qtab("qv").alias("tab"))
     )
-    adc_col = None
-    for s in range(8):
-        term = F.element_at(
-            F.col("tab"), F.lit(s * 256 + 1) + F.col("code").getItem(s)
-        )
-        adc_col = term if adc_col is None else adc_col + term
     cand = codes.join(F.broadcast(qtab), F.col("qid") != F.col("vec_id"))
-    ws = W.partitionBy("qid").orderBy("adc", "cid")
-    short = (
-        cand.select(
-            "qid", F.col("vec_id").alias("cid"), adc_col.alias("adc")
-        )
-        .withColumn("srn", F.row_number().over(ws))
-        .filter(F.col("srn") <= 200)
-        .select("qid", "cid")
-    )
-    # exact rerank of the tiny shortlist: broadcast it against one
-    # corpus probe for the candidate vectors, queries ride along
-    qvs = quant.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("qid"), F.col("qv").alias("qqv")
-    )
-    rer = (
-        quant.select(F.col("vec_id").alias("cid"), F.col("qv").alias("cqv"))
-        .join(F.broadcast(short), "cid")
-        .join(F.broadcast(qvs), "qid")
-        .select("qid", "cid", _qdist("qqv", "cqv").alias("qdist"))
-    )
-    w = W.partitionBy("qid").orderBy("qdist", "cid")
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
-        .select(
-            "qid",
-            "cid",
-            F.round(
-                F.sqrt(F.col("qdist").cast("double")) / 1048576.0, 6
-            ).alias("euclidean"),
-            "rank",
-        )
-    )
+    return _adc_rerank(quant, cand, 200)
 
 
 def _ivf_pq_enc_qside(spark: SparkSession, sf_dir: str, centers=None):
@@ -2023,9 +2017,8 @@ def _ivf_pq_enc_qside(spark: SparkSession, sf_dir: str, centers=None):
     import numpy as _np
     from pyspark.sql.types import ArrayType, LongType
 
-    emb = _double_vecs(spark, sf_dir, "vec_id", "e")
-    quant = emb.select("vec_id", _quantize_vec("e").alias("qv"))
-    P = _np.asarray(_pq_picks(quant), dtype="int64")  # (256, 64)
+    quant = _quant_vecs(spark, sf_dir)
+    P = _np.asarray(_md5_picks(quant, 256, "qv"), dtype="int64")  # (256, 64)
     # (16, 64) coarse centers: md5-pick prefix unless trained ones
     # are supplied
     G = P[:16] if centers is None else _np.asarray(centers, dtype="int64")
@@ -2094,63 +2087,21 @@ def _ivf_pq_enc_qside(spark: SparkSession, sf_dir: str, centers=None):
 
 
 def _ivf_pq_rank(quant: DataFrame, enc: DataFrame, qside: DataFrame):
-    """Stages 3-5 of the IVF+PQ pipeline: cell-equi-join candidate
-    generation (hash join, no BNLJ), 8-lookup ADC in the join
-    projection, depth-100 shortlist, exact rerank, top-10."""
-    adc_col = None
-    for s in range(8):
-        term = F.element_at(
-            F.col("tab"),
-            (F.lit(s * 256 + 1) + F.col("code").getItem(s)).cast("int"),
-        )
-        adc_col = term if adc_col is None else adc_col + term
+    """Candidates of the IVF+PQ pipeline: the corpus codes of each
+    query's probed cells, by a hash join on cell (no BNLJ); ranked
+    by `_adc_rerank` at depth 100."""
     cand = enc.join(F.broadcast(qside), "cell").filter(
         F.col("qid") != F.col("vec_id")
     )
-    ws = W.partitionBy("qid").orderBy("adc", "cid")
-    short = (
-        cand.select("qid", F.col("vec_id").alias("cid"), adc_col.alias("adc"))
-        .withColumn("srn", F.row_number().over(ws))
-        .filter(F.col("srn") <= 100)
-        .select("qid", "cid")
-    )
-    qvs = quant.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("qid"), F.col("qv").alias("qqv")
-    )
-    rer = (
-        quant.select(F.col("vec_id").alias("cid"), F.col("qv").alias("cqv"))
-        .join(F.broadcast(short), "cid")
-        .join(F.broadcast(qvs), "qid")
-        .select("qid", "cid", _qdist("qqv", "cqv").alias("qdist"))
-    )
-    w = W.partitionBy("qid").orderBy("qdist", "cid")
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
-        .select(
-            "qid",
-            "cid",
-            F.round(
-                F.sqrt(F.col("qdist").cast("double")) / 1048576.0, 6
-            ).alias("euclidean"),
-            "rank",
-        )
-    )
+    return _adc_rerank(quant, cand, 100)
 
 
 # shared by llm_ivf_pq_topk and llm_ivf_pq_partitioned (identical
 # results by construction: the partitioned variant only changes the
 # STORAGE of the code table, never a value)
-_IVF_PQ_ORACLE = """
-WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-              FROM embeddings),
-q AS (SELECT vec_id, list_transform(e, x -> floor(x * 1048576.0)) AS qv
-      FROM base),
-ranked_ctr AS (
-  SELECT vec_id, qv,
-         ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)
-           AS rn
-  FROM q),
+_IVF_PQ_ORACLE = (
+    _PQ_CTES
+    + """
 coarse AS (SELECT CAST(rn - 1 AS INTEGER) AS cell, qv AS ccv
            FROM ranked_ctr WHERE rn <= 16),
 sub AS (SELECT CAST(s AS INTEGER) AS s FROM range(8) t(s)),
@@ -2209,28 +2160,9 @@ adc AS (
        JOIN assigned a ON a.vec_id = c.vec_id
        JOIN qd ON qd.cell = a.cell AND qd.s = c.s AND qd.k = c.code
   WHERE qd.qid <> c.vec_id
-  GROUP BY qd.qid, c.vec_id),
-short AS (
-  SELECT qid, cid FROM (
-    SELECT qid, cid,
-           ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc, cid) AS srn
-    FROM adc) WHERE srn <= 100),
-rer AS (
-  SELECT sl.qid, sl.cid,
-         CAST(list_sum(list_transform(range(64),
-                j -> (qa.qv[j + 1] - qb.qv[j + 1])
-                     * (qa.qv[j + 1] - qb.qv[j + 1]))) AS BIGINT) AS qdist
-  FROM short sl JOIN q qa ON qa.vec_id = sl.qid
-       JOIN q qb ON qb.vec_id = sl.cid),
-ranked AS (
-  SELECT qid, cid, qdist,
-         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY qdist, cid) AS rn
-  FROM rer)
-SELECT qid, cid,
-       ROUND(sqrt(CAST(qdist AS DOUBLE)) / 1048576.0, 6) AS euclidean,
-       CAST(rn AS INTEGER) AS rank
-FROM ranked WHERE rn <= 10
-"""
+  GROUP BY qd.qid, c.vec_id),"""
+    + _rerank_sql(100)
+)
 
 
 @query("llm_ivf_pq_topk", oracle=_IVF_PQ_ORACLE)
@@ -2290,11 +2222,10 @@ def llm_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits 5 blocks of [cell, tab0..2047] (its 5 probes, each with
     the cell-specific residual table); queries explode on probe
     cell, broadcast, and join the corpus on the CELL equi-key (no
-    BNLJ — candidate generation is a hash join on cell); ADC is
-    eight element_at lookups in the join projection; shortlist +
-    rerank as in `llm_pq_topk`. Everything is exact int64, so
-    cells, probes, codes, shortlists and ranks hash-match DuckDB
-    bit-for-bit."""
+    BNLJ — candidate generation is a hash join on cell); ADC,
+    shortlist (depth 100) and rerank are `_adc_rerank`. Everything
+    is exact int64, so cells, probes, codes, shortlists and ranks
+    hash-match DuckDB bit-for-bit."""
     quant, enc, qside = _ivf_pq_enc_qside(spark, sf_dir)
     return _ivf_pq_rank(quant, enc, qside)
 
@@ -2314,7 +2245,9 @@ def llm_ivf_pq_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushed as `cell IN (...)`, so the scan lists and reads ONLY the
     probed cells' directories — PartitionFilters in the plan,
     pinned by tests/test_plans.py::
-    test_ivf_pq_partitioned_prunes_partitions. Downstream is the
+    test_ivf_pq_partitioned_prunes_partitions. The index is re-read
+    under the schema just written (`enc.schema`), so the build
+    starts no footer-inference job. Downstream is the
     shared `_ivf_pq_rank`, and results are value-identical to
     `llm_ivf_pq_topk` (same oracle, hash-checked independently).
     The index lands under the session's warehouse dir keyed by
@@ -2343,9 +2276,10 @@ def llm_ivf_pq_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         {int(r["cell"]) for r in qside.select("cell").distinct().collect()}
     )
     idx = (
-        spark.read.parquet(path)
+        spark.read.schema(enc.schema)
+        .parquet(path)
         .filter(F.col("cell").isin(probe_cells))
-        .select("vec_id", F.col("cell").cast("long").alias("cell"), "code")
+        .select("vec_id", "cell", "code")
     )
     return _ivf_pq_rank(quant, idx, qside)
 

@@ -20,8 +20,7 @@ from infofarmsparkml_spark.operators.llm import (
     _BAND_BITS_CASE_SQL,
     _SRP_WEIGHTS_ADAPTIVE_CTES,
     _adaptive_band_bits,
-    _double_vecs,
-    _quantize_vec,
+    _quant_vecs,
     _srp_band_keys,
 )
 from infofarmsparkml_spark.registry import query
@@ -1014,10 +1013,8 @@ def llm_diversity_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank filter is quota-dependent, so no WindowGroupLimit —
     per-cluster work is the bounded-occupancy sort itself."""
     n = load_table(spark, sf_dir, "embeddings").count()
-    emb = _double_vecs(spark, sf_dir, "vec_id", "e")
-    quant = emb.select("vec_id", _quantize_vec("e").alias("qv"))
     keys = _srp_band_keys(
-        quant, n_bands=1, band_bits=_adaptive_band_bits(n)
+        _quant_vecs(spark, sf_dir), n_bands=1, band_bits=_adaptive_band_bits(n)
     )
     wc = W.partitionBy("cluster")
     wr = W.partitionBy("cluster").orderBy(

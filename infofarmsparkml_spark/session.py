@@ -16,6 +16,15 @@ from pyspark.sql import SparkSession
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def _driver_mem_default() -> str:
+    """Driver heap when SPARK_DRIVER_MEM is unset: half the host's
+    physical memory in whole GiB, at most 24g. A fixed 24g heap can
+    outgrow a small host, and the kernel then OOM-kills the JVM; a
+    heap sized to the host fails inside the JVM instead."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(24, phys // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "infofarmsparkml-spark",
     cpus: int | str | None = None,
@@ -41,7 +50,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _driver_mem_default(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # events.ts may be written as parquet TIMESTAMP(NANOS) (the

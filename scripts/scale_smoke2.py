@@ -162,7 +162,7 @@ def main() -> int:
         "edges_warm_sec": edges_warm,
         "fixture_build_sec": build_sec,
         "python_peak_rss_gb": round(peak_gb, 2),
-        "spark_driver_mem": os.environ.get("SPARK_DRIVER_MEM", "24g"),
+        "spark_driver_mem": spark.conf.get("spark.driver.memory"),
         "loadavg_1m": round(os.getloadavg()[0], 2),
         "ops": results,
     }

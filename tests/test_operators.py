@@ -2108,6 +2108,27 @@ def test_pq_codebook_requires_256_vectors(spark, tmp_path):
             q(name)(spark, str(tmp_path))
 
 
+def test_ivf_topk_requires_16_vectors(spark, tmp_path):
+    """llm_ivf_topk picks its 16 coarse centers through the same
+    md5-pick guard: a 10-vector corpus raises instead of building
+    fewer cells."""
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(7)
+    pd.DataFrame(
+        {
+            "vec_id": np.arange(10, dtype="int64"),
+            "embedding": list(
+                rng.normal(0, 0.1, size=(10, 64)).astype("float32")
+            ),
+            "label": np.zeros(10, dtype="int32"),
+        }
+    ).to_parquet(tmp_path / "embeddings.parquet", index=False)
+    with pytest.raises(ValueError, match="codebook needs >= 16"):
+        q("llm_ivf_topk")(spark, str(tmp_path))
+
+
 def test_fn_array_long_tokens_null_without_long_word(spark, tmp_path):
     """A document with no word longer than four letters has an empty
     long-token list: DuckDB's ARRAY_TO_STRING gives NULL for it, so
@@ -2167,12 +2188,19 @@ def test_compaction_writes_fragmented_input_once(spark, sf_dir, duck):
 
 
 @pytest.mark.parametrize(
-    "name, n_jobs", [("sink_parquet", 1), ("etl_partition_overwrite", 2)]
+    "name, n_jobs",
+    [
+        ("sink_parquet", 1),
+        ("etl_partition_overwrite", 2),
+        ("llm_ivf_pq_partitioned", 4),
+    ],
 )
 def test_sink_build_starts_only_its_writes(spark, sf_dir, name, n_jobs):
     """Building a sink query runs its writes and nothing else: the
-    re-read declares the schema just written, so it starts no
-    footer-inference job."""
+    re-read declares the schema just written, so the build starts no
+    footer-inference job. llm_ivf_pq_partitioned's 4 jobs are its
+    codebook pick, the index write and the probe-cell distinct
+    collect (a shuffle stage and a result stage under AQE)."""
     sc = spark.sparkContext
     group = f"build-jobs-{name}"
     prev = sc.getLocalProperty("spark.jobGroup.id")

@@ -332,6 +332,17 @@ def test_rotate_slate_policy(tmp_path, monkeypatch):
     assert hist["d"] == (7, False)  # real error = fail
 
 
+@pytest.mark.parametrize("gib, heap", [(16, "8g"), (256, "24g")])
+def test_driver_mem_default_is_half_the_host_capped(monkeypatch, gib, heap):
+    """Without SPARK_DRIVER_MEM the driver heap is half the host's
+    physical memory, at most 24g."""
+    from infofarmsparkml_spark import session
+
+    pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": gib * 2**30 // 4096}
+    monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+    assert session._driver_mem_default() == heap
+
+
 def test_fact_in_broadcast_range_tracks_session_threshold(spark, sf_dir):
     """The build-side guard must read the SESSION threshold, not a
     hardcoded default (review r13): with auto-broadcast disabled
