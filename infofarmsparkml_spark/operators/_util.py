@@ -4,9 +4,10 @@ from __future__ import annotations
 
 import os
 import tempfile
+from contextlib import contextmanager
 
 from py4j.protocol import Py4JError
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from infofarmsparkml_spark.catalog import load_table  # noqa: F401  (re-export)
 
@@ -128,6 +129,24 @@ def scratch_dir(tag: str, sf_dir: str = "") -> str:
     except OSError:
         pass  # GC is best-effort; a failed prune only costs disk
     return os.path.join(base, current)
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set session confs for the block, then leave the session as it
+    was: a key that had a value gets it back, and a key that was
+    unset is unset again rather than written back as its default."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def materialize_once(path: str, write_fn) -> str:

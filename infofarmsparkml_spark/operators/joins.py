@@ -17,6 +17,7 @@ from infofarmsparkml_spark.operators._util import (
     net_cents,
     r,
     cents,
+    scoped_confs,
     sum_cents,
 )
 from infofarmsparkml_spark.registry import query
@@ -513,15 +514,5 @@ def join_runtime_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan via the shared `_runtime_bloom_plan` builder; the bloom
     filter is semantics-preserving, so the oracle is the plain
     filtered join."""
-    old = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    for k, v in _BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
-        out = _runtime_bloom_plan(spark, sf_dir).localCheckpoint()
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    return out
+    with scoped_confs(spark, _BLOOM_CONFS):
+        return _runtime_bloom_plan(spark, sf_dir).localCheckpoint()

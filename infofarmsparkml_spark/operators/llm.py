@@ -2272,9 +2272,9 @@ def llm_ivf_pq_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     except OSError:
         path = f"/tmp/ifsml_pq_index_{tag}"
     enc.write.partitionBy("cell").mode("overwrite").parquet(path)
-    probe_cells = sorted(
-        {int(r["cell"]) for r in qside.select("cell").distinct().collect()}
-    )
+    # a plain collect: the set dedupes the <= 25 rows on the driver,
+    # where a distinct() would add a shuffle stage and a second job
+    probe_cells = sorted({int(r["cell"]) for r in qside.select("cell").collect()})
     idx = (
         spark.read.schema(enc.schema)
         .parquet(path)

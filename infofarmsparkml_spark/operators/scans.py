@@ -16,6 +16,7 @@ from infofarmsparkml_spark.operators._util import (
     cents,
     load_table,
     materialize_once,
+    scoped_confs,
     scratch_dir,
     sum_cents,
     ts_lit,
@@ -448,9 +449,8 @@ def etl_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = scratch_dir("lineitem_dyn_overwrite", sf_dir)
     lf.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
-    prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    dynamic = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    with scoped_confs(spark, dynamic):
         (
             lf.filter(F.col("l_returnflag") == "R")
             .withColumn("l_quantity", -F.col("l_quantity"))
@@ -458,8 +458,6 @@ def etl_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             .partitionBy("l_returnflag")
             .parquet(out)
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
     reread = spark.read.schema(lf.schema).parquet(out)
     return reread.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_rows"),

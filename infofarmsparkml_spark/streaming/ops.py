@@ -31,6 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from infofarmsparkml_spark.operators._util import scoped_confs
 from infofarmsparkml_spark.registry import query
 
 _SOURCE_OPTIONS: dict[str, str] = {}
@@ -84,7 +85,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _us_ts(raw)
 
 
-class _state_sized:
+def _state_sized(spark: SparkSession):
     """Temporarily size `spark.sql.shuffle.partitions` to the
     session's task slots (`defaultParallelism`: N on `local[N]`,
     total executor cores on a cluster) for a stateful streaming
@@ -101,21 +102,10 @@ class _state_sized:
     (sf0.1 on `local[4]`, 16 → 4 partitions: stream_stateful_tws
     3.2 s → 2.1 s, stream_dedup 1.8 s → 1.1 s; see
     plans/r18/AB_state_partitions.json). Results do not depend on
-    the count. Batch queries are unaffected: the original value is
-    restored before the sink table is returned."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(self.spark.sparkContext.defaultParallelism),
-        )
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
+    the count. Batch queries are unaffected: the caller's setting is
+    restored (`scoped_confs`) before the sink table is returned."""
+    slots = str(spark.sparkContext.defaultParallelism)
+    return scoped_confs(spark, {"spark.sql.shuffle.partitions": slots})
 
 
 def run_to_memory(df: DataFrame, name: str, mode: str) -> DataFrame:
@@ -513,14 +503,13 @@ def stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         # TWS requires the RocksDB provider; restore the session's
         # previous provider afterwards so later stateful queries on
         # the same (driver-owned) session keep their configuration
-        conf_key = "spark.sql.streaming.stateStore.providerClass"
-        prev = spark.conf.get(conf_key, None)
-        spark.conf.set(
-            conf_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        try:
+        rocksdb = {
+            "spark.sql.streaming.stateStore.providerClass": (
+                "org.apache.spark.sql.execution.streaming.state."
+                "RocksDBStateStoreProvider"
+            )
+        }
+        with scoped_confs(spark, rocksdb):
             tracked = ev.groupBy("user_id").transformWithStateInPandas(
                 statefulProcessor=make_user_tracker_processor(),
                 outputStructType=_TWS_OUT_SCHEMA,
@@ -528,11 +517,6 @@ def stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
                 timeMode="None",
             )
             return run_to_memory(tracked, "ifsml_stream_tws", "update")
-        finally:
-            if prev is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prev)
 
     return run_to_memory(_track_users(ev), "ifsml_stream_tws", "update")
 

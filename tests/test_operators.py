@@ -2192,15 +2192,14 @@ def test_compaction_writes_fragmented_input_once(spark, sf_dir, duck):
     [
         ("sink_parquet", 1),
         ("etl_partition_overwrite", 2),
-        ("llm_ivf_pq_partitioned", 4),
+        ("llm_ivf_pq_partitioned", 3),
     ],
 )
 def test_sink_build_starts_only_its_writes(spark, sf_dir, name, n_jobs):
     """Building a sink query runs its writes and nothing else: the
     re-read declares the schema just written, so the build starts no
-    footer-inference job. llm_ivf_pq_partitioned's 4 jobs are its
-    codebook pick, the index write and the probe-cell distinct
-    collect (a shuffle stage and a result stage under AQE)."""
+    footer-inference job. llm_ivf_pq_partitioned's 3 jobs are its
+    codebook pick, the index write and the probe-cell collect."""
     sc = spark.sparkContext
     group = f"build-jobs-{name}"
     prev = sc.getLocalProperty("spark.jobGroup.id")
@@ -2211,3 +2210,29 @@ def test_sink_build_starts_only_its_writes(spark, sf_dir, name, n_jobs):
         sc.setLocalProperty("spark.jobGroup.id", prev)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == n_jobs
+
+
+def test_scoped_confs_unset_what_they_found_unset(spark, sf_dir):
+    """A query that scopes a session conf leaves a key it found unset
+    unset, instead of writing the default back as an explicit value:
+    etl_partition_overwrite's overwrite mode, and the state-partition
+    count a stateful stream sets."""
+    from infofarmsparkml_spark.streaming.ops import _state_sized
+
+    keys = ("spark.sql.sources.partitionOverwriteMode", "spark.sql.shuffle.partitions")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.unset(k)
+        assert q("etl_partition_overwrite")(spark, sf_dir).count() > 0
+        with _state_sized(spark):
+            assert spark.conf.get(keys[1]) == str(
+                spark.sparkContext.defaultParallelism
+            )
+        assert {k: spark.conf.get(k, None) for k in keys} == dict.fromkeys(keys)
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

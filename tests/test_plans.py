@@ -1259,6 +1259,18 @@ def test_pq_topk_plan_is_one_scan_broadcast_rerank(spark, sf_dir):
     assert "SortMergeJoin" not in plan, plan[:3000]
 
 
+def test_adc_shortlist_depths_are_pinned(spark, sf_dir):
+    """The ADC shortlist depth is part of the PQ contract, but the
+    oracle checks cannot see it at fixture scale: a depth-199
+    `llm_pq_topk` returns the same rows, because the 200th shortlist
+    member never reaches the top-10. So the optimized plan pins the
+    shortlist filter of each op at its depth, and at no other."""
+    for name, depth in (("llm_pq_topk", 200), ("llm_ivf_pq_topk", 100)):
+        plan = q(name)(spark, sf_dir)._jdf.queryExecution().optimizedPlan()
+        depths = re.findall(r"\bsrn#\d+ <= (\d+)\)", plan.toString())
+        assert depths and set(depths) == {str(depth)}, (name, depths)
+
+
 def test_ivf_pq_candidates_are_cell_hash_join(spark, sf_dir):
     """The composite's 100-TB property, pinned: candidate
     generation is an EQUI-join on the coarse cell id (broadcast

@@ -343,6 +343,40 @@ def test_driver_mem_default_is_half_the_host_capped(monkeypatch, gib, heap):
     assert session._driver_mem_default() == heap
 
 
+def test_warm_headline_pass_reuses_generated_classes(spark, sf_dir):
+    """The session's generated-class cache holds the headline's
+    working set: a second pass of the 20 headline queries compiles at
+    most a tenth of the classes the first pass compiled. With Spark's
+    default cache of 100 entries the warm pass recompiles nearly
+    every class. Not exactly 0: tpch_q8 can recompile a few classes
+    per run. The cache (a private field of Spark's CodeGenerator) is
+    emptied first, so the first pass is cold however much of the
+    headline earlier tests ran."""
+    import bench
+
+    from infofarmsparkml_spark import registry
+
+    jvm = spark._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    generator = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    )
+    cache = generator.getDeclaredField("cache")
+    cache.setAccessible(True)
+    cache.get(generator.getField("MODULE$").get(None)).invalidateAll()
+    qs = registry.queries()
+
+    def compiles_in_pass() -> int:
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        for name in bench.HEADLINE:
+            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    cold = compiles_in_pass()
+    warm = compiles_in_pass()
+    assert warm <= cold / 10, (cold, warm)
+
+
 def test_fact_in_broadcast_range_tracks_session_threshold(spark, sf_dir):
     """The build-side guard must read the SESSION threshold, not a
     hardcoded default (review r13): with auto-broadcast disabled
