@@ -107,15 +107,15 @@ def fn_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
     without materializing lower() on the fact side. Under a collated
     comparison the equality itself is case-insensitive, so the
     optimizer can still use a hash join on the collation key."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     return spark.sql(
         """
         WITH dims(seg) AS (VALUES ('building'), ('machinery'), ('furniture'))
         SELECT seg, COUNT(*) AS n_customers
-        FROM customer
+        FROM {customer}
         JOIN dims ON c_mktsegment = seg COLLATE UTF8_LCASE
         GROUP BY seg
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 

@@ -2,11 +2,12 @@
 
 from __future__ import annotations
 
+import hashlib
 import os
-import tempfile
 from contextlib import contextmanager
 
 from py4j.protocol import Py4JError
+from pyspark import SparkFiles
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from infofarmsparkml_spark.catalog import load_table  # noqa: F401  (re-export)
@@ -40,95 +41,29 @@ def _estimated_bytes(df: DataFrame) -> int | None:
     return int(stats.sizeInBytes())
 
 
-def scratch_dir(tag: str, sf_dir: str = "") -> str:
-    """Deterministic-content scratch dir for sink round-trips,
-    scoped per scale factor so concurrent/interleaved runs at
-    different sf_dirs never read each other's output.
+def scratch_dir(tag: str, sf_dir: str) -> str:
+    """Scratch dir for a query's own files: sink round-trips, stream
+    checkpoints and write-once caches.
 
-    The path also carries a fingerprint of the source fixture
-    (mtime+size of every parquet under sf_dir): write-once callers
-    that skip the rewrite when _SUCCESS exists would otherwise
-    silently serve stale data across process lifetimes if the
-    fixture at the same path were ever regenerated (ADVICE r5) —
-    a new fingerprint yields a fresh dir, invalidating the cache.
-    Stale siblings (same ``{tag}_{suffix}_`` prefix, different
-    hash) are pruned here (ADVICE r6): a different hash means the
-    fixture AT THE SAME PATH changed, so any content under the old
-    hash is dead by construction — no live run at this sf_dir can
-    still want it. Constraint (ADVICE r7): this GC assumes the
-    fixture at a given path only moves forward — a process still
-    mid-query against a PREVIOUS generation of the same sf_dir
-    (regenerated underneath it) may have its cache pruned by a
-    newer process; concurrent runs spanning a fixture regeneration
-    are unsupported (and would be reading inconsistent source data
-    regardless of this cache)."""
-    base = os.path.join(tempfile.gettempdir(), "infofarmsparkml_scratch")
-    os.makedirs(base, exist_ok=True)
-    if not sf_dir:
-        return os.path.join(base, tag)
-    suffix = os.path.basename(os.path.normpath(sf_dir))
-    import hashlib
+    Scratch is per Spark application and deleted with it. The root is
+    the application's driver temp dir (``SparkFiles.getRootDirectory()``),
+    which Spark creates for each application and deletes at
+    ``spark.stop()`` and at JVM exit, so no two processes ever share a
+    path and nothing needs a lock.
 
+    The name carries a fingerprint of the fixture (name, mtime and size
+    of every parquet under ``sf_dir``): a fixture regenerated at the
+    same path within one application gets a fresh dir instead of the
+    write-once caches of the old one."""
     h = hashlib.md5()
     for name in sorted(os.listdir(sf_dir)):
         if name.endswith(".parquet"):
             st = os.stat(os.path.join(sf_dir, name))
             h.update(f"{name}:{st.st_mtime_ns}:{st.st_size};".encode())
-    current = f"{tag}_{suffix}_{h.hexdigest()[:10]}"
-    prefix = f"{tag}_{suffix}_"
-    try:
-        for entry in os.listdir(base):
-            if entry.startswith(prefix) and not entry.startswith(current):
-                import shutil
-
-                p = os.path.join(base, entry)
-                if os.path.isfile(p):
-                    # stale generation's "<dir>.lock" flock file
-                    # (ADVICE r10): rmtree refuses plain files, so
-                    # these used to leak forever. Unlinking is safe
-                    # for DEAD generations only — everything owned
-                    # by the current generation (the dir itself and
-                    # its .lock/.tmp-*/.orphan-* siblings) is
-                    # excluded by the startswith(current) guard.
-                    # Unlinking a HELD flock file would let two
-                    # lockers "hold" the same lock via different
-                    # inodes, so before unlinking a .lock we probe
-                    # it with a non-blocking flock (ADVICE r11):
-                    # acquisition proves no process held the inode
-                    # at probe time, and an fstat/stat identity
-                    # check (ADVICE r12) proves the path still
-                    # names the inode we flocked (not a rival's
-                    # fresh replacement). Residual TOCTOU: a rival
-                    # that open()ed this stale path BEFORE our probe
-                    # can still flock the orphaned inode after our
-                    # unlink+close — unavoidable when unlinking lock
-                    # files at all, and it only bites a process
-                    # violating the forward-only fixture contract
-                    # (locking a dead generation), so practical
-                    # impact is nil. A held or vanished lock is
-                    # simply left for a later GC pass.
-                    try:
-                        if p.endswith(".lock"):
-                            import fcntl
-
-                            with open(p, "r+") as probe:
-                                fcntl.flock(
-                                    probe, fcntl.LOCK_EX | fcntl.LOCK_NB
-                                )
-                                if (
-                                    os.fstat(probe.fileno()).st_ino
-                                    == os.stat(p).st_ino
-                                ):
-                                    os.unlink(p)
-                        else:
-                            os.unlink(p)
-                    except OSError:
-                        pass
-                else:
-                    shutil.rmtree(p, ignore_errors=True)
-    except OSError:
-        pass  # GC is best-effort; a failed prune only costs disk
-    return os.path.join(base, current)
+    suffix = os.path.basename(os.path.normpath(sf_dir))
+    return os.path.join(
+        SparkFiles.getRootDirectory(), f"{tag}_{suffix}_{h.hexdigest()[:10]}"
+    )
 
 
 @contextmanager
@@ -150,101 +85,14 @@ def scoped_confs(spark: SparkSession, confs: dict[str, str]):
 
 
 def materialize_once(path: str, write_fn) -> str:
-    """Cross-process-safe write-once cache (ADVICE r6): the naive
-    ``if no _SUCCESS: overwrite-write(path)`` races — two concurrent
-    processes that both miss the marker overwrite the same dir, and
-    Spark's overwrite DELETES the target first, so a third reader
-    of a previously valid cache can hit a partial dir mid-write.
-    Here each writer builds into its own unique temp dir and
-    atomically renames it into ``path``; POSIX rename onto an
-    existing non-empty dir fails, so losing the race is a cache hit
-    (the winner's content is bit-identical by construction — every
-    cached derivation in this repo is deterministic) and readers
-    only ever see a complete dir or none.
-
-    A failed rename is disambiguated by the _SUCCESS marker
-    (ADVICE r7/r8): ``path`` existing WITH _SUCCESS means another
-    writer won the race (cache hit); ``path`` existing WITHOUT
-    _SUCCESS is a crash-orphaned partial dir (e.g. a pre-rename-era
-    writer killed mid-write) that no correct reader can want — it is
-    renamed ASIDE (the aside copy then rmtree'd) and the publish
-    retried, instead of being served as if valid. The
-    check-then-replace step is serialized across processes with an
-    fcntl.flock lock file next to ``path`` (ADVICE r9): without it,
-    a concurrent writer could publish a complete dir between this
-    writer's _SUCCESS check and its destructive step, briefly
-    unpublishing a valid cache. The rename-aside (ADVICE r10)
-    closes the residual window rmtree-in-place left for EMPTY
-    orphans: POSIX rename succeeds onto an existing empty dir, so a
-    rival's lock-free optimistic publish can land between the
-    locked _SUCCESS check and the destructive step — renaming aside
-    never deletes the rival's part files out from under a reader
-    that already opened them, whereas an in-place rmtree could.
-    KNOWN RESIDUAL WINDOW (ADVICE r11): aside-then-republish is TWO
-    atomic renames, not one — between them ``path`` is briefly
-    absent, so a reader that just resolved ``path`` from a rival's
-    publish can hit a transient ENOENT and must tolerate a retry
-    (every caller goes through spark.read, which re-resolves on the
-    next call, and cached derivations are bit-identical, so a retry
-    always sees equivalent content); a crash landing exactly between
-    the two renames discards the rival's valid publish, rebuilt on
-    the next call. Writers
-    only ever publish (rename) either on the lock-free FIRST
-    attempt — which cannot delete anything — or while holding the
-    lock, so the locked _SUCCESS re-check is authoritative. The retry is
-    bounded; if the target keeps reappearing as a partial dir the
-    last OSError propagates rather than silently returning an
-    incomplete cache. The temp dir is always cleaned up, including
-    when ``write_fn`` itself raises; the lock file is left in place
-    (removing it would reopen the unlink-vs-lock race).
-
-    ``write_fn(tmp_path)`` must produce a Spark-style output dir
-    (including _SUCCESS) at ``tmp_path``."""
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    import fcntl
-    import shutil
-    import uuid
-
-    tmp = f"{path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    try:
-        write_fn(tmp)
-        try:
-            # optimistic publish: atomic, and cannot destroy anything
-            os.rename(tmp, path)
-            return path
-        except OSError as e:
-            last_err: OSError = e
-        # Contended or orphaned target: every destructive step below
-        # runs under the lock, as does the publish that follows it.
-        with open(path + ".lock", "w") as lock_f:
-            fcntl.flock(lock_f, fcntl.LOCK_EX)
-            for _ in range(3):
-                if os.path.exists(os.path.join(path, "_SUCCESS")):
-                    # another writer won the race; ours is a
-                    # redundant bit-identical copy — cache hit
-                    return path
-                # target exists but is incomplete: orphaned partial
-                # dir — rename it aside, never rmtree in place (a
-                # rival's optimistic rename can succeed onto an
-                # EMPTY orphan after the check above; renames can't
-                # destroy such a publish, an in-place rmtree could)
-                if os.path.lexists(path):
-                    aside = f"{path}.orphan-{uuid.uuid4().hex[:8]}"
-                    try:
-                        os.rename(path, aside)
-                    except OSError:
-                        pass  # vanished underneath us; just retry
-                    else:
-                        shutil.rmtree(aside, ignore_errors=True)
-                try:
-                    os.rename(tmp, path)
-                    return path
-                except OSError as e:
-                    last_err = e
-            raise last_err
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    """Write-once cache within one application's scratch: call
+    ``write_fn(path)`` unless ``path/_SUCCESS`` exists. ``write_fn``
+    must write a Spark output dir in overwrite mode, so a failed
+    earlier attempt (part files, no _SUCCESS) is replaced, never
+    served."""
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        write_fn(path)
+    return path
 
 
 def cents(col: Column | str, scale: int = 2) -> Column:

@@ -38,21 +38,17 @@ def _derive_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Co-purchase edge list, materialized ONCE per fixture into a
-    fingerprinted scratch parquet and shared by every graph query —
-    the GraphX/GraphFrames pattern: build the graph once, run many
-    algorithms over it. Nine registered queries consume this edge
-    set; without the materialization each re-runs the lineitem
-    self-join + distinct, and at fact scale that re-derivation (a
-    full shuffle of the fact table per algorithm) would dominate
-    every algorithm's cost. The scratch path embeds the fixture
-    fingerprint (mtime+size of the source parquet, see scratch_dir)
-    so regeneration invalidates the cache; materialize_once writes
-    through a unique temp dir + atomic rename, so concurrent
-    producers (pytest alongside driver_sim/bench) can't clobber
-    each other or expose a partial dir to readers (ADVICE r6).
-    Int-keyed and distinct, so the materialized rows are
-    bit-identical to the derivation on every engine."""
+    """Co-purchase edge list, materialized ONCE into a scratch
+    parquet and shared by every graph query — the GraphX/GraphFrames
+    pattern: build the graph once, run many algorithms over it. Nine
+    registered queries consume this edge set; without the
+    materialization each re-runs the lineitem self-join + distinct,
+    and at fact scale that re-derivation (a full shuffle of the fact
+    table per algorithm) would dominate every algorithm's cost. The
+    cache lives in the application's scratch (see scratch_dir): it
+    is written once per application and fixture, and deleted with
+    the application. Int-keyed and distinct, so the materialized
+    rows are bit-identical to the derivation on every engine."""
     from infofarmsparkml_spark.operators._util import (
         materialize_once,
         scratch_dir,
@@ -60,9 +56,9 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = materialize_once(
         scratch_dir("copurchase_edges", sf_dir),
-        lambda tmp: _derive_copurchase_edges(spark, sf_dir)
+        lambda p: _derive_copurchase_edges(spark, sf_dir)
         .write.mode("overwrite")
-        .parquet(tmp),
+        .parquet(p),
     )
     return spark.read.parquet(path)
 

@@ -14,13 +14,12 @@ connected-components loop checkpoints to truncate lineage.
 from __future__ import annotations
 
 import hashlib as _hashlib
-import os
 
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 
-from infofarmsparkml_spark.operators._util import load_table
+from infofarmsparkml_spark.operators._util import load_table, scratch_dir
 from infofarmsparkml_spark.registry import query
 
 
@@ -2250,27 +2249,11 @@ def llm_ivf_pq_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     starts no footer-inference job. Downstream is the
     shared `_ivf_pq_rank`, and results are value-identical to
     `llm_ivf_pq_topk` (same oracle, hash-checked independently).
-    The index lands under the session's warehouse dir keyed by
-    md5(sf_dir): runs over DISTINCT SFs never collide and re-runs
-    over the same SF are idempotent overwrites; two sessions racing
-    the SAME sf_dir would share the path (the sequential driver
-    never does — give concurrent writers distinct warehouse
-    dirs)."""
+    The index is written to the application's scratch
+    (`_util.scratch_dir`), so it is per application and deleted with
+    it."""
     quant, enc, qside = _ivf_pq_enc_qside(spark, sf_dir)
-    tag = _hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    path = f"{spark.conf.get('spark.sql.warehouse.dir')}/ifsml_pq_index_{tag}"
-    # probe the warehouse dir's writability up front (cheap, local)
-    # instead of catching the write: a blanket except around the
-    # encode job would mask genuine UDF/executor failures and
-    # silently re-run the whole corpus encode (review r16)
-    probe_base = path.removeprefix("file:")
-    try:
-        os.makedirs(probe_base, exist_ok=True)
-        with open(os.path.join(probe_base, "_writable_probe"), "w"):
-            pass
-        os.remove(os.path.join(probe_base, "_writable_probe"))
-    except OSError:
-        path = f"/tmp/ifsml_pq_index_{tag}"
+    path = scratch_dir("ifsml_pq_index", sf_dir)
     enc.write.partitionBy("cell").mode("overwrite").parquet(path)
     # a plain collect: the set dedupes the <= 25 rows on the driver,
     # where a distinct() would add a shuffle stage and a second job

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from infofarmsparkml_spark.operators._util import load_table
+from infofarmsparkml_spark.operators._util import load_table, scoped_confs
 from infofarmsparkml_spark.registry import query
 
 
@@ -36,15 +36,14 @@ def ps_pandas_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays lazy in Catalyst (to_spark hands back the logical plan, no
     materialization), so the pandas dialect costs nothing over the
     DataFrame API at any scale — PROVIDED the default index is
-    ``distributed`` (set here, restored after): the stock sequence
+    ``distributed`` (scoped to the build): the stock sequence
     index would add a global row-numbering pass per frame. Money is
     folded to exact integer cents before the sum (the repo's
     exact-money convention), so the rollup hash-matches DuckDB."""
-    import pyspark.pandas as ps
-
-    prev = ps.get_option("compute.default_index_type")
-    ps.set_option("compute.default_index_type", "distributed")
-    try:
+    # pandas-on-Spark keeps this option as a JSON-encoded session conf
+    with scoped_confs(
+        spark, {"pandas_on_Spark.compute.default_index_type": '"distributed"'}
+    ):
         psdf = load_table(spark, sf_dir, "lineitem").pandas_api()
         psdf = psdf.assign(
             revenue_cents=(psdf["l_extendedprice"] * 100)
@@ -60,5 +59,3 @@ def ps_pandas_api(spark: SparkSession, sf_dir: str) -> DataFrame:
             .reset_index()
         )
         return out.to_spark()
-    finally:
-        ps.set_option("compute.default_index_type", prev)

@@ -98,17 +98,16 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _lineitem_by_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lineitem hive-partitioned by l_returnflag, shared by
     `scan_partition_pruned` and `join_dpp`. The copy is a pure
-    function of the immutable fixture, so it is written once per
-    scratch lifetime, not per run (the rewrite was 5.6 s of
-    join_dpp's 5.7 s at sf0.1); materialize_once makes the write
-    race-safe across processes. It is read back under lineitem's
+    function of the immutable fixture, so materialize_once writes it
+    once per application, not per run (the rewrite was 5.6 s of
+    join_dpp's 5.7 s at sf0.1). It is read back under lineitem's
     declared schema, so the read starts no footer-inference job."""
     li = load_table(spark, sf_dir, "lineitem")
     path = materialize_once(
         scratch_dir("li_by_returnflag", sf_dir),
-        lambda tmp: li.write.mode("overwrite")
+        lambda p: li.write.mode("overwrite")
         .partitionBy("l_returnflag")
-        .parquet(tmp),
+        .parquet(p),
     )
     return spark.read.schema(li.schema).parquet(path)
 
@@ -287,7 +286,7 @@ def etl_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The fragmented input is simulated with a 64-way repartition
     write of orders. It is a pure function of the immutable fixture,
-    so it is written once per fixture through materialize_once, as
+    so materialize_once writes it once per application, as
     `_lineitem_by_returnflag` is (perfbench `write_stream`, sf0.02 on
     `local[4]`: query median 2.85 → 0.99 s over 12 pairs). Only this
     input is cached: every call runs the whole compaction
@@ -297,7 +296,7 @@ def etl_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = load_table(spark, sf_dir, "orders")
     frag = materialize_once(
         scratch_dir("orders_fragmented", sf_dir),
-        lambda tmp: od.repartition(64).write.mode("overwrite").parquet(tmp),
+        lambda p: od.repartition(64).write.mode("overwrite").parquet(p),
     )
     compact = scratch_dir("orders_compacted", sf_dir)
     (

@@ -15,6 +15,10 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from infofarmsparkml_spark.operators._util import _estimated_bytes, load_table
 from infofarmsparkml_spark.registry import query
 
+# Estimated input size above which global_row_number checkpoints its
+# stamped frame (see its docstring).
+ROWNUM_MATERIALIZE_BYTES = 1 << 30
+
 
 def global_row_number(
     df: DataFrame, order_cols, out_col: str, n_parts: int = 32
@@ -57,20 +61,20 @@ def global_row_number(
     two branches directly), but they are a version-upgrade hazard,
     and at 100 TB the re-derived branch is a second full pass over
     the table rather than a page-cache hit. The shape is therefore
-    SIZE-GATED: above ``spark.infofarmsparkml.rownum.materializeBytes``
-    (default 1 GiB; estimate from the optimizer stats — when no
-    estimate is available the gate counts it as above) the stamped
+    SIZE-GATED: above ``ROWNUM_MATERIALIZE_BYTES`` (1 GiB; estimate
+    from the optimizer stats — when no estimate is available the
+    gate counts it as above) the stamped
     frame is localCheckpoint-ed — ONE physical execution feeds both
     branches, making boundary/id consistency structural instead of
     empirical. Below the gate the lazy double-derivation stands: it
     A/B-measured FASTER at bench scale (min 0.69 s vs 0.82 s
     checkpointed — the eager write barrier costs more than the
-    in-page-cache re-derivation saves), and the gate default keeps
+    in-page-cache re-derivation saves), and the gate keeps
     the driver's bench on the measured-faster arm at every shipped
-    SF. Production justification for the 1 GiB default: past ~1 GiB
-    the second pass is guaranteed off-page-cache I/O plus a second
-    full range shuffle, which dwarfs the checkpoint's write barrier;
-    the conf is the scale knob, not a local[32] tune.
+    SF. Production justification for 1 GiB: past ~1 GiB the second
+    pass is guaranteed off-page-cache I/O plus a second full range
+    shuffle, which dwarfs the checkpoint's write barrier; the constant
+    is the scale knob, not a local[32] tune.
     Scale: data-sized movement is the range shuffle (×2 with the
     lazy branches, ×1 checkpointed); the offsets frame is
     O(n_parts) regardless of input size."""
@@ -81,12 +85,7 @@ def global_row_number(
         .withColumn("_mid", F.monotonically_increasing_id())
     )
     est = _estimated_bytes(df)
-    gate = int(
-        df.sparkSession.conf.get(
-            "spark.infofarmsparkml.rownum.materializeBytes", str(1 << 30)
-        )
-    )
-    if est is None or est > gate:
+    if est is None or est > ROWNUM_MATERIALIZE_BYTES:
         local = local.localCheckpoint()
     offsets = (
         local.groupBy("_pid")

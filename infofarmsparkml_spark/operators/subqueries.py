@@ -1,7 +1,9 @@
 """SQL entry point (SURVEY.md §3.2 E2) + subquery surface.
 
-Every query here goes through ``spark.sql`` over temp views — the
-second of the three engine entry points — and exercises the
+Every query here goes through ``spark.sql`` — the second of the
+three engine entry points — with the fixture frames bound as SQL
+parameters (``{lineitem}`` in the text, ``lineitem=df`` in the call),
+so no temp view is left in the caller's catalog. Each exercises the
 subquery shapes Catalyst must decorrelate (SURVEY.md §4:
 ``RewriteCorrelatedScalarSubquery``): scalar subqueries, correlated
 scalar aggregates, EXISTS/IN semi-joins, CTEs, and lateral
@@ -18,16 +20,6 @@ from infofarmsparkml_spark.operators._util import load_table
 from infofarmsparkml_spark.registry import query
 
 
-def _views(spark: SparkSession, sf_dir: str, *tables: str) -> None:
-    """Register fixture tables as temp views for spark.sql queries.
-
-    Cheap (plan-only) and idempotent; re-registered per call so a
-    session that switches sf_dir never reads stale views.
-    """
-    for t in tables:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 @query(
     "sql_scalar_subquery",
     oracle="""
@@ -40,13 +32,13 @@ def sql_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncorrelated scalar subquery: customers above the global
     mean balance. Catalyst plans the subquery as an independent
     aggregate whose single-row result broadcasts into the filter."""
-    _views(spark, sf_dir, "customer")
     return spark.sql(
         """
         SELECT c_custkey, c_name, c_acctbal
-        FROM customer
-        WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM customer)
-        """
+        FROM {customer}
+        WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM {customer})
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 
@@ -67,16 +59,16 @@ def sql_correlated_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-part aggregate + join — one pass over the fact table, not
     one subquery per row. l_quantity is integer-valued, so the
     double average is exact and the comparison engine-stable."""
-    _views(spark, sf_dir, "lineitem")
     return spark.sql(
         """
         SELECT l.l_orderkey, l.l_partkey, l.l_quantity
-        FROM lineitem l
+        FROM {lineitem} l
         WHERE l.l_quantity < (
-          SELECT 0.5 * AVG(l2.l_quantity) FROM lineitem l2
+          SELECT 0.5 * AVG(l2.l_quantity) FROM {lineitem} l2
           WHERE l2.l_partkey = l.l_partkey
         )
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -99,20 +91,24 @@ def sql_exists_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS + IN-subquery: high-quantity orders from
     ASIA customers. Both predicates become left-semi joins (the
     customer side over broadcast-sized dims)."""
-    _views(spark, sf_dir, "orders", "lineitem", "customer", "nation", "region")
     return spark.sql(
         """
         SELECT o_orderkey, o_totalprice
-        FROM orders
-        WHERE EXISTS (SELECT 1 FROM lineitem
+        FROM {orders}
+        WHERE EXISTS (SELECT 1 FROM {lineitem}
                       WHERE l_orderkey = o_orderkey AND l_quantity >= 49)
           AND o_custkey IN (
                 SELECT c_custkey
-                FROM customer
-                JOIN nation ON c_nationkey = n_nationkey
-                JOIN region ON n_regionkey = r_regionkey
+                FROM {customer}
+                JOIN {nation} ON c_nationkey = n_nationkey
+                JOIN {region} ON n_regionkey = r_regionkey
                 WHERE r_name = 'ASIA')
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        customer=load_table(spark, sf_dir, "customer"),
+        nation=load_table(spark, sf_dir, "nation"),
+        region=load_table(spark, sf_dir, "region"),
     )
 
 
@@ -138,14 +134,13 @@ def sql_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose total order revenue exceeds the mean customer revenue.
     Revenue sums in DECIMAL (exact, order-independent) and
     surfaces as double via string, the SQL form of _util.sum_cents."""
-    _views(spark, sf_dir, "orders")
     return spark.sql(
         """
         WITH cust_rev AS (
           SELECT o_custkey,
                  SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS rev_d,
                  COUNT(*) AS n_orders
-          FROM orders GROUP BY o_custkey
+          FROM {orders} GROUP BY o_custkey
         )
         SELECT o_custkey,
                CAST(CAST(rev_d AS STRING) AS DOUBLE) AS revenue,
@@ -153,7 +148,8 @@ def sql_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM cust_rev
         WHERE CAST(rev_d AS DOUBLE) >
               (SELECT AVG(CAST(rev_d AS DOUBLE)) FROM cust_rev)
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -168,14 +164,14 @@ WHERE lang = 'en'
 def sql_lateral_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LATERAL VIEW explode — the SQL-surface twin of fn_explode,
     through the generator path of the SQL parser."""
-    _views(spark, sf_dir, "documents")
     return spark.sql(
         """
         SELECT doc_id, tok
-        FROM documents
+        FROM {documents}
         LATERAL VIEW explode(split(text, ' ')) t AS tok
         WHERE lang = 'en'
-        """
+        """,
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -195,15 +191,16 @@ def sql_lateral_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     lateral always yields one row (NULL max / 0 count for
     order-less customers), so the join preserves all customers;
     decorrelates to an outer join against a grouped aggregate."""
-    _views(spark, sf_dir, "customer", "orders")
     return spark.sql(
         """
         SELECT c_custkey, t.max_price, t.n_orders
-        FROM customer, LATERAL (
+        FROM {customer}, LATERAL (
           SELECT MAX(o_totalprice) AS max_price, COUNT(*) AS n_orders
-          FROM orders WHERE o_custkey = c_custkey
+          FROM {orders} WHERE o_custkey = c_custkey
         ) t
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -226,15 +223,16 @@ def sql_not_in_null_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     the anti-join reading, but the plan shape is the NAAJ one. The
     build side must broadcast — at scale, keep NOT IN subqueries
     small or rewrite to anti-join on a provably non-null key."""
-    _views(spark, sf_dir, "orders", "customer")
     return spark.sql(
         """
         SELECT o_orderpriority, COUNT(*) AS n_orders
-        FROM orders
+        FROM {orders}
         WHERE o_custkey NOT IN
-              (SELECT c_custkey FROM customer WHERE c_acctbal < 0)
+              (SELECT c_custkey FROM {customer} WHERE c_acctbal < 0)
         GROUP BY o_orderpriority
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 
@@ -261,7 +259,6 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive side is a constant-size dimension; at scale keep the
     recursive branch small (the big table belongs OUTSIDE the CTE,
     joined once, exactly as here — the ladder broadcasts)."""
-    _views(spark, sf_dir, "customer")
     return spark.sql(
         """
         WITH RECURSIVE ladder(lvl, lo) AS (
@@ -271,10 +268,11 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT l.lvl, l.lo, COUNT(c.c_custkey) AS n_customers
         FROM ladder l
-        LEFT JOIN customer c
+        LEFT JOIN {customer} c
           ON c.c_acctbal >= l.lo AND c.c_acctbal < l.lo + 1000.0
         GROUP BY l.lvl, l.lo
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 
@@ -297,18 +295,18 @@ def sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     never string-spliced, and Catalyst constant-folds them exactly
     like inline literals (same pushed filter, same plan). The oracle
     inlines the same constants."""
-    _views(spark, sf_dir, "orders")
     return spark.sql(
         """
         SELECT o_orderpriority,
                COUNT(*) AS n_orders,
                CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(12,4))) AS STRING)
                     AS DOUBLE) AS revenue
-        FROM orders
+        FROM {orders}
         WHERE o_totalprice > :min_price AND o_orderstatus = :status
         GROUP BY o_orderpriority
         """,
         args={"min_price": 150000.0, "status": "O"},
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -346,7 +344,6 @@ def sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     satisfying threshold (equivalent to the doubling search because
     coverage is monotone in t; the candidate list covers the
     fixture-wide l_quantity domain of 1-50 at every SF)."""
-    _views(spark, sf_dir, "lineitem")
     return spark.sql(
         """
         BEGIN
@@ -354,20 +351,21 @@ def sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
           DECLARE cov BIGINT DEFAULT 0;
           DECLARE total BIGINT DEFAULT 0;
           SET total = (SELECT SUM(CAST(ROUND(l_extendedprice * 100)
-                                       AS BIGINT)) FROM lineitem);
+                                       AS BIGINT)) FROM {lineitem});
           SET cov = (SELECT COALESCE(SUM(CAST(ROUND(l_extendedprice * 100)
                                               AS BIGINT)), 0)
-                     FROM lineitem WHERE l_quantity <= t);
+                     FROM {lineitem} WHERE l_quantity <= t);
           WHILE cov * 10 < total * 9 DO
             SET t = t * 2;
             SET cov = (SELECT COALESCE(SUM(CAST(ROUND(l_extendedprice * 100)
                                                 AS BIGINT)), 0)
-                       FROM lineitem WHERE l_quantity <= t);
+                       FROM {lineitem} WHERE l_quantity <= t);
           END WHILE;
           SELECT t AS threshold, cov AS covered_cents,
                  total AS total_cents;
         END
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -394,7 +392,6 @@ def sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     UDF they cost nothing at 100 TB. The charge column follows the
     `udf_plain` precedent: the raw IEEE product compares at full
     precision because both engines multiply in the same order."""
-    _views(spark, sf_dir, "lineitem")
     spark.sql(
         """
         CREATE OR REPLACE TEMPORARY FUNCTION ifsml_charge(
@@ -418,7 +415,8 @@ def sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
                ifsml_charge(l.l_extendedprice, l.l_discount, l.l_tax)
                  AS charge,
                t.tier
-        FROM lineitem l JOIN ifsml_qty_tiers() t
+        FROM {lineitem} l JOIN ifsml_qty_tiers() t
           ON l.l_quantity > t.lo AND l.l_quantity <= t.hi
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )

@@ -149,14 +149,12 @@ def udtf_python(spark: SparkSession, sf_dir: str) -> DataFrame:
                     yield (tok,)
 
     spark.udtf.register("ifsml_tokenize", Tokenize)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "ifsml_udtf_docs"
-    )
     return spark.sql(
         """
         SELECT d.doc_id, t.token
-        FROM ifsml_udtf_docs d, LATERAL ifsml_tokenize(d.text) t
-        """
+        FROM {documents} d, LATERAL ifsml_tokenize(d.text) t
+        """,
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -296,14 +294,12 @@ def udtf_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield tuple(toks[i : i + n])
 
     spark.udtf.register("ifsml_ngrams", NGrams)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "ifsml_udtf_docs"
-    )
     return spark.sql(
         """
         SELECT d.doc_id, t.*
-        FROM ifsml_udtf_docs d, LATERAL ifsml_ngrams(d.text, 3) t
-        """
+        FROM {documents} d, LATERAL ifsml_ngrams(d.text, 3) t
+        """,
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 

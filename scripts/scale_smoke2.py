@@ -23,10 +23,9 @@ Measurement fidelity (beyond the r5-era gc/ordering hygiene, which
 is kept): the co-purchase edge scratch is WARMED once per scale
 before the graph cohort and its build time reported separately
 ("edges_warm_sec") — in earlier sweeps the first graph op at each
-fresh scale silently paid that one-time materialization inside its
-ratio (the sf0.1 scratch is usually warm from prior runs, the
-synthetic scales' never are), which is fixture-build cost, not
-algorithm scaling.
+scale silently paid that one-time materialization inside its ratio
+(scratch lives as long as the Spark application, so every scale
+starts cold), which is fixture-build cost, not algorithm scaling.
 
 Writes SCALE_SMOKE_r{N}.json at the repo root:
   {op: {"sf0.1_sec": a, "sf1_sec": b, "sf10_sec": c,

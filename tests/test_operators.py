@@ -2212,19 +2212,55 @@ def test_sink_build_starts_only_its_writes(spark, sf_dir, name, n_jobs):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == n_jobs
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "sql_scalar_subquery",
+        "sql_correlated_scalar",
+        "sql_exists_in",
+        "sql_cte",
+        "sql_lateral_view",
+        "sql_lateral_join",
+        "sql_not_in_null_aware",
+        "sql_recursive_cte",
+        "sql_parameterized",
+        "sql_scripting",
+        "sql_udf",
+        "fn_collation",
+        "udtf_python",
+        "udtf_analyze",
+    ],
+)
+def test_sql_queries_leave_no_temp_view(spark, sf_dir, name):
+    """A query that runs SQL text over fixture tables binds them as
+    DataFrame parameters, so it registers no temp view that would
+    shadow a table of the caller's catalog. Run in a fresh session of
+    the application, so views left by earlier tests cannot hide one."""
+    session = spark.newSession()
+    before = session.catalog.listTables()
+    assert q(name)(session, sf_dir).collect()
+    assert session.catalog.listTables() == before
+
+
 def test_scoped_confs_unset_what_they_found_unset(spark, sf_dir):
     """A query that scopes a session conf leaves a key it found unset
     unset, instead of writing the default back as an explicit value:
-    etl_partition_overwrite's overwrite mode, and the state-partition
-    count a stateful stream sets."""
+    etl_partition_overwrite's overwrite mode, ps_pandas_api's default
+    index type, and the state-partition count a stateful stream
+    sets."""
     from infofarmsparkml_spark.streaming.ops import _state_sized
 
-    keys = ("spark.sql.sources.partitionOverwriteMode", "spark.sql.shuffle.partitions")
+    keys = (
+        "spark.sql.sources.partitionOverwriteMode",
+        "spark.sql.shuffle.partitions",
+        "pandas_on_Spark.compute.default_index_type",
+    )
     saved = {k: spark.conf.get(k, None) for k in keys}
     try:
         for k in keys:
             spark.conf.unset(k)
         assert q("etl_partition_overwrite")(spark, sf_dir).count() > 0
+        assert q("ps_pandas_api")(spark, sf_dir).count() > 0
         with _state_sized(spark):
             assert spark.conf.get(keys[1]) == str(
                 spark.sparkContext.defaultParallelism

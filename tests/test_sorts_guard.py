@@ -15,8 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W, functions as F
 
 from infofarmsparkml_spark import registry
-
-GATE = "spark.infofarmsparkml.rownum.materializeBytes"
+from infofarmsparkml_spark.operators import sorts
 
 
 def q(name):
@@ -55,29 +54,24 @@ def test_global_row_number_lazy_arm_matches_truth(spark, sf_dir):
     assert got == want
 
 
-def test_global_row_number_checkpoint_arm_matches_truth(spark, sf_dir):
+def test_global_row_number_checkpoint_arm_matches_truth(
+    spark, sf_dir, monkeypatch
+):
     """Force the materialized arm (gate at 0 bytes) and require the
     identical output AND the structural one-execution property (the
     offsets branch reads the checkpointed RDD, so at most one
     parquet scan of orders appears in the plan)."""
-    prev = spark.conf.get(GATE, None)
-    spark.conf.set(GATE, "0")
-    try:
-        df = q("sort_multi")(spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "ExistingRDD" in plan, plan[:2000]
-        assert plan.count("Scan parquet") == 0, plan[:2000]
-        got = _rows(df)
-    finally:
-        if prev is None:
-            spark.conf.unset(GATE)
-        else:
-            spark.conf.set(GATE, prev)
+    monkeypatch.setattr(sorts, "ROWNUM_MATERIALIZE_BYTES", 0)
+    df = q("sort_multi")(spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in plan, plan[:2000]
+    assert plan.count("Scan parquet") == 0, plan[:2000]
+    got = _rows(df)
     want = _rows(_truth_sort_multi(spark, sf_dir))
     assert got == want
 
 
-def test_sort_range_partitioned_both_arms_match_truth(spark, sf_dir):
+def test_sort_range_partitioned_both_arms_match_truth(spark, sf_dir, monkeypatch):
     from infofarmsparkml_spark.operators._util import load_table
 
     orders = load_table(spark, sf_dir, "orders").filter(
@@ -93,15 +87,8 @@ def test_sort_range_partitioned_both_arms_match_truth(spark, sf_dir):
         )
     )
     assert _rows(q("sort_range_partitioned")(spark, sf_dir)) == want
-    prev = spark.conf.get(GATE, None)
-    spark.conf.set(GATE, "0")
-    try:
-        assert _rows(q("sort_range_partitioned")(spark, sf_dir)) == want
-    finally:
-        if prev is None:
-            spark.conf.unset(GATE)
-        else:
-            spark.conf.set(GATE, prev)
+    monkeypatch.setattr(sorts, "ROWNUM_MATERIALIZE_BYTES", 0)
+    assert _rows(q("sort_range_partitioned")(spark, sf_dir)) == want
 
 
 def test_global_row_number_unknown_estimate_takes_checkpoint_arm(
@@ -109,8 +96,6 @@ def test_global_row_number_unknown_estimate_takes_checkpoint_arm(
 ):
     """An unavailable size estimate must select the checkpointed arm
     (the one with the one-execution guarantee), never the lazy one."""
-    from infofarmsparkml_spark.operators import sorts
-
     monkeypatch.setattr(sorts, "_estimated_bytes", lambda df: None)
     df = q("sort_multi")(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()

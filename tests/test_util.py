@@ -1,16 +1,20 @@
 """Tests for operators/_util.py helpers.
 
-Most are filesystem-level tests of the caching helpers, covering the
-``materialize_once`` hazards flagged in ADVICE r7/r8: a crash-orphaned
-partial dir (exists, no _SUCCESS) must be replaced — not served — and
-the writer's temp dir must never leak, including when ``write_fn``
-itself raises. Pure-filesystem tests: write_fn stands in for a Spark
-sink by creating a dir with part files and a _SUCCESS marker.
+The first few cover the scratch helpers. Scratch is per Spark
+application and deleted with it, so ``materialize_once`` is a plain
+write-once cache: it writes unless ``_SUCCESS`` exists, and a partial
+dir left by a failed attempt is overwritten, never served. Those are
+filesystem-level tests: write_fn stands in for a Spark sink in
+overwrite mode, replacing the dir with part files and a _SUCCESS
+marker.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import subprocess
+import sys
 from decimal import Decimal
 
 import pytest
@@ -21,13 +25,15 @@ from infofarmsparkml_spark.operators._util import materialize_once, sum_cents
 
 
 def _fake_sink(content: str):
-    """A write_fn that mimics a Spark parquet sink's layout."""
+    """A write_fn that mimics a Spark parquet sink in overwrite mode:
+    it deletes whatever is at the path, then writes the layout."""
 
-    def write(tmp: str) -> None:
-        os.makedirs(tmp)
-        with open(os.path.join(tmp, "part-00000"), "w") as f:
+    def write(path: str) -> None:
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
+        with open(os.path.join(path, "part-00000"), "w") as f:
             f.write(content)
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+        open(os.path.join(path, "_SUCCESS"), "w").close()
 
     return write
 
@@ -41,9 +47,9 @@ def test_materialize_once_writes_then_caches(tmp_path):
     path = str(tmp_path / "cache")
     calls = []
 
-    def write(tmp):
-        calls.append(tmp)
-        _fake_sink("v1")(tmp)
+    def write(p):
+        calls.append(p)
+        _fake_sink("v1")(p)
 
     assert materialize_once(path, write) == path
     assert _read(path) == "v1"
@@ -51,15 +57,13 @@ def test_materialize_once_writes_then_caches(tmp_path):
     # second call: _SUCCESS short-circuits, write_fn not invoked
     materialize_once(path, write)
     assert len(calls) == 1
-    # no leaked temp siblings
     assert os.listdir(tmp_path) == ["cache"]
 
 
 def test_materialize_once_replaces_orphaned_partial_dir(tmp_path):
-    """A dir at ``path`` WITHOUT _SUCCESS is a crashed writer's
-    partial output: it must be replaced by the fresh write, never
-    returned as-is (the pre-fix code treated any rename failure as
-    a lost race and served the partial dir)."""
+    """A dir at ``path`` WITHOUT _SUCCESS is a failed writer's
+    partial output: the overwriting write replaces it, and it is
+    never returned as-is."""
     path = str(tmp_path / "cache")
     os.makedirs(path)
     with open(os.path.join(path, "part-00000"), "w") as f:
@@ -68,232 +72,71 @@ def test_materialize_once_replaces_orphaned_partial_dir(tmp_path):
     assert materialize_once(path, _fake_sink("fresh")) == path
     assert _read(path) == "fresh"
     assert os.path.exists(os.path.join(path, "_SUCCESS"))
-    # the contended path leaves the flock file behind by design
-    assert sorted(os.listdir(tmp_path)) == ["cache", "cache.lock"]
-
-
-def test_materialize_once_lost_race_is_cache_hit(tmp_path):
-    """If a concurrent writer publishes a complete dir between our
-    write and our rename, the rename failure is a cache hit: the
-    winner's content is served and our temp copy is removed."""
-    path = str(tmp_path / "cache")
-
-    def write(tmp):
-        # simulate the interleaving: the rival completes first
-        _fake_sink("winner")(path)
-        _fake_sink("loser")(tmp)
-
-    assert materialize_once(path, write) == path
-    assert _read(path) == "winner"
-    # loser tmp cleaned; the contended path leaves the flock file
-    assert sorted(os.listdir(tmp_path)) == ["cache", "cache.lock"]
+    assert os.listdir(tmp_path) == ["cache"]
 
 
 def test_materialize_once_cleans_tmp_on_write_failure(tmp_path):
-    """write_fn raising must not leak its temp dir or publish
-    anything at ``path``."""
+    """A write_fn that raises publishes no _SUCCESS, so the next call
+    writes again instead of serving the partial dir."""
     path = str(tmp_path / "cache")
 
-    def write(tmp):
-        os.makedirs(tmp)
-        with open(os.path.join(tmp, "part-00000"), "w") as f:
+    def write(p):
+        os.makedirs(p)
+        with open(os.path.join(p, "part-00000"), "w") as f:
             f.write("junk")
         raise RuntimeError("executor lost")
 
     with pytest.raises(RuntimeError, match="executor lost"):
         materialize_once(path, write)
-    assert not os.path.exists(path)
-    assert os.listdir(tmp_path) == []  # tmp removed
-
-
-def test_materialize_once_orphan_renamed_aside_under_lock(tmp_path):
-    """The TOCTOU fixes (ADVICE r9 + r10): an orphaned partial
-    TARGET dir is never rmtree'd in place — it is renamed aside
-    (renames cannot destroy a rival's just-published part files the
-    way an in-place rmtree could, since POSIX rename succeeds onto
-    an empty orphan) — and that rename-aside happens only while
-    holding the exclusive flock. Recorded by interleaving-order
-    instrumentation on flock, rename, and rmtree."""
-    import shutil
-
-    import infofarmsparkml_spark.operators._util as util
-
-    path = str(tmp_path / "cache")
-    os.makedirs(path)
-    with open(os.path.join(path, "part-00000"), "w") as f:
-        f.write("PARTIAL")  # orphaned partial: forces the locked path
-
-    events = []
-    import fcntl
-
-    real_flock, real_rename, real_rmtree = fcntl.flock, os.rename, shutil.rmtree
-
-    def spy_flock(fd, op):
-        if op == fcntl.LOCK_EX:
-            events.append("lock")
-        return real_flock(fd, op)
-
-    def spy_rename(src, dst, *a, **k):
-        if str(src) == path and ".orphan-" in str(dst):
-            events.append("rename_aside")
-        return real_rename(src, dst, *a, **k)
-
-    def spy_rmtree(p, *a, **k):
-        if str(p) == path:
-            events.append("rmtree_target")
-        return real_rmtree(p, *a, **k)
-
-    fcntl.flock, os.rename, shutil.rmtree = spy_flock, spy_rename, spy_rmtree
-    try:
-        assert util.materialize_once(path, _fake_sink("fresh")) == path
-    finally:
-        fcntl.flock, os.rename, shutil.rmtree = (
-            real_flock, real_rename, real_rmtree,
-        )
-    assert "rmtree_target" not in events  # target is never deleted in place
-    assert "rename_aside" in events
-    assert events.index("lock") < events.index("rename_aside")
+    assert not os.path.exists(os.path.join(path, "_SUCCESS"))
+    assert materialize_once(path, _fake_sink("fresh")) == path
     assert _read(path) == "fresh"
-    # the aside copy was cleaned up, not leaked
-    assert not [e for e in os.listdir(tmp_path) if ".orphan-" in e]
 
 
-def test_materialize_once_persistent_partial_raises(tmp_path):
-    """If the target keeps reappearing as a partial dir (pathological
-    filesystem state), the last OSError propagates instead of the
-    partial dir being silently served."""
-    path = str(tmp_path / "cache")
+_CHILD = """
+import os
+import sys
+from infofarmsparkml_spark import registry
+from infofarmsparkml_spark.operators._util import scratch_dir
+from infofarmsparkml_spark.session import get_spark
 
-    real_rename = os.rename
-
-    def hostile_rename(src, dst, *a, **k):
-        if dst == path:
-            # someone keeps recreating a partial dir at the target
-            os.makedirs(path, exist_ok=True)
-            with open(os.path.join(path, "part-00000"), "w") as f:
-                f.write("PARTIAL")
-            raise OSError(39, "Directory not empty")
-        return real_rename(src, dst, *a, **k)
-
-    os.rename = hostile_rename
-    try:
-        with pytest.raises(OSError):
-            materialize_once(path, _fake_sink("v1"))
-    finally:
-        os.rename = real_rename
-    # our tmp never leaks even on the failure path
-    assert [e for e in os.listdir(tmp_path) if ".tmp-" in e] == []
+spark = get_spark(app_name="scratch-scope-child", cpus=1)
+fn, _ = registry.get("sink_parquet")
+assert fn(spark, sys.argv[1]).count() > 0
+path = scratch_dir("lineitem_by_flag", sys.argv[1])
+assert os.path.isdir(path)
+print(path)
+"""
 
 
-def test_materialize_once_multiprocess_stress(tmp_path):
-    """True cross-process race (the unit tests above simulate
-    interleavings in-process): 8 writers hammer the same path
-    concurrently — starting from a planted orphaned-partial dir so
-    the contended flock path is actually exercised — while a reader
-    continuously asserts the publish invariant: whenever _SUCCESS
-    exists, the part file is present and complete. Pre-fix code
-    could briefly unpublish a complete dir (ADVICE r9 TOCTOU); the
-    reader would catch that as a missing/partial part file."""
-    import multiprocessing as mp
-    import time
+def test_scratch_is_per_application(spark, sf_dir):
+    """Scratch lies under the application's own driver temp dir, so
+    two processes never share a path, and Spark deletes it with the
+    application: a child process that runs sink_parquet writes
+    elsewhere than this session, and its scratch is gone once it
+    exits."""
+    from pyspark import SparkFiles
 
-    path = str(tmp_path / "cache")
-    os.makedirs(path)
-    with open(os.path.join(path, "part-00000"), "w") as f:
-        f.write("PARTIAL")  # no _SUCCESS: every writer sees an orphan
+    from infofarmsparkml_spark.operators._util import scratch_dir
 
-    payload = "x" * 4096
-
-    def writer(barrier, errs):
-        try:
-            barrier.wait(timeout=30)
-            got = materialize_once(path, _fake_sink(payload))
-            with open(os.path.join(got, "part-00000")) as f:
-                assert f.read() == payload
-        except Exception as e:  # pragma: no cover - failure reporting
-            errs.put(repr(e))
-
-    def reader(stop, errs):
-        try:
-            while not stop.is_set():
-                if os.path.exists(os.path.join(path, "_SUCCESS")):
-                    # published ⇒ content must be complete, always
-                    with open(os.path.join(path, "part-00000")) as f:
-                        assert f.read() == payload
-                time.sleep(0.001)
-        except Exception as e:  # pragma: no cover - failure reporting
-            errs.put("reader: " + repr(e))
-
-    ctx = mp.get_context("fork")
-    errs = ctx.Queue()
-    barrier = ctx.Barrier(8)
-    stop = ctx.Event()
-    ws = [ctx.Process(target=writer, args=(barrier, errs)) for _ in range(8)]
-    rd = ctx.Process(target=reader, args=(stop, errs))
-    rd.start()
-    for w in ws:
-        w.start()
-    for w in ws:
-        w.join(timeout=60)
-    stop.set()
-    rd.join(timeout=10)
-    failures = []
-    while not errs.empty():
-        failures.append(errs.get())
-    assert not failures, failures
-    with open(os.path.join(path, "part-00000")) as f:
-        assert f.read() == payload
-    assert os.path.exists(os.path.join(path, "_SUCCESS"))
-
-
-def test_scratch_gc_unlinks_stale_locks_spares_current(tmp_path, monkeypatch):
-    """scratch_dir's sibling GC (ADVICE r10/r11): stale-generation
-    ``<dir>.lock`` flock files must be unlinked explicitly (rmtree
-    is a no-op on plain files, so they used to leak one per fixture
-    regeneration forever) — but ONLY when a non-blocking flock
-    probe proves nobody holds them: a stale lock still HELD by a
-    process violating the forward-only fixture contract must be
-    spared, since unlinking it would let two lockers hold "the
-    same" lock via different inodes. Everything owned by the
-    current generation — the dir, its .lock, .tmp-*, .orphan-*
-    siblings — must survive regardless."""
-    import fcntl
-    import tempfile
-
-    from infofarmsparkml_spark.operators import _util
-
-    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
-    sf = tmp_path / "sfX"
-    sf.mkdir()
-    (sf / "t.parquet").write_bytes(b"x")
-    current = os.path.basename(_util.scratch_dir("edges", str(sf)))
-    base = tmp_path / "infofarmsparkml_scratch"
-
-    stale_dir = base / "edges_sfX_deadbeef00"
-    stale_dir.mkdir()
-    stale_lock = base / "edges_sfX_deadbeef00.lock"
-    stale_lock.write_text("")
-    held_lock = base / "edges_sfX_deadbeef11.lock"
-    held_lock.write_text("")
-    cur_dir = base / current
-    cur_dir.mkdir()
-    cur_lock = base / f"{current}.lock"
-    cur_lock.write_text("")
-    cur_tmp = base / f"{current}.tmp-1-abc"
-    cur_tmp.mkdir()
-    cur_orphan = base / f"{current}.orphan-abc"
-    cur_orphan.mkdir()
-
-    with open(held_lock, "r+") as holder:
-        fcntl.flock(holder, fcntl.LOCK_EX)  # a live (contract-violating) locker
-        assert os.path.basename(_util.scratch_dir("edges", str(sf))) == current
-    assert not stale_dir.exists() and not stale_lock.exists()
-    assert held_lock.exists(), "held stale lock must be spared by the probe"
-    for p in (cur_dir, cur_lock, cur_tmp, cur_orphan):
-        assert p.exists(), p
-    # released now: the next GC pass may reap it
-    assert os.path.basename(_util.scratch_dir("edges", str(sf))) == current
-    assert not held_lock.exists()
+    mine = scratch_dir("lineitem_by_flag", sf_dir)
+    assert os.path.dirname(mine) == SparkFiles.getRootDirectory()
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pypath = os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")]))
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g", PYTHONPATH=pypath)
+    out = subprocess.run(
+        [sys.executable, "-c", _CHILD, sf_dir],
+        env=env,
+        cwd=root,
+        capture_output=True,
+        text=True,
+        timeout=300,
+        check=True,
+    )
+    theirs = out.stdout.strip().splitlines()[-1]
+    assert os.path.basename(theirs) == os.path.basename(mine)
+    assert theirs != mine
+    assert not os.path.exists(theirs)
 
 
 def test_rotate_slate_policy(tmp_path, monkeypatch):
