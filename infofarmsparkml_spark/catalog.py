@@ -4,8 +4,10 @@ Tables (FIXTURES.md): region nation customer supplier part orders
 lineitem events documents embeddings. ``SCHEMAS`` declares the nine
 non-``events`` tables, so a read skips parquet footer inference and
 the Spark job it starts; a production job gets the same contract from
-its metastore. ``events`` is still read from its footer, its ``ts``
-normalized by ``_us_ts`` (shared with the streaming read).
+its metastore. ``events`` is declared too, except for the type of
+``ts``, which ``_events_schema`` takes from one footer read on the
+driver; its ``ts`` is normalized by ``_us_ts`` (shared with the
+streaming read).
 ``load_table`` is the single scan entry point so every operator
 inherits predicate pushdown + column pruning from the parquet source
 (verified by plan tests).
@@ -62,24 +64,52 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _set_nanos_as_long(spark: SparkSession) -> None:
-    """Best-effort ``spark.sql.legacy.parquet.nanosAsLong=true``, set
-    before any read of events.parquet (batch or stream).
+def _events_schema(spark: SparkSession, path_glob: str) -> str:
+    """The declared schema of the events files matching ``path_glob``
+    (batch and stream read alike). Only ``ts``'s parquet type varies
+    between writers, so it is read from the first file's footer on the
+    driver (pyarrow, no Spark job): µs or ms without a time zone →
+    ``timestamp_ntz``, with one → ``timestamp``, ``int64`` → ``bigint``.
+    TIMESTAMP(NANOS) → ``bigint`` of ns, which Spark 4.1.2 reads only
+    with ``spark.sql.legacy.parquet.nanosAsLong`` set (unset, the read
+    fails with [PARQUET_TYPE_ILLEGAL]), so that one case sets it on the
+    caller's session: the conf must hold when the read executes, after
+    this returns. A directory written by Spark is read at its first
+    part file."""
+    import glob
+    import os
 
-    events.ts may be written as parquet TIMESTAMP(NANOS) (the current
-    fixtures store µs). Spark 4.1.2 honors the conf: unset, a
-    ``TIMESTAMP(NANOS,false)`` column fails the read with
-    [PARQUET_TYPE_ILLEGAL]; set, it reads as a BIGINT of ns, which
-    ``_us_ts`` turns into µs. External harnesses run these queries on
-    their own vanilla sessions, so the conf is set here rather than
-    relied on from ``get_spark``; the dtype dispatch in ``_us_ts`` can
-    only run if the read succeeds (tested in
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    first = sorted(glob.glob(path_glob))[0]
+    if os.path.isdir(first):
+        first = sorted(glob.glob(os.path.join(first, "*.parquet")))[0]
+    ts = pq.read_schema(first).field("ts").type
+    if pa.types.is_int64(ts):
+        ts_type = "bigint"
+    elif pa.types.is_timestamp(ts) and ts.unit == "ns":
+        _set_nanos_as_long(spark)
+        ts_type = "bigint"
+    elif pa.types.is_timestamp(ts):
+        ts_type = "timestamp" if ts.tz else "timestamp_ntz"
+    else:
+        raise TypeError(f"events.ts in {first} is {ts}, not a timestamp or int64")
+    return (
+        f"event_id bigint, ts {ts_type}, user_id bigint, event_type string, "
+        "value double, props string"
+    )
+
+
+def _set_nanos_as_long(spark: SparkSession) -> None:
+    """Set ``spark.sql.legacy.parquet.nanosAsLong=true`` for a
+    TIMESTAMP(NANOS) ``ts`` (tested in
     ``tests/test_streaming.py::test_events_loader_nanos_timestamp``).
-    Wrapped because some builds mark retired confs non-settable."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
+    External harnesses run these queries on their own vanilla sessions,
+    so the conf is set here rather than relied on from ``get_spark``; a
+    build where it cannot be set cannot read the file, so a failure
+    raises."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
 def _us_ts(df: DataFrame) -> DataFrame:
@@ -101,5 +131,5 @@ def _us_ts(df: DataFrame) -> DataFrame:
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _set_nanos_as_long(spark)
-    return _us_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    path = f"{sf_dir}/events.parquet"
+    return _us_ts(spark.read.schema(_events_schema(spark, path)).parquet(path))

@@ -696,12 +696,17 @@ def dq_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from infofarmsparkml_spark.operators._util import cents
 
     # Run the observed action in a THROWAWAY newSession(): the
-    # Observation listener stays registered on its session after
-    # `get`, and a lingering listener breaks closure serialization
-    # for later MLlib fits on the same session (reproduced: any
-    # pyspark.ml fit after an Observation action fails with "Task
-    # not serializable"). newSession shares the SparkContext but
-    # has its own listener manager, so the leak dies with it.
+    # Observation stays registered on its session after `get`, and a
+    # later MLlib job on the same session fails to serialize its
+    # closure. Reproduced on Spark 4.1.2 with `spark` in place of the
+    # newSession: tests/test_operators.py::
+    # test_observe_metrics_do_not_poison_mllib fails in ml_svm_linear
+    # (LinearSVC) with "Task not serializable", caused by
+    # java.io.NotSerializableException:
+    # org.apache.spark.sql.classic.ObservationManager (KMeans and
+    # LogisticRegression fits did not hit it). newSession shares the
+    # SparkContext but has its own ObservationManager, so the leak
+    # dies with it.
     obs_spark = spark.newSession()
     obs = Observation("dq_metrics")
     lf = load_table(obs_spark, sf_dir, "lineitem").observe(

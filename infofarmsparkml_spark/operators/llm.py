@@ -2255,16 +2255,19 @@ def llm_ivf_pq_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     quant, enc, qside = _ivf_pq_enc_qside(spark, sf_dir)
     path = scratch_dir("ifsml_pq_index", sf_dir)
     enc.write.partitionBy("cell").mode("overwrite").parquet(path)
-    # a plain collect: the set dedupes the <= 25 rows on the driver,
-    # where a distinct() would add a shuffle stage and a second job
-    probe_cells = sorted({int(r["cell"]) for r in qside.select("cell").collect()})
+    # the <= 25 query-side rows are collected once: the set dedupes
+    # their cells on the driver (a distinct() would add a shuffle stage
+    # and a second job), and the rank joins a local frame of the same
+    # rows, so the _qside UDF runs once, not again in the plan
+    rows = qside.collect()
+    probe_cells = sorted({int(r["cell"]) for r in rows})
     idx = (
         spark.read.schema(enc.schema)
         .parquet(path)
         .filter(F.col("cell").isin(probe_cells))
         .select("vec_id", "cell", "code")
     )
-    return _ivf_pq_rank(quant, idx, qside)
+    return _ivf_pq_rank(quant, idx, spark.createDataFrame(rows, qside.schema))
 
 
 @query("llm_ivf_pq_trained")  # trained coarse centroids: rows-only

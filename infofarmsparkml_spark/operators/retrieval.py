@@ -246,7 +246,7 @@ def llm_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r17 (ADVICE r16): the trade-offs of localCheckpoint here are
     # deliberate and bounded. (a) It runs the postings job EAGERLY at
     # DataFrame-construction time — acceptable because every harness
-    # (bench.py, driver_sim, the external driver) times/verifies
+    # (bench.py, measure.py contract, the external driver) times/verifies
     # construction + execution together, so the cost is never hidden,
     # and each call builds a FRESH checkpoint (results reflect the
     # parquet inputs at call time, never a stale copy). (b) The lazy

@@ -72,11 +72,6 @@ def get_spark(
         # 100 a warm query recompiles its classes. A static conf:
         # getOrCreate on a session that already exists ignores it.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
-        # events.ts may be written as parquet TIMESTAMP(NANOS) (the
-        # current files store µs). Spark 4.1.2 honors this conf: set,
-        # such a column reads as BIGINT ns, which catalog._us_ts turns
-        # into µs; unset, the read fails with PARQUET_TYPE_ILLEGAL.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

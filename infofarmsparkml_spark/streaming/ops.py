@@ -67,17 +67,15 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     A readStream schema must match what the source actually yields —
     declaring LongType when the reader produces µs silently
     compresses every timestamp 1000× — so the stream declares the
-    batch read's footer schema, probed after the same
-    ``_set_nanos_as_long`` as the batch catalog.
+    batch read's schema, ``catalog._events_schema``, which reads
+    ``ts``'s type from a footer on the driver and starts no Spark job.
     "events*.parquet": the sf fixtures match only events.parquet;
     the multi-batch witnesses feed a tmp dir of events{0..n}.parquet
     splits of the same rows (r16)."""
-    from ..catalog import _set_nanos_as_long, _us_ts
+    from ..catalog import _events_schema, _us_ts
 
-    _set_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events*.parquet").schema
     raw = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(_events_schema(spark, f"{sf_dir}/events*.parquet"))
         .option("pathGlobFilter", "events*.parquet")
         .options(**_SOURCE_OPTIONS)
         .parquet(sf_dir)

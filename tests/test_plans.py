@@ -1323,6 +1323,16 @@ def test_ivf_pq_partitioned_prunes_partitions(spark, sf_dir):
     assert "CartesianProduct" not in plan, plan[:3000]
 
 
+def test_ivf_pq_partitioned_runs_qside_once(spark, sf_dir):
+    """The build collects the query side once for its probe cells and
+    the rank joins a local frame of those rows, so the returned plan
+    has no ArrowEvalPython node that runs `_qside` again."""
+    plan = explain_str(q("llm_ivf_pq_partitioned")(spark, sf_dir), "simple")
+    assert not [
+        ln for ln in plan.splitlines() if "ArrowEvalPython" in ln and "_qside(" in ln
+    ], plan[:3000]
+
+
 def test_ivf_pq_partitioned_matches_inplan_variant(spark, sf_dir):
     """Storage must never change values: the partitioned-index
     result is row-identical to llm_ivf_pq_topk's."""

@@ -322,6 +322,35 @@ def test_events_loader_nanos_timestamp(spark, sf_dir):
             spark.conf.set(conf, prior)
 
 
+def test_events_builds_start_no_job_and_leave_conf_unset(spark, sf_dir):
+    """Both events reads declare their schema from a footer read on the
+    driver: over the µs fixture, building join_asof and
+    read_events_stream starts no Spark job, and `nanosAsLong`, unset
+    before, is still unset after (it is set only for a
+    TIMESTAMP(NANOS) file)."""
+    from infofarmsparkml_spark.streaming.ops import read_events_stream
+
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    prior = spark.conf.get(conf, None)
+    spark.conf.unset(conf)
+    sc = spark.sparkContext
+    group = f"events-build-{time.time_ns()}"  # fresh, so it holds no job yet
+    sc.setJobGroup(group, "events builds")
+    try:
+        q("join_asof")(spark, sf_dir)
+        read_events_stream(spark, sf_dir)
+        after = spark.conf.get(conf, None)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        if prior is not None:
+            spark.conf.set(conf, prior)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert after is None
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert not jobs, f"{len(jobs)} Spark jobs"
+
+
 def test_stream_ewma_matches_python_fold(spark, sf_dir):
     """The streamed per-user EWMA equals an independent pure-Python
     quantized fold over the time-ordered series (exact equality —

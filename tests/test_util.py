@@ -320,6 +320,66 @@ def test_scripts_resolve_engine_names():
     assert not missing, missing
 
 
+def _repo_root() -> str:
+    return os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_oracle_sql_matches_contract():
+    """Oracle SQL is contract: the registered query names equal those of
+    the committed snapshot (``scripts/measure.py contract``) at every
+    fixture, and every oracle text's md5 equals the snapshot's (None
+    for a rows-only query). A change to oracle SQL updates
+    CONTRACT_r18.json in the same commit. No JVM."""
+    import hashlib
+    import json
+
+    from infofarmsparkml_spark import registry
+
+    with open(os.path.join(_repo_root(), "CONTRACT_r18.json")) as f:
+        fixtures = json.load(f)["fixtures"]
+    assert fixtures
+    oracles = registry.oracle_sql()
+    got = {
+        name: hashlib.md5(oracles[name].encode()).hexdigest()
+        if name in oracles else None
+        for name in registry.queries()
+    }
+    for fixture, snap in fixtures.items():
+        want = {name: r["oracle_md5"] for name, r in snap["queries"].items()}
+        assert set(got) == set(want), (fixture, set(got) ^ set(want))
+        changed = sorted(n for n in got if got[n] != want[n])
+        assert not changed, (fixture, changed)
+
+
+def test_contract_diff_lists_changed_fields(tmp_path, capsys):
+    """``measure.py contract --diff`` prints one line per changed
+    (fixture, query, field), one per query added or removed, skips the
+    wall time, and exits 1; identical snapshots print nothing, exit 0.
+    No JVM."""
+    import json
+    import sys
+
+    sys.path.insert(0, os.path.join(_repo_root(), "scripts"))
+    import measure
+
+    rec = {"ok": True, "rows_md5": "r1", "plan_md5": "p1", "sec": 1.5}
+    a = {"same": rec, "plan": rec, "gone": rec}
+    b = {"same": dict(rec, sec=9.0), "plan": dict(rec, plan_md5="p2"), "new": rec}
+    paths = []
+    for tag, queries in (("a", a), ("b", b)):
+        paths.append(str(tmp_path / f"{tag}.json"))
+        with open(paths[-1], "w") as f:
+            json.dump({"fixtures": {"sf0.001": {"queries": queries}}}, f)
+    assert measure.main(["contract", "--diff", *paths]) == 1
+    assert capsys.readouterr().out.splitlines() == [
+        "sf0.001 gone: removed",
+        "sf0.001 new: added",
+        'sf0.001 plan plan_md5: "p1" -> "p2"',
+    ]
+    assert measure.main(["contract", "--diff", paths[0], paths[0]]) == 0
+    assert capsys.readouterr().out == ""
+
+
 @pytest.mark.parametrize(
     "values, frac_digits",
     [
