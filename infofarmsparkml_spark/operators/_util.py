@@ -95,8 +95,8 @@ def materialize_once(path: str, write_fn) -> str:
     return path
 
 
-def cents(col: Column | str, scale: int = 2) -> Column:
-    """Exact integer view of a money-like double in 10^-scale units.
+def cents(col: Column | str) -> Column:
+    """Exact integer view of a money-like double in cents.
 
     Fixture money columns carry ≤2 decimal digits, so
     `round(x * 100)` recovers the exact integer (the double is
@@ -105,7 +105,7 @@ def cents(col: Column | str, scale: int = 2) -> Column:
     decimal128 path at sf0.1 with bit-identical output doubles.
     """
     c = F.col(col) if isinstance(col, str) else col
-    return F.round(c * (10**scale)).cast("long")
+    return F.round(c * 100).cast("long")
 
 
 def net_cents() -> Column:

@@ -164,7 +164,18 @@ def graph_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pagerank_oracle(n_iter: int = 10, d: float = 0.85) -> str:
+# Each iterative op's loop bounds, read by its Spark loop and by its
+# oracle's unroll alike.
+_PAGERANK_ROUNDS, _PAGERANK_DAMPING = 10, 0.85
+# delta twin: stop at the first round >= burn-in whose max-abs-delta
+# is <= tau micro-units, else at the cap
+_DELTA_CAP, _DELTA_TAU, _DELTA_BURN_IN = 12, 1000, 3
+_BFS_DEPTH = 4
+_SSSP_ROUNDS = 4
+_LPA_ROUNDS = 3
+
+
+def _pagerank_oracle() -> str:
     """DuckDB twin of the power iteration: recursive CTEs can't
     hold GROUP BY, but the iteration count is fixed, so unroll one
     aggregate CTE per round. Rounding happens only at the end, like
@@ -175,7 +186,8 @@ def _pagerank_oracle(n_iter: int = 10, d: float = 0.85) -> str:
 deg AS (SELECT src, COUNT(*) AS out_deg FROM edges GROUP BY src),
 pr0 AS (SELECT src, 1.0 AS rank FROM deg)"""
     ]
-    for i in range(1, n_iter + 1):
+    d = _PAGERANK_DAMPING
+    for i in range(1, _PAGERANK_ROUNDS + 1):
         parts.append(
             f"""
 pr{i} AS (
@@ -186,7 +198,7 @@ pr{i} AS (
         )
     return (
         "WITH " + ",".join(parts)
-        + f"\nSELECT src AS part, ROUND(rank, 6) AS pagerank FROM pr{n_iter}"
+        + f"\nSELECT src AS part, ROUND(rank, 6) AS pagerank FROM pr{_PAGERANK_ROUNDS}"
     )
 
 
@@ -200,8 +212,8 @@ def _pagerank_iterate(edges: DataFrame, pick) -> DataFrame:
     driver, not the data, becomes the bottleneck. Returns (src, rank)."""
     out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
     ranks = out_deg.select("src", F.lit(1.0).alias("rank"))
-    d = 0.85
-    for i in range(10):
+    d = _PAGERANK_DAMPING
+    for i in range(_PAGERANK_ROUNDS):
         contribs = (
             edges.join(pick(ranks), "src")
             .join(pick(out_deg), "src")
@@ -240,15 +252,13 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pagerank_delta_oracle(
-    cap: int = 12, tau: int = 1000, burn_in: int = 3
-) -> str:
+def _pagerank_delta_oracle() -> str:
     """DuckDB twin of the delta-threshold power iteration: all
-    ``cap`` rounds are unrolled (pr1..prN) together with each
-    checked round's max-abs-delta (d{burn_in}..dN), then the output
+    cap rounds are unrolled (pr1..prN) together with each
+    checked round's max-abs-delta (d{burn-in}..dN), then the output
     round is SELECTED by the same stop rule the Spark loop applies —
-    the first round >= burn_in whose delta <= tau, else round
-    ``cap``. Because the arithmetic is exact integer micro-units on
+    the first round >= burn-in whose delta <= tau, else round
+    cap. Because the arithmetic is exact integer micro-units on
     both engines, the data-dependent stop round is identical on both
     sides, so the early exit never needs a depth pin: parity holds
     whether the loop stops at round 3 or runs to the cap."""
@@ -258,6 +268,7 @@ def _pagerank_delta_oracle(
 deg AS MATERIALIZED (SELECT src, COUNT(*) AS out_deg FROM edges GROUP BY src),
 pr0 AS (SELECT src, CAST(1000000 AS BIGINT) AS rank FROM deg)"""
     ]
+    cap, tau, burn_in = _DELTA_CAP, _DELTA_TAU, _DELTA_BURN_IN
     for i in range(1, cap + 1):
         parts.append(
             f"""
@@ -291,9 +302,7 @@ FROM ({ranks}) u JOIN stop s ON u.k = s.k"""
     )
 
 
-def _pagerank_delta_iterate(
-    edges: DataFrame, tau: int = 1000, cap: int = 12, burn_in: int = 3
-) -> tuple[DataFrame, int]:
+def _pagerank_delta_iterate(edges: DataFrame) -> tuple[DataFrame, int]:
     """Delta-threshold PageRank core, shared by the registered query
     and the hand-built known-answer test (so the test exercises THE
     operator's arithmetic, not an inline copy — ADVICE r11). Exact
@@ -302,8 +311,8 @@ def _pagerank_delta_iterate(
     ``rank' = 150000 + (17 * SUM(contrib)) DIV 20`` per dest
     (damping 0.85 = 17/20, base 0.15 = 150000 micro) — every step is
     integer-exact and engine-portable. Stops at the FIRST round
-    >= ``burn_in`` whose max-abs-delta <= tau, else at ``cap``;
-    rounds below burn_in skip the delta action entirely (round-1
+    >= burn-in whose max-abs-delta <= tau, else at the cap;
+    rounds below burn-in skip the delta action entirely (round-1
     delta measures ~0.5 rank units — it cannot pass a milli-unit
     tau), and the oracle's stop rule skips the same rounds, so the
     semantics stay engine-identical. Returns (ranks, rounds_run);
@@ -326,7 +335,7 @@ def _pagerank_delta_iterate(
         "src", F.lit(1000000).cast("long").alias("rank")
     ).localCheckpoint(eager=False)
     rounds = 0
-    for r in range(1, cap + 1):
+    for r in range(1, _DELTA_CAP + 1):
         rounds = r
         contrib = ranks.join(out_deg, "src").select(
             "src", F.expr("rank DIV out_deg").alias("c")
@@ -353,7 +362,7 @@ def _pagerank_delta_iterate(
             )
             .localCheckpoint(eager=False)
         )
-        if r >= burn_in:
+        if r >= _DELTA_BURN_IN:
             max_delta = (
                 new.join(
                     ranks.withColumnRenamed("rank", "prev"), "src"
@@ -367,7 +376,7 @@ def _pagerank_delta_iterate(
             # or empty edge list — ADVICE r12): treat as "no delta
             # evidence" and let the loop cap out instead of raising
             # TypeError on the None comparison.
-            if max_delta is not None and max_delta <= tau:
+            if max_delta is not None and max_delta <= _DELTA_TAU:
                 ranks = new
                 break
         ranks = new
@@ -567,7 +576,7 @@ def graph_triangles_doulion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bfs_oracle(depth: int = 4) -> str:
+def _bfs_oracle() -> str:
     """Level-unrolled BFS oracle (DuckDB): per-level DISTINCT
     frontiers, then MIN(level) per reached node — same
     level-synchronized shape as the Spark side, so path explosion
@@ -578,7 +587,7 @@ def _bfs_oracle(depth: int = 4) -> str:
 seed AS (SELECT MIN(l_partkey) AS node FROM lineitem),
 f0 AS (SELECT node FROM seed)"""
     ]
-    for i in range(1, depth + 1):
+    for i in range(1, _BFS_DEPTH + 1):
         parts.append(
             f"""
 f{i} AS (
@@ -586,7 +595,7 @@ f{i} AS (
   FROM f{i - 1} f JOIN edges e ON e.src = f.node)"""
         )
     levels = " UNION ALL ".join(
-        f"SELECT node, {i} AS lvl FROM f{i}" for i in range(depth + 1)
+        f"SELECT node, {i} AS lvl FROM f{i}" for i in range(_BFS_DEPTH + 1)
     )
     return (
         "WITH "
@@ -617,7 +626,7 @@ def graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed = lf.agg(F.min("l_partkey").alias("node"))
     visited = seed.withColumn("dist", F.lit(0).cast("long")).localCheckpoint()
     frontier = visited.select("node")
-    for lvl in range(1, 5):
+    for lvl in range(1, _BFS_DEPTH + 1):
         nxt = (
             pick(frontier).join(
                 edges, frontier["node"] == edges["src"]
@@ -634,7 +643,7 @@ def graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return visited.select(F.col("node").alias("part"), "dist")
 
 
-def _sssp_oracle(depth: int = 4) -> str:
+def _sssp_oracle() -> str:
     """Level-unrolled Bellman–Ford oracle (DuckDB): d_k(v) =
     min(d_{k-1}(v), min over edges (u,v) of d_{k-1}(u) + cost) —
     the same hop-bounded relaxation the Spark side iterates, so
@@ -651,7 +660,7 @@ edges AS (SELECT src, dst, 1 + 100 // n_co AS cost FROM co),
 d0 AS (SELECT MIN(l_partkey) AS node, CAST(0 AS BIGINT) AS d
        FROM lineitem)"""
     ]
-    for i in range(1, depth + 1):
+    for i in range(1, _SSSP_ROUNDS + 1):
         parts.append(
             f"""
 d{i} AS (
@@ -666,7 +675,7 @@ d{i} AS (
         "WITH "
         + ",".join(parts)
         + f"""
-SELECT node AS part, CAST(d AS BIGINT) AS dist FROM d{depth}"""
+SELECT node AS part, CAST(d AS BIGINT) AS dist FROM d{_SSSP_ROUNDS}"""
     )
 
 
@@ -706,7 +715,7 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("d", F.lit(0).cast("long"))
         .localCheckpoint()
     )
-    for _ in range(4):
+    for _ in range(_SSSP_ROUNDS):
         relax = (
             pick(dist).join(edges, dist["node"] == edges["src"])
             .select(
@@ -723,7 +732,7 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dist.select(F.col("node").alias("part"), F.col("d").alias("dist"))
 
 
-def _lpa_oracle(n_rounds: int = 3) -> str:
+def _lpa_oracle() -> str:
     """Round-unrolled synchronous min-label propagation (DuckDB):
     one aggregate CTE per round, exactly mirroring the Spark
     iteration — both engines compute the identical deterministic
@@ -734,7 +743,7 @@ def _lpa_oracle(n_rounds: int = 3) -> str:
         + """
 l0 AS (SELECT DISTINCT src AS node, src AS label FROM edges)"""
     ]
-    for i in range(1, n_rounds + 1):
+    for i in range(1, _LPA_ROUNDS + 1):
         parts.append(
             f"""
 l{i} AS (
@@ -747,7 +756,7 @@ l{i} AS (
         "WITH "
         + ",".join(parts)
         + f"""
-SELECT node AS part, CAST(label AS BIGINT) AS label FROM l{n_rounds}"""
+SELECT node AS part, CAST(label AS BIGINT) AS label FROM l{_LPA_ROUNDS}"""
     )
 
 
@@ -777,7 +786,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # build side: _guarded_vertex_pick, on the raw scratch estimate
     pick = _guarded_vertex_pick(spark, edges_raw)
-    for _ in range(3):
+    for _ in range(_LPA_ROUNDS):
         nbr_min = (
             edges.join(pick(labels), edges.src == labels.node)
             .groupBy(F.col("dst").alias("node"))

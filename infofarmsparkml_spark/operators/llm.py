@@ -423,7 +423,7 @@ def _dot_fold(a, b):
     64-term getItem chain for whole-stage codegen, copying the win
     measured on the kNN verify stream. That win is REAL only where
     the projection actually compiles into a codegen'd join stage
-    (the integer `_qdist` inside `_knn_join_topk`'s bucket join:
+    (the integer `_qdist` inside `_knn_canonical_pairs`' bucket join:
     unrolled 7.7 s vs fold 75.3 s on the sf1 7.5M-pair stream). In
     the BroadcastNestedLoopJoin / plain-projection sites that use
     THIS kernel the ~192-node unrolled trees never get the
@@ -774,17 +774,17 @@ def llm_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return poly.join(pw, "doc_id")
 
 
-def _rare_shingle_block(docs: DataFrame, k: int, max_df: int = 5):
+def _rare_shingle_block(docs: DataFrame, k: int):
     """Shared candidate generation for the shingle-similarity family
     (`llm_ngram_jaccard`, `llm_ngram_containment`): token k-gram
     sets plus rare-shingle-blocked candidate pairs. Returns
     ``(grams, cand)`` where ``grams`` is (doc_id, gset) and ``cand``
     is distinct (doc_a, doc_b) with doc_a < doc_b sharing at least
-    one shingle that occurs in ≤ max_df documents. This is the scale
+    one shingle that occurs in ≤ 5 documents. This is the scale
     path itself: hub shingles carry no discriminating signal and
     would quadratically explode the pair space, so blocking keeps
     one shuffle on the shingle key and a candidate count bounded by
-    max_df·|rare shingles| — NEVER all-pairs. Short documents
+    5·|rare shingles| — NEVER all-pairs. Short documents
     (< k tokens) get an empty shingle set: two-arg sequence DESCENDS
     below 1 and slice then throws INVALID_PARAMETER_VALUE.START, and
     the DuckDB oracles' range() yields [] for the same doc.
@@ -812,7 +812,7 @@ def _rare_shingle_block(docs: DataFrame, k: int, max_df: int = 5):
     rare = (
         exploded.groupBy("g")
         .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= max_df)
+        .filter(F.col("df") <= 5)
         .select("g")
         .localCheckpoint()
     )
@@ -871,7 +871,7 @@ def llm_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     at sf0.1 all surface). Verification is integer set sizes and
     one division — bit-stable across engines."""
     docs = load_table(spark, sf_dir, "documents")
-    grams, cand = _rare_shingle_block(docs, k=3, max_df=5)
+    grams, cand = _rare_shingle_block(docs, k=3)
     a = grams.select(F.col("doc_id").alias("doc_a"), F.col("gset").alias("ga"))
     b = grams.select(F.col("doc_id").alias("doc_b"), F.col("gset").alias("gb"))
     jac = (
@@ -1259,7 +1259,7 @@ def _srp_band_keys(
         # carry the quantized vector alongside its keys so callers
         # can evaluate distances INSIDE the bucket join (r14: the
         # kNN verify no longer re-attaches vectors to the pair
-        # stream through two corpus joins — see _knn_join_topk)
+        # stream through two corpus joins — see _knn_canonical_pairs)
         return (
             quant.select("vec_id", "qv", _band_keys("qv").alias("bk"))
             .select("vec_id", "qv", F.posexplode("bk").alias("band", "bkey"))
@@ -1348,18 +1348,12 @@ q AS (SELECT vec_id,
       FROM base),"""
 
 
-def _knn_join_topk(
-    quant: DataFrame,
-    n: int,
-    materialize: bool = True,
-) -> DataFrame:
-    """The kNN join's core: banded SRP-LSH candidates -> exact
-    quantized verify -> per-query top-5. The canonical-pairs +
-    mirror form computes each symmetric distance once (half the
-    verify work). Recall of this core against exact brute force is
-    recall@5 = 1.0 in the 17-bit (KNN_RECALL_r13.json) and 18-20-bit
-    (KNN_RECALL_r15.json) adaptive band regimes, on ~200 sampled
-    queries over clustered corpora of 4.5M-33.6M vectors.
+def _knn_canonical_pairs(quant: DataFrame, n: int) -> DataFrame:
+    """The kNN join's lazy candidate + verify stage: banded SRP-LSH
+    bucket-mates, each canonical pair (qid < nid) once with its exact
+    quantized distance. The bucket relation is symmetric, so each
+    distance is computed ONCE and mirrored before ranking — half the
+    verify work in both engines.
 
     Verify shape (r14): the quantized vectors ride WITH their band
     keys (carry_qv) and the exact distance is evaluated INSIDE the
@@ -1387,49 +1381,45 @@ def _knn_join_topk(
     on_bucket = (F.col("a.band") == F.col("b.band")) & (
         F.col("a.bkey") == F.col("b.bkey")
     )
-    pair_cols = [
-        F.col("a.vec_id").alias("qid"),
-        F.col("b.vec_id").alias("nid"),
-        _qdist("a.qv", "b.qv").alias("qdist"),
-    ]
-    # canonical pairs only (qid < nid): the bucket relation is
-    # symmetric, so each distance is computed ONCE and mirrored
-    # before ranking — half the verify work in both engines
-    half = (
+    return (
         a.join(b, on_bucket & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .select(*pair_cols)
+        .select(
+            F.col("a.vec_id").alias("qid"),
+            F.col("b.vec_id").alias("nid"),
+            _qdist("a.qv", "b.qv").alias("qdist"),
+        )
         .distinct()
-        # eager localCheckpoint: the mirror union references
-        # `half` twice, and exchange reuse does NOT fire across
-        # the two branches — the analyzer deduplicates the second
-        # subtree's exprIds through the SRP pandas UDF and the
-        # canonicalized exchanges stop matching, so without this
-        # the ENTIRE signature + bucket join + distance +
-        # distinct pipeline executes twice (observed in the r14
-        # sf10 plan: 8 ArrowEvalPython nodes, two identical
-        # un-reused BroadcastExchanges, a clean ~2x on the smoke
-        # leg). r15 swaps r14's `.persist()` for the checkpoint
-        # (VERDICT r14 #4/#7 + ADVICE): (a) lifecycle — a
-        # persisted plan stays registered in the CacheManager for
-        # the session's lifetime, while a localCheckpoint RDD is
-        # freed by the ContextCleaner once the DataFrame is
-        # unreferenced, so long-lived driver sessions don't
-        # accumulate pair sets; (b) the small-N constant — the
-        # cache-build path cost 4-10 s vs 2.4-2.9 s end-to-end
-        # for the checkpoint at sf0.01 (same-session A/B, r15;
-        # the cached plan also loses AQE on downstream reads).
-        # The checkpointed `half` is the verified-pair set —
-        # output-sized (24 B/row), the smallest thing in the
-        # operator (~2.7 GB at the 114M-pair sf10 smoke: fine
-        # for MEMORY_AND_DISK local storage).
-        # `materialize=False` skips the checkpoint so plan tests
-        # can pin the bucket-join shape that otherwise fires at
-        # construction time (the checkpointed final plan is just
-        # an ExistingRDD scan) — it trades the double execution
-        # back in, so only plan inspection should use it.
     )
-    if materialize:
-        half = half.localCheckpoint(eager=True)
+
+
+def _knn_join_topk(quant: DataFrame, n: int) -> DataFrame:
+    """The kNN join's core: banded SRP-LSH candidates -> exact
+    quantized verify (`_knn_canonical_pairs`) -> per-query top-5.
+    Recall of this core against exact brute force is recall@5 = 1.0
+    in the 17-bit (KNN_RECALL_r13.json) and 18-20-bit
+    (KNN_RECALL_r15.json) adaptive band regimes, on ~200 sampled
+    queries over clustered corpora of 4.5M-33.6M vectors."""
+    # eager localCheckpoint: the mirror union references `half`
+    # twice, and exchange reuse does NOT fire across the two
+    # branches — the analyzer deduplicates the second subtree's
+    # exprIds through the SRP pandas UDF and the canonicalized
+    # exchanges stop matching, so without this the ENTIRE signature
+    # + bucket join + distance + distinct pipeline executes twice
+    # (observed in the r14 sf10 plan: 8 ArrowEvalPython nodes, two
+    # identical un-reused BroadcastExchanges, a clean ~2x on the
+    # smoke leg). r15 swaps r14's `.persist()` for the checkpoint
+    # (VERDICT r14 #4/#7 + ADVICE): (a) lifecycle — a persisted plan
+    # stays registered in the CacheManager for the session's
+    # lifetime, while a localCheckpoint RDD is freed by the
+    # ContextCleaner once the DataFrame is unreferenced, so
+    # long-lived driver sessions don't accumulate pair sets; (b) the
+    # small-N constant — the cache-build path cost 4-10 s vs
+    # 2.4-2.9 s end-to-end for the checkpoint at sf0.01 (same-session
+    # A/B, r15; the cached plan also loses AQE on downstream reads).
+    # The checkpointed `half` is the verified-pair set — output-sized
+    # (24 B/row), the smallest thing in the operator (~2.7 GB at the
+    # 114M-pair sf10 smoke: fine for MEMORY_AND_DISK local storage).
+    half = _knn_canonical_pairs(quant, n).localCheckpoint(eager=True)
     # mirror by union over the checkpointed pair set: each pair's
     # distance is computed once and contributes to both
     # endpoints' rankings
@@ -1666,16 +1656,15 @@ def llm_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivf_cosine_topk(emb, centers)
 
 
-def _ivf_cosine_topk(
-    emb: DataFrame, centers: list, nprobe: int = 5
-) -> DataFrame:
+def _ivf_cosine_topk(emb: DataFrame, centers: list) -> DataFrame:
     """The IVF probe/rank body shared by `llm_ivf_topk` (md5-pick
     centers, hash-checkable) and `llm_ivf_topk_trained` (seeded
     k-means centers, rows-only): centers are plan LITERALS, so cell
     assignment and probing are pure map-side projections — at 100 TB
     the cell is a partition key and a probe is partition pruning.
-    Candidates = broadcast(query x probed cells) hash-joined on
-    cell; exact cosine + `_cosine_top10` over candidates only."""
+    Candidates = broadcast(query x each query's nprobe=5 nearest
+    cells) hash-joined on cell; exact cosine + `_cosine_top10` over
+    candidates only."""
 
     def d2(vec, cv):
         # same association as the oracle: (dot(v,v) - 2*dot(v,c)) + dot(c,c)
@@ -1709,7 +1698,7 @@ def _ivf_cosine_topk(
             F.col("vec_id").alias("qid"),
             F.col("e").alias("qv"),
             F.sqrt(_dot_fold(F.col("e"), F.col("e"))).alias("qnorm"),
-            F.explode(F.slice(F.array_sort(cells), 1, nprobe)).alias("pc"),
+            F.explode(F.slice(F.array_sort(cells), 1, 5)).alias("pc"),
         )
         .select("qid", "qv", "qnorm", F.col("pc")["cell"].alias("cell"))
     )
@@ -2550,7 +2539,7 @@ def llm_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact containment on the full shingle sets (integer set sizes,
     one division — bit-stable across engines)."""
     docs = load_table(spark, sf_dir, "documents")
-    grams, cand = _rare_shingle_block(docs, k=4, max_df=5)
+    grams, cand = _rare_shingle_block(docs, k=4)
     a = grams.select(F.col("doc_id").alias("doc_a"), F.col("gset").alias("ga"))
     b = grams.select(F.col("doc_id").alias("doc_b"), F.col("gset").alias("gb"))
     shared = F.size(F.array_intersect("ga", "gb")).cast("double")
@@ -2748,7 +2737,7 @@ def llm_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     n2 = s2.count()
-    grams, cand = _rare_shingle_block(s2, k=4, max_df=5)
+    grams, cand = _rare_shingle_block(s2, k=4)
     a = grams.select(F.col("doc_id").alias("doc_a"), F.col("gset").alias("ga"))
     b = grams.select(F.col("doc_id").alias("doc_b"), F.col("gset").alias("gb"))
     shared = F.size(F.array_intersect("ga", "gb")).cast("double")

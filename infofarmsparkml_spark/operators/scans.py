@@ -324,21 +324,21 @@ def bucketed_join_plan_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.hint("merge").join(od, li.l_orderkey == od.o_orderkey)
 
 
-def zvalue(col_a, col_b, bits: int = 31):
+def zvalue(col_a, col_b):
     """Morton/Z-order interleave of two non-negative int columns
     (bit i of a → bit 2i, bit i of b → bit 2i+1). Built from plain
     shift/and/sum expressions so the whole thing stays inside
     whole-stage codegen — no UDF.
 
-    Domain bound: exact (bijective) for keys < 2**bits. The default
-    31 covers the full positive INT32 range — 2 dims × 31 bits = 62
-    interleaved bits, still inside a signed LONG. (The old default
-    of 16 silently aliased keys above 65535 — e.g. l_partkey at
-    sf ≥ ~0.33 — degrading Z-cluster locality at scale.)"""
+    Domain bound: exact (bijective) for keys < 2**31, the full
+    positive INT32 range — 2 dims × 31 bits = 62 interleaved bits,
+    still inside a signed LONG. (An older 16-bit width silently
+    aliased keys above 65535 — e.g. l_partkey at sf ≥ ~0.33 —
+    degrading Z-cluster locality at scale.)"""
     a = F.col(col_a) if isinstance(col_a, str) else col_a
     b = F.col(col_b) if isinstance(col_b, str) else col_b
     z = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(31):
         z = (
             z
             + F.shiftleft(F.shiftrightunsigned(a.cast("long"), i) % 2, 2 * i)

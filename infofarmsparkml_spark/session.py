@@ -39,22 +39,20 @@ def _driver_mem_default() -> str:
 def get_spark(
     app_name: str = "infofarmsparkml-spark",
     cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``shuffle_partitions`` defaults to the core count — the right
-    setting for local mode; on a real cluster you would size it to
-    ~2-3x total cores or let AQE coalesce from a higher initial
-    number (which we also enable).
+    Shuffle partitions equal the core count — the right setting for
+    local mode; on a real cluster you would size it to ~2-3x total
+    cores or let AQE coalesce from a higher initial number (which we
+    also enable).
     """
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    nshuffle = str(shuffle_partitions or int(cpus))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", nshuffle)
+        .config("spark.sql.shuffle.partitions", str(int(cpus)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -125,7 +125,7 @@ def canon_frame(pdf) -> tuple[list[str], list[tuple[str, ...]]]:
     return cols, rows
 
 
-def compare_frames(spark_pdf, oracle_pdf, max_report: int = 5) -> tuple[bool, str]:
+def compare_frames(spark_pdf, oracle_pdf) -> tuple[bool, str]:
     scols, srows = canon_frame(spark_pdf)
     ocols, orows = canon_frame(oracle_pdf)
     if scols != ocols:
@@ -137,7 +137,7 @@ def compare_frames(spark_pdf, oracle_pdf, max_report: int = 5) -> tuple[bool, st
             f"  spark={s}\n  oracle={o}"
             for s, o in zip(srows, orows)
             if s != o
-        ][:max_report]
+        ][:5]
         return False, "value mismatch (first diffs):\n" + "\n".join(diffs)
     return True, f"ok ({len(srows)} rows, {len(scols)} cols)"
 

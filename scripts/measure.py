@@ -66,15 +66,13 @@ PLAN_NORMALIZE = [
     (r"\$\$Lambda[^,\s]*", "$$Lambda"),
 ]
 SCRATCH_TOKEN = "<scratch>"
-# node names counted in each plan (ReusedExchange is its own name, so
-# it is never counted as an Exchange)
+# node names recorded per plan (plans.plan_nodes counts every name)
 NODES = [
     "BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow",
     "FlatMapGroupsInPandas", "CartesianProduct", "BroadcastNestedLoopJoin",
     "SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin", "Exchange",
     "ReusedExchange", "Window", "Generate", "InMemoryTableScan", "FileScan",
 ]
-_NODE_RE = re.compile(r"^[\s:|+-]*(?:\*\(\d+\) )?(\w+)")
 NOT_COMPARED = ("sec", "plan")
 
 # scale: the priciest operators, LSH and document ops before the
@@ -210,30 +208,8 @@ def normalize_plan(plan: str, scratch_root: str) -> str:
     return plan
 
 
-def plan_nodes(plan: str) -> tuple[dict[str, int], list[list[str]]]:
-    """Counts of the ``NODES`` names in a simple plan, and the UDF
-    names each ``ArrowEvalPython`` node evaluates, in plan order."""
-    counts: dict[str, int] = {}
-    udfs = []
-    for line in plan.splitlines():
-        m = _NODE_RE.match(line)
-        if not m or m.group(1) not in NODES:
-            continue
-        counts[m.group(1)] = counts.get(m.group(1), 0) + 1
-        if m.group(1) == "ArrowEvalPython":
-            udfs.append(_udf_names(line[m.end():]))
-    return counts, udfs
-
-
-def _udf_names(text: str) -> list[str]:
-    """The UDF names in an ArrowEvalPython node's first list, whose
-    items print as ``name(args)#N`` (Spark may cut the args short)."""
-    udfs = text.split("], [pythonUDF")[0]
-    return re.findall(r"(?:^ \[|\)#N, )(\w+)\(", udfs)
-
-
 def _contract_query(spark, fn, oracle, con, sf_dir, scratch_root) -> dict:
-    from infofarmsparkml_spark.plans import explain_str
+    from infofarmsparkml_spark.plans import explain_str, plan_nodes
     from infofarmsparkml_spark.verify import canon_frame, compare_frames
 
     sc = spark.sparkContext
@@ -250,11 +226,12 @@ def _contract_query(spark, fn, oracle, con, sf_dir, scratch_root) -> dict:
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         rec["build_jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
         rec["schema"] = df.schema.simpleString()
-        # explained before it runs: an executed adaptive plan prints
-        # its final, statistics-dependent form
+        # explained and walked before it runs: an executed adaptive
+        # plan holds its final, statistics-dependent form
         plan = normalize_plan(explain_str(df, "simple"), scratch_root)
         rec["plan"], rec["plan_md5"] = plan, _md5(plan)
-        rec["nodes"], rec["arrow_udfs"] = plan_nodes(plan)
+        counts, rec["arrow_udfs"] = plan_nodes(df)
+        rec["nodes"] = {k: counts[k] for k in NODES if counts[k]}
         pdf = df.toPandas()
         cols, rows = canon_frame(pdf)
         rec["rows"] = int(len(pdf))

@@ -18,7 +18,7 @@ SF_DIR = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="infofarmsparkml-tests", cpus=4, shuffle_partitions=4)
+    s = get_spark(app_name="infofarmsparkml-tests", cpus=4)
     yield s
 
 

@@ -16,6 +16,7 @@ from pyspark.sql import Window as W, functions as F
 
 from infofarmsparkml_spark import registry
 from infofarmsparkml_spark.operators import sorts
+from infofarmsparkml_spark.plans import plan_nodes
 
 
 def q(name):
@@ -65,7 +66,7 @@ def test_global_row_number_checkpoint_arm_matches_truth(
     df = q("sort_multi")(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" in plan, plan[:2000]
-    assert plan.count("Scan parquet") == 0, plan[:2000]
+    assert plan_nodes(df)[0]["FileScan"] == 0, plan[:2000]
     got = _rows(df)
     want = _rows(_truth_sort_multi(spark, sf_dir))
     assert got == want
