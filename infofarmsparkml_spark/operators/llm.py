@@ -7,7 +7,7 @@ scoring, fingerprinting) and multimodal record assembly.
 
 Scale notes are per-operator; the common theme: the only all-pairs
 computation (exact cosine) keeps the small side broadcast, LSH
-variants replace O(n²) with bucket joins, and the iterative
+variants replace O(n²) with bucket-local pairing, and the iterative
 connected-components loop checkpoints to truncate lineage.
 """
 
@@ -116,46 +116,61 @@ def _minhash_sig_long(tok_sets: DataFrame) -> DataFrame:
 
 
 def _bucket_pairs(
-    keyed: DataFrame, id_col: str, key_cols: list[str], a: str, b: str
+    keyed: DataFrame, member: str | Column, key_cols: list[str], a: str, b: str
 ) -> DataFrame:
     """Candidate pairs (a, b) with a < b for every two rows of
     ``keyed`` that share a bucket ``key_cols`` — the one LSH pairing
-    primitive of the banded near-dup detectors (MinHash and SRP).
+    primitive of every blocking stage: the banded near-dup detectors
+    (MinHash and SRP), the kNN join and the rare-shingle block.
 
-    Groups the rows by bucket, sorts each bucket's ids and emits the
-    i<j pairs with two streaming Generates (posexplode + slice): no
-    self-join, so the keyed frame (the signature pass — the dominant
-    compute) is planned ONCE, and candidates never leave their
-    bucket. Assumes each id sits at most once per bucket (one key
-    per band). A pair that shares several bands is emitted once per
-    shared band: callers run their own ``distinct``, after any
-    per-pair prune that is cheaper than the dedup exchange.
+    Groups the rows by bucket, sorts each bucket's members and emits
+    the i<j pairs with two streaming Generates (posexplode + slice):
+    no self-join, so the keyed frame (the signature pass — the
+    dominant compute) is planned ONCE, and candidates never leave
+    their bucket. ``member`` is an id column name, or a struct whose
+    first field is the id (the kNN carries its vectors that way:
+    ``sort_array`` orders a struct by its first field, so a < b by
+    id still holds). Assumes each id sits at most once per bucket
+    (one key per band, one row per distinct shingle). A pair that
+    shares several buckets is emitted once per shared bucket:
+    callers run their own ``distinct``, after any per-pair prune
+    that is cheaper than the dedup exchange.
 
     Bucket bound, measured (buckets = distinct keys; pairs = the
-    sum of m(m-1)/2 this emits before the caller's distinct):
+    sum of m(m-1)/2 this emits before the caller's distinct; the sf1
+    row is the 10-copy fixture of `scripts/measure.py`
+    ``build_copies``):
 
     ==========  =====  =======  ===========  =========
-    detector    SF     buckets  max docs/bk  pairs
+    detector    SF     buckets  max rows/bk  pairs
     ==========  =====  =======  ===========  =========
     MinHash     0.01       609          152     32,451
     MinHash     0.1      3,900        1,420  3,155,073
     SRP         0.01       820           11      2,966
     SRP         0.1      1,022           33     44,642
+    kNN         0.01       256           54    129,455
+    kNN         0.1        512          124  1,056,161
+    kNN         1        8,192          140  7,759,348
     ==========  =====  =======  ===========  =========
 
-    A bucket costs one sorted m-long id array and one task emitting
-    its m(m-1)/2 pairs. The 1,420-doc MinHash bucket is not a
-    banding failure: it is a duplicate class under the Jaccard
-    metric (649 distinct token sets among its 1,420 docs — the
-    fixture vocabulary is small, so long documents cover nearly all
-    of it), and any banding must put such a class in one bucket.
+    A bucket costs one sorted m-long member array and one task
+    emitting its m(m-1)/2 pairs. A kNN member carries its 64-long
+    quantized vector (~550 B), so the largest sf1 bucket holds
+    ~77 KB; the adaptive band width (`_adaptive_band_bits`) keeps
+    the largest bucket near flat while the corpus grows 10x. A
+    rare-shingle bucket holds at most 5 documents by construction.
+    The 1,420-doc MinHash bucket is not a banding failure: it is a
+    duplicate class under the Jaccard metric (649 distinct token
+    sets among its 1,420 docs — the fixture vocabulary is small, so
+    long documents cover nearly all of it), and any banding must put
+    such a class in one bucket.
     The class fills one bucket in each of the 3 bands (1,420 /
     1,408 / 1,352 docs): ~2.9M of the 3.16M pairs, each bucket's
     share emitted by one task. A corpus whose largest duplicate
     class is far bigger would need the class split across tasks."""
     buckets = (
         keyed.groupBy(*key_cols)
-        .agg(F.sort_array(F.collect_list(id_col)).alias("_ids"))
+        .agg(F.sort_array(F.collect_list(member)).alias("_ids"))
         .filter(F.size("_ids") > 1)
     )
     return buckets.select("_ids", F.posexplode("_ids").alias("_i", a)).select(
@@ -423,7 +438,7 @@ def _dot_fold(a, b):
     64-term getItem chain for whole-stage codegen, copying the win
     measured on the kNN verify stream. That win is REAL only where
     the projection actually compiles into a codegen'd join stage
-    (the integer `_qdist` inside `_knn_canonical_pairs`' bucket join:
+    (the integer `_qdist` inside `_knn_canonical_pairs`' bucket pairing:
     unrolled 7.7 s vs fold 75.3 s on the sf1 7.5M-pair stream). In
     the BroadcastNestedLoopJoin / plain-projection sites that use
     THIS kernel the ~192-node unrolled trees never get the
@@ -774,24 +789,27 @@ def llm_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return poly.join(pw, "doc_id")
 
 
-def _rare_shingle_block(docs: DataFrame, k: int):
+def _rare_shingle_block(docs: DataFrame, k: int) -> DataFrame:
     """Shared candidate generation for the shingle-similarity family
-    (`llm_ngram_jaccard`, `llm_ngram_containment`): token k-gram
-    sets plus rare-shingle-blocked candidate pairs. Returns
-    ``(grams, cand)`` where ``grams`` is (doc_id, gset) and ``cand``
-    is distinct (doc_a, doc_b) with doc_a < doc_b sharing at least
-    one shingle that occurs in ≤ 5 documents. This is the scale
-    path itself: hub shingles carry no discriminating signal and
-    would quadratically explode the pair space, so blocking keeps
-    one shuffle on the shingle key and a candidate count bounded by
-    5·|rare shingles| — NEVER all-pairs. Short documents
-    (< k tokens) get an empty shingle set: two-arg sequence DESCENDS
-    below 1 and slice then throws INVALID_PARAMETER_VALUE.START, and
-    the DuckDB oracles' range() yields [] for the same doc.
-    localCheckpoint: grams feeds candidate generation twice, the
-    rare-shingle aggregate, and both verification sides — five
-    differently-pruned consumers Catalyst otherwise re-derives from
-    the corpus scan each time (measured 3x slower un-checkpointed)."""
+    (`llm_ngram_jaccard`, `llm_ngram_containment`,
+    `llm_dedup_cascade`): token k-gram sets plus rare-shingle-blocked
+    candidate pairs. Returns every distinct (doc_a, doc_b) with
+    doc_a < doc_b sharing at least one shingle that occurs in ≤ 5
+    documents, with both gram sets attached for the caller's
+    verify: columns doc_a, doc_b, ga, gb. This is the scale path
+    itself: hub shingles carry no discriminating signal and would
+    quadratically explode the pair space, so the shingle counts
+    come FIRST and only rare shingles reach the pairing
+    (`_bucket_pairs` keyed on the shingle: one shuffle, no list
+    longer than 5, candidates bounded by 10·|rare shingles| before
+    the distinct) — NEVER all-pairs. Short documents (< k tokens)
+    get an empty shingle set: two-arg sequence DESCENDS below 1 and
+    slice then throws INVALID_PARAMETER_VALUE.START, and the DuckDB
+    oracles' range() yields [] for the same doc.
+    localCheckpoint: grams feeds the rare-shingle count, the pairing
+    and both verify sides — differently-pruned consumers Catalyst
+    otherwise re-derives from the corpus scan each time (measured 3x
+    slower un-checkpointed)."""
     toks = F.split(F.col("text"), " ")
     n = F.size(toks)
     grams = docs.select(
@@ -816,21 +834,12 @@ def _rare_shingle_block(docs: DataFrame, k: int):
         .select("g")
         .localCheckpoint()
     )
-    ea = exploded.join(rare, "g").alias("ea")
-    eb = exploded.join(rare, "g").alias("eb")
-    cand = (
-        ea.join(
-            eb,
-            (F.col("ea.g") == F.col("eb.g"))
-            & (F.col("ea.doc_id") < F.col("eb.doc_id")),
-        )
-        .select(
-            F.col("ea.doc_id").alias("doc_a"),
-            F.col("eb.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    return grams, cand
+    cand = _bucket_pairs(
+        exploded.join(rare, "g"), "doc_id", ["g"], "doc_a", "doc_b"
+    ).distinct()
+    a = grams.select(F.col("doc_id").alias("doc_a"), F.col("gset").alias("ga"))
+    b = grams.select(F.col("doc_id").alias("doc_b"), F.col("gset").alias("gb"))
+    return cand.join(a, "doc_a").join(b, "doc_b")
 
 
 @query(
@@ -863,7 +872,7 @@ def llm_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     same rare-shingle blocking `llm_ngram_containment` uses (shared
     `_rare_shingle_block` helper) — no id bound anywhere, so the
     plan's complexity class is the production one: one shuffle on
-    the shingle key, candidates bounded by 5·|rare shingles|, exact
+    the shingle key, candidates bounded by 10·|rare shingles|, exact
     Jaccard recomputed only on candidates. Any pair sharing a rare
     3-gram is found; at jaccard ≥ 0.2 a pair shares ≥20% of its
     union's shingles, and on real text most shingles are rare, so
@@ -871,16 +880,12 @@ def llm_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     at sf0.1 all surface). Verification is integer set sizes and
     one division — bit-stable across engines."""
     docs = load_table(spark, sf_dir, "documents")
-    grams, cand = _rare_shingle_block(docs, k=3)
-    a = grams.select(F.col("doc_id").alias("doc_a"), F.col("gset").alias("ga"))
-    b = grams.select(F.col("doc_id").alias("doc_b"), F.col("gset").alias("gb"))
     jac = (
         F.size(F.array_intersect("ga", "gb")).cast("double")
         / F.size(F.array_distinct(F.array_union("ga", "gb")))
     )
     return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
+        _rare_shingle_block(docs, k=3)
         .select("doc_a", "doc_b", jac.alias("jac"))
         .filter(F.col("jac") >= 0.2)
         .select("doc_a", "doc_b", F.round("jac", 6).alias("jaccard"))
@@ -1255,18 +1260,16 @@ def _srp_band_keys(
         keys = signs.reshape(len(m), n_bands, band_bits) @ pows
         return pd.Series(list(keys))
 
-    if carry_qv:
-        # carry the quantized vector alongside its keys so callers
-        # can evaluate distances INSIDE the bucket join (r14: the
-        # kNN verify no longer re-attaches vectors to the pair
-        # stream through two corpus joins — see _knn_canonical_pairs)
-        return (
-            quant.select("vec_id", "qv", _band_keys("qv").alias("bk"))
-            .select("vec_id", "qv", F.posexplode("bk").alias("band", "bkey"))
-        )
-    return (
-        quant.select("vec_id", _band_keys("qv").alias("bk"))
-        .select("vec_id", F.posexplode("bk").alias("band", "bkey"))
+    # carry_qv keeps the quantized vector alongside its keys so the
+    # kNN evaluates distances on the bucket pairs themselves, with no
+    # corpus re-attach join (see _knn_canonical_pairs)
+    cols = ["vec_id", "qv"] if carry_qv else ["vec_id"]
+    # posexplode_outer, not posexplode: the inner generator lets
+    # Catalyst infer size(bk) > 0 below it and copy the UDF into that
+    # filter, a second Python pass. bk always holds n_bands >= 1
+    # keys, so the outer form emits the identical rows.
+    return quant.select(*cols, _band_keys("qv").alias("bk")).select(
+        *cols, F.posexplode_outer("bk").alias("band", "bkey")
     )
 
 
@@ -1355,34 +1358,29 @@ def _knn_canonical_pairs(quant: DataFrame, n: int) -> DataFrame:
     distance is computed ONCE and mirrored before ranking — half the
     verify work in both engines.
 
-    Verify shape (r14): the quantized vectors ride WITH their band
-    keys (carry_qv) and the exact distance is evaluated INSIDE the
-    bucket self-join's projection — there is no pair stream to
-    re-attach vectors to, so the two corpus joins the verify used
-    to pay are gone, and with them the operator's scale cliff: at
-    smoke sf10 the old attach joins carried 114.6M candidate rows
-    x 520-byte arrays through the planner's fallback strategies
-    (sort-merge 837 s / shuffle-hash-hinted 1224 s isolated — the
-    wide-row shuffle itself was the cost, whichever strategy).
-    The bucket join now shuffles 16 key rows x ~550 B per vector
-    (16n rows total, linear in corpus size with the adaptive band
-    width keeping occupancy bounded), the distance collapses each
-    collision to 24 narrow bytes in the join projection, and the
-    dedup/top-k window downstream only ever see (qid, nid, qdist).
-    DISTINCT moves after the distance: qdist is a function of the
-    pair, so dedup on (qid, nid, qdist) keeps the exact same pair
-    set and the extra evaluations on multi-band collisions are
-    ~1M pairs/s/core in the unrolled codegen kernel (_qdist) —
-    cheaper than any replanned shuffle that avoids them."""
+    Verify shape: the quantized vectors ride WITH their band keys
+    (carry_qv) as the bucket members of `_bucket_pairs`, so the
+    exact distance is evaluated on each emitted member pair — there
+    is no pair stream to re-attach vectors to (two corpus joins that
+    re-attached them were the operator's scale cliff: at smoke sf10
+    they carried 114.6M candidate rows x 520-byte arrays, sort-merge
+    837 s / shuffle-hash 1224 s isolated). The pairing shuffles 16
+    key rows x ~550 B per vector (16n rows total, linear in corpus
+    size with the adaptive band width keeping occupancy bounded),
+    plans the signature UDF once
+    (a bucket self-join planned it on both sides), and the distance
+    collapses each collision to 24 narrow bytes, so the dedup/top-k
+    window downstream only ever see (qid, nid, qdist). DISTINCT
+    comes after the distance: qdist is a function of the pair, so
+    dedup on (qid, nid, qdist) keeps the exact same pair set, and the
+    extra evaluations on multi-band collisions are ~1M pairs/s/core
+    in the unrolled codegen kernel (_qdist) — cheaper than any
+    shuffle that avoids them."""
     keys = _srp_band_keys(
         quant, n_bands=16, band_bits=_adaptive_band_bits(n), carry_qv=True
     )
-    a, b = keys.alias("a"), keys.alias("b")
-    on_bucket = (F.col("a.band") == F.col("b.band")) & (
-        F.col("a.bkey") == F.col("b.bkey")
-    )
     return (
-        a.join(b, on_bucket & (F.col("a.vec_id") < F.col("b.vec_id")))
+        _bucket_pairs(keys, F.struct("vec_id", "qv"), ["band", "bkey"], "a", "b")
         .select(
             F.col("a.vec_id").alias("qid"),
             F.col("b.vec_id").alias("nid"),
@@ -1404,7 +1402,7 @@ def _knn_join_topk(quant: DataFrame, n: int) -> DataFrame:
     # branches — the analyzer deduplicates the second subtree's
     # exprIds through the SRP pandas UDF and the canonicalized
     # exchanges stop matching, so without this the ENTIRE signature
-    # + bucket join + distance + distinct pipeline executes twice
+    # + bucket pairing + distance + distinct pipeline executes twice
     # (observed in the r14 sf10 plan: 8 ArrowEvalPython nodes, two
     # identical un-reused BroadcastExchanges, a clean ~2x on the
     # smoke leg). r15 swaps r14's `.persist()` for the checkpoint
@@ -1491,9 +1489,10 @@ def llm_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus scan, candidate pairing never leaves a bucket, and
     band_bits scales with corpus size to hold bucket occupancy (and
     so per-query candidate count) constant; no all-pairs stage
-    exists at any scale (plan-pinned: no cartesian, bucket-keyed
-    equi-join). The row count that sizes the signature geometry is
-    plan metadata: one parquet metadata-only count, no data scan.
+    exists at any scale (plan-pinned: no cartesian, one collect_list
+    aggregate keyed and shuffled on the bucket). The row count that
+    sizes the signature geometry is plan metadata: one parquet
+    metadata-only count, no data scan.
 
     Small-N cost profile (KNN_COST_r15.json, VERDICT r14 #4): the
     r14 PARITY sf0.01 jump (3.2 -> 21.9 s) decomposes into (a) a
@@ -2534,21 +2533,17 @@ def llm_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles carry no discriminating signal and would quadratically
     explode the pair space), and pair documents sharing a rare
     shingle — one shuffle on the shingle key, candidate count
-    bounded by 5·|rare shingles|, NEVER all-pairs. Any duplicate
+    bounded by 10·|rare shingles|, NEVER all-pairs. Any duplicate
     pair sharing ≥1 rare shingle is found; verification recomputes
     exact containment on the full shingle sets (integer set sizes,
     one division — bit-stable across engines)."""
     docs = load_table(spark, sf_dir, "documents")
-    grams, cand = _rare_shingle_block(docs, k=4)
-    a = grams.select(F.col("doc_id").alias("doc_a"), F.col("gset").alias("ga"))
-    b = grams.select(F.col("doc_id").alias("doc_b"), F.col("gset").alias("gb"))
     shared = F.size(F.array_intersect("ga", "gb")).cast("double")
     ca = shared / F.size("ga")
     cb = shared / F.size("gb")
     cont = F.when(ca >= cb, ca).otherwise(cb)
     return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
+        _rare_shingle_block(docs, k=4)
         .select("doc_a", "doc_b", cont.alias("containment"))
         .filter(F.col("containment") >= 0.6)
         .select(
@@ -2737,14 +2732,10 @@ def llm_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     n2 = s2.count()
-    grams, cand = _rare_shingle_block(s2, k=4)
-    a = grams.select(F.col("doc_id").alias("doc_a"), F.col("gset").alias("ga"))
-    b = grams.select(F.col("doc_id").alias("doc_b"), F.col("gset").alias("gb"))
     shared = F.size(F.array_intersect("ga", "gb")).cast("double")
     cont = F.greatest(shared / F.size("ga"), shared / F.size("gb"))
     d3 = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
+        _rare_shingle_block(s2, k=4)
         .filter((F.size("ga") > 0) & (F.size("gb") > 0))
         .filter(cont >= 0.6)
         .select("doc_b")

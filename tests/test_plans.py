@@ -9,6 +9,8 @@ import json
 import os
 import re
 
+import pytest
+
 from infofarmsparkml_spark import registry
 from infofarmsparkml_spark.plans import explain_str, plan_nodes
 
@@ -19,8 +21,6 @@ CONTRACT = os.path.join(
 # filter it infers below the projection, so the Python pass runs
 # twice. D8 empties this set.
 D8_REPEATED_UDFS = {
-    "llm_embedding_neardup",  # _band_keys
-    "llm_diversity_sample",  # _band_keys
     "llm_ivf_pq_topk",  # _enc
     "llm_ivf_pq_trained",  # _enc
 }
@@ -88,12 +88,6 @@ def test_scan_projected_pushdown_and_pruning(spark, sf_dir):
     read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     assert read_schema and "l_comment" not in read_schema[0]
     assert "l_tax" not in read_schema[0], read_schema[0]
-
-
-def test_join_broadcast_is_broadcast(spark, sf_dir):
-    plan, nodes = simple_plan(q("join_broadcast")(spark, sf_dir))
-    assert nodes["BroadcastHashJoin"] == 3, plan[:3000]
-    assert "SortMergeJoin" not in plan
 
 
 def test_join_sortmerge_is_sortmerge(spark, sf_dir):
@@ -715,51 +709,30 @@ def test_checkpointed_ops_do_not_rescan(spark, sf_dir):
 def test_ngram_jaccard_is_rare_shingle_blocked(spark, sf_dir):
     """r5 rewrite: llm_ngram_jaccard dropped its doc_id<40 demo
     bound and now shares `_rare_shingle_block` with containment —
-    the plan must show bucketed equi-joins on the shingle key, never
-    an all-pairs/theta shape, and the checkpointed gram subtree must
-    not re-scan documents."""
+    the plan must pair documents inside rare-shingle buckets
+    (`_bucket_pairs`: one collect_list aggregate keyed on the shingle,
+    no self-join of the exploded shingles), never an all-pairs/theta
+    shape, and the checkpointed gram subtree must not re-scan
+    documents."""
     plan, nodes = simple_plan(q("llm_ngram_jaccard")(spark, sf_dir))
     assert "CartesianProduct" not in plan, plan[:3000]
     assert "BroadcastNestedLoopJoin" not in plan, plan[:3000]
     assert nodes["FileScan"] <= 1, plan[:3000]
-
-
-def test_embedding_neardup_is_band_bucketed(spark, sf_dir):
-    """r5 rewrite: llm_embedding_neardup dropped its vec_id<200
-    all-pairs bound for banded SRP-LSH. Candidate pairs must be
-    formed inside (band, bkey) buckets (`_bucket_pairs`: one
-    collect_list aggregate keyed and shuffled on the bucket key),
-    and the signature pandas UDF must be planned for ONE side only —
-    a self-join on the bucket key plans it on both sides (4
-    ArrowEvalPython nodes instead of 2)."""
-    plan, nodes = simple_plan(q("llm_embedding_neardup")(spark, sf_dir))
-    assert "CartesianProduct" not in plan, plan[:3000]
-    # the 1-row keymax crossJoin may plan as a BroadcastNestedLoopJoin;
-    # anything beyond that one is an all-pairs bug
-    assert nodes["BroadcastNestedLoopJoin"] <= 1, plan[:3000]
-    bucket = r"band#\d+, bkey#\d+L?"
     assert re.search(
-        rf"\w*Aggregate\(keys=\[{bucket}\], "
-        r"functions=\[collect_list\(vec_id",
-        plan,
+        r"\w*Aggregate\(keys=\[g#\d+\], functions=\[collect_list\(doc_id", plan
     ), plan[:3000]
-    assert re.search(rf"Exchange hashpartitioning\({bucket}, \d+\)", plan), (
-        plan[:3000]
-    )
-    # the UDF appears twice for ONE signature pass: Catalyst copies it
-    # into the non-empty filter it infers under the band posexplode
-    assert nodes["ArrowEvalPython"] == 2, plan[:3000]
+    # one exploded side, joined on g only to the rare-shingle set: a
+    # self-join of the exploded shingles would plan a second explode
+    # and a third g-keyed join
+    assert plan.count("Generate explode(gset") == 1, plan[:3000]
+    g_joins = re.findall(r"Join \[g#\d+\], \[g#\d+\]", plan)
+    assert len(g_joins) == 1, plan[:3000]
 
 
-def test_knn_join_is_band_bucketed(spark, sf_dir):
-    """r6 rewrite: llm_knn_join dropped the vec_id<2000 MLlib
-    approxSimilarityJoin kernel for corpus-wide banded SRP-LSH.
-    Candidate pairing must be an equi-join on the (band, bkey)
-    bucket key — no cartesian, no nested-loop anywhere (unlike
-    neardup there is no keymax crossJoin here). r15: the registered
-    operator eagerly checkpoints the verified-pair set (its final
-    plan is an ExistingRDD scan), so the shape is pinned on the lazy
-    pair builder it checkpoints, `_knn_canonical_pairs`."""
+def _knn_pair_builder(spark, sf_dir):
+    """`llm_knn_join`'s lazy pair builder: the registered operator
+    eagerly checkpoints the verified-pair set (its final plan is an
+    ExistingRDD scan), so its shape is pinned on the builder."""
     from infofarmsparkml_spark.operators.llm import (
         _double_vecs,
         _knn_canonical_pairs,
@@ -768,18 +741,45 @@ def test_knn_join_is_band_bucketed(spark, sf_dir):
 
     emb = _double_vecs(spark, sf_dir, "vec_id", "e")
     quant = emb.select("vec_id", _quantize_vec("e").alias("qv"))
-    plan = explain_str(_knn_canonical_pairs(quant, 500), "simple")
+    return _knn_canonical_pairs(quant, 500)
+
+
+@pytest.mark.parametrize(
+    "name, max_bnlj",
+    [
+        # the 1-row keymax crossJoin may plan as a BroadcastNestedLoopJoin;
+        # anything beyond that one is an all-pairs bug
+        ("llm_embedding_neardup", 1),
+        ("llm_knn_join", 0),
+    ],
+    ids=["llm_embedding_neardup", "llm_knn_join"],
+)
+def test_srp_candidates_are_band_bucketed(spark, sf_dir, name, max_bnlj):
+    """r5/r6 rewrites: llm_embedding_neardup and llm_knn_join dropped
+    their id-bounded all-pairs kernels for banded SRP-LSH. Candidate
+    pairs must be formed inside (band, bkey) buckets (`_bucket_pairs`:
+    one collect_list aggregate keyed and shuffled on the bucket key),
+    and the signature pandas UDF must be planned ONCE — a self-join on
+    the bucket key plans it on both sides, and an inner posexplode of
+    the keys lets Catalyst copy it into an inferred non-empty filter
+    (2 nodes per side)."""
+    if name == "llm_knn_join":
+        df = _knn_pair_builder(spark, sf_dir)
+    else:
+        df = q(name)(spark, sf_dir)
+    plan, nodes = simple_plan(df)
     assert "CartesianProduct" not in plan, plan[:3000]
-    assert "BroadcastNestedLoopJoin" not in plan, plan[:3000]
-    join_keys = re.findall(
-        r"(?:BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin) "
-        r"\[([^\]]*)\], \[([^\]]*)\]",
+    assert nodes["BroadcastNestedLoopJoin"] <= max_bnlj, plan[:3000]
+    bucket = r"band#\d+, bkey#\d+L?"
+    assert re.search(
+        rf"\w*Aggregate\(keys=\[{bucket}\], "
+        r"functions=\[collect_list\((?:struct\()?vec_id",
         plan,
+    ), plan[:3000]
+    assert re.search(rf"Exchange hashpartitioning\({bucket}, \d+\)", plan), (
+        plan[:3000]
     )
-    bucket_joins = [
-        (l, r) for l, r in join_keys if "band" in l and "bkey" in l
-    ]
-    assert bucket_joins, join_keys or plan[:3000]
+    assert nodes["ArrowEvalPython"] == 1, plan[:3000]
 
 
 def test_spatial_grid_hot_cell_gets_aqe_skew_split(spark, sf_dir):
